@@ -61,10 +61,9 @@ object SequenceFiles {
                  targetFileBytes: Long = 512L * 1024 * 1024,
                  sortByKey: Boolean = true,
                  writeOptions: Map[String, String] = Map.empty): Map[String, Int] = {
-    import org.apache.hadoop.conf.Configuration
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(new Configuration())
+    val fs = rootPath.getFileSystem(graft.sources.seqfile.SeqFileHadoopConf.of(spark))
     def leaves(p: Path): Seq[Path] = {
       val children = fs.listStatus(p).toSeq
         .filterNot(c => c.getPath.getName.startsWith(".") ||

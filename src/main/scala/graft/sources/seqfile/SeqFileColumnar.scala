@@ -85,83 +85,39 @@ final class SeqFileConstantStringVector(value: UTF8String)
 
 /** Columnar partition reader: one ColumnarBatch per record block (the
   * reference's `Stream (RecordBlock k v)` pull model, batch-at-a-time).
-  * Honors the malformed-record mode like the row reader. */
+  * Honors the malformed-record mode like the row reader (SeqSplitBlocks). */
 class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: StructType,
-                                     required: StructType, mode: String)
+                                     required: StructType, mode: String,
+                                     conf: org.apache.hadoop.conf.Configuration =
+                                       SeqFileHadoopConf.current())
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
-  private val input = new HadoopSeekableInput(
-    new org.apache.hadoop.fs.Path(part.path), new org.apache.hadoop.conf.Configuration())
-  // see SeqFilePartitionReader: header failures yield an empty partition
-  // under PERMISSIVE/DROPMALFORMED; input closed on constructor failure
-  private var planned: Option[ZoneMapPruning.PlannedBlocks] = None
-  private val blocks: SeqStream =
-    try {
-      val header = SeqHeader.parse(new SeqInput(input))
-      SeqFileSchema.validate(tableSchema, header, part.path)
-      val needKey = required.fieldNames.exists(_.equalsIgnoreCase("key"))
-      val needValue = required.fieldNames.exists(_.equalsIgnoreCase("value"))
-      planned = part.fixedOffsets match {
-        // TopN pushdown planned the exact blocks already
-        case Some(offs) =>
-          Some(ZoneMapPruning.PlannedBlocks(offs.toArray, 0L))
-        case None => ZoneMapPruning.plannedOffsets(
-          new org.apache.hadoop.conf.Configuration(),
-          part.path, header, input.length, part.start, part.end, part.keyFilters)
-      }
-      SeqStream.openRange(input, header, part.start, part.end,
-        decodeKey = needKey, decodeValue = needValue,
-        plannedOffsets = planned.map(_.offsets))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        input.close()
-        if (mode == ReadMode.FailFast) throw e
-        SeqFileScan.log.warn(s"seqfile $mode: skipping unreadable file ${part.path}: $e")
-        null
-    }
-
+  private val blocks = new SeqSplitBlocks(part, tableSchema, required, mode, conf)
   private var batch: ColumnarBatch = null
 
   override def next(): Boolean = {
-    if (blocks == null) return false
-    while (true) {
-      try {
-        if (!blocks.hasNext) return false
-        val b = blocks.next()
-        val vectors: Array[ColumnVector] = required.fields.map { f =>
-          if (f.name.equalsIgnoreCase("key"))
-            new SeqFileColumnVector(f.dataType, b.keys.get): ColumnVector
-          else if (f.name.equalsIgnoreCase("value"))
-            new SeqFileColumnVector(f.dataType, b.values.get): ColumnVector
-          else part.partValues.collectFirst {
-            case (k, v) if k.equalsIgnoreCase(f.name) =>
-              new SeqFileConstantStringVector(UTF8String.fromString(v)): ColumnVector
-          }.getOrElse(throw new SeqFileFormatException(
-            s"unknown column '${f.name}' (expect key/value or a partition column)"))
-        }
-        batch = new ColumnarBatch(vectors, b.count)
-        return true
-      } catch {
-        case scala.util.control.NonFatal(e) if mode != ReadMode.FailFast =>
-          SeqFileScan.log.warn(
-            s"seqfile $mode: dropping block in ${part.path}: ${e}")
-          if (mode == ReadMode.Permissive) return false
-          if (!blocks.skipToNextSync()) return false
-      }
+    val b = blocks.next()
+    if (b == null) return false
+    val vectors: Array[ColumnVector] = required.fields.map { f =>
+      if (f.name.equalsIgnoreCase("key"))
+        new SeqFileColumnVector(f.dataType, b.keys.get): ColumnVector
+      else if (f.name.equalsIgnoreCase("value"))
+        new SeqFileColumnVector(f.dataType, b.values.get): ColumnVector
+      else part.partValues.collectFirst {
+        case (k, v) if k.equalsIgnoreCase(f.name) =>
+          new SeqFileConstantStringVector(UTF8String.fromString(v)): ColumnVector
+      }.getOrElse(throw new SeqFileFormatException(
+        s"unknown column '${f.name}' (expect key/value or a partition column)"))
     }
-    false
+    batch = new ColumnarBatch(vectors, b.count)
+    true
   }
 
   override def get(): ColumnarBatch = batch
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    planned match {
-      case Some(p) => Array(
-        SeqZoneTaskMetric("seqfileZoneBlocksSkipped", p.skipped),
-        SeqZoneTaskMetric("seqfileZoneBlocksRead", p.offsets.length.toLong))
-      case None => Array.empty
-    }
+    blocks.metrics
 
-  override def close(): Unit = if (blocks != null) blocks.close()
+  override def close(): Unit = blocks.close()
 }

@@ -84,7 +84,7 @@ object SeqFileCompaction {
               sortByKey: Boolean = true,
               writeOptions: Map[String, String] = Map.empty): Int = {
     require(targetFileBytes >= 1024, "targetFileBytes must be >= 1024")
-    val conf = new Configuration()
+    val conf = SeqFileHadoopConf.of(spark)
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     val metaDir = new Path(root, SeqFileDataSource.MetadataDirName)

@@ -35,7 +35,8 @@ class SeqFileMicroBatchStream(tableSchema: StructType, required: StructType,
                               paths: Seq[String], maxSplitBytes: Long, mode: String,
                               checkpointLocation: String,
                               maxFilesPerTrigger: Option[Int] = None,
-                              maxBytesPerTrigger: Option[Long] = None)
+                              maxBytesPerTrigger: Option[Long] = None,
+                              hadoopConf: Configuration = SeqFileHadoopConf.current())
   extends MicroBatchStream with SupportsAdmissionControl {
 
   override def getDefaultReadLimit: ReadLimit =
@@ -78,11 +79,9 @@ class SeqFileMicroBatchStream(tableSchema: StructType, required: StructType,
     * behind a rate-limited query is running. */
   override def reportLatestOffset(): Offset = synchronized(SeqFileOffset(log.size))
 
-  private def discover(): Seq[(String, Long, Long)] = {
-    val conf = new Configuration()
-    SeqFileDataSource.listFiles(paths, conf)
+  private def discover(): Seq[(String, Long, Long)] =
+    SeqFileDataSource.listFiles(paths, hadoopConf)
       .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-  }
 
   // Monotonic log of (path, length); guarded by this. Mirrored to the
   // checkpoint after every append.
@@ -93,7 +92,7 @@ class SeqFileMicroBatchStream(tableSchema: StructType, required: StructType,
 
   locally { // restore the persisted log on (re)start
     try {
-      val fs = logPath.getFileSystem(new Configuration())
+      val fs = logPath.getFileSystem(hadoopConf)
       if (fs.exists(logPath)) {
         val in = fs.open(logPath)
         val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -115,8 +114,7 @@ class SeqFileMicroBatchStream(tableSchema: StructType, required: StructType,
   // exists only in this JVM — a restart would rebuild ordering from
   // (modTime, path) and could silently duplicate or drop data.
   private def persistLog(): Unit = {
-    val conf = new Configuration()
-    val fs = logPath.getFileSystem(conf)
+    val fs = logPath.getFileSystem(hadoopConf)
     fs.mkdirs(logPath.getParent)
     val tmp = new Path(logPath.getParent, logPath.getName + ".tmp")
     val out = fs.create(tmp, true)
@@ -124,7 +122,7 @@ class SeqFileMicroBatchStream(tableSchema: StructType, required: StructType,
     finally out.close()
     // Atomic replace: a delete-then-rename pair would lose the log entirely
     // if the process died between the two calls.
-    org.apache.hadoop.fs.FileContext.getFileContext(logPath.toUri, conf)
+    org.apache.hadoop.fs.FileContext.getFileContext(logPath.toUri, hadoopConf)
       .rename(tmp, logPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
@@ -187,7 +185,8 @@ class SeqFileMicroBatchStream(tableSchema: StructType, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SeqFileReaderFactory(tableSchema, required, mode)
+    new SeqFileReaderFactory(tableSchema, required, mode,
+      SeqFileHadoopConf.broadcast(hadoopConf))
 
   override def commit(end: Offset): Unit = ()
 

@@ -2,12 +2,14 @@ package graft.sources.seqfile
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.seqfile._
 
@@ -19,7 +21,8 @@ import graft.core.seqfile._
   * files at planning time (the "free from Spark's file index" assumption in
   * SURVEY §4 does NOT hold for a custom DSv2 connector; this supplies it). */
 class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
-                         options: CaseInsensitiveStringMap)
+                         options: CaseInsensitiveStringMap,
+                         hadoopConf: Configuration = SeqFileHadoopConf.current())
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with SupportsPushDownFilters
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -69,8 +72,7 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     SeqFileTopNPushdown.orderFor(orders) match {
       case Some(key) if tableSchema.fields.exists(f =>
           f.name.equalsIgnoreCase(key.col) && f.dataType != NullType) =>
-        SeqFileTopNPushdown.planFiles(paths, key, limit,
-            new Configuration()) match {
+        SeqFileTopNPushdown.planFiles(paths, key, limit, hadoopConf) match {
           case Some(plan) =>
             topNPlan = Some(plan)
             SeqFileTopNPushdown.pushes.increment()
@@ -97,8 +99,7 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     SeqFileAggPushdown.specsFor(agg, tableSchema) match {
       case Some(specs) if specs.nonEmpty =>
         val out = SeqFileAggPushdown.schemaFor(specs, tableSchema)
-        SeqFileAggPushdown.partialRow(paths, specs, tableSchema,
-            new org.apache.hadoop.conf.Configuration()) match {
+        SeqFileAggPushdown.partialRow(paths, specs, tableSchema, hadoopConf) match {
           case Some(row) =>
             aggScan = Some(new SeqFileAggScan(out, row,
               s"seqfile agg-pushdown paths=${paths.mkString(",")} " +
@@ -119,7 +120,8 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
       keyFilters = keyFilters,
       topNPlan = topNPlan,
       maxFilesPerTrigger = Option(options.get("maxFilesPerTrigger")).map(_.toInt),
-      maxBytesPerTrigger = Option(options.get("maxBytesPerTrigger")).map(_.toLong)))
+      maxBytesPerTrigger = Option(options.get("maxBytesPerTrigger")).map(_.toLong),
+      hadoopConf = hadoopConf))
 }
 
 /** Evaluate pushed filters against a file's partition values. Only shapes
@@ -165,7 +167,9 @@ object PartitionFilters {
   * semantics, where a fold over the stream silently stops at the `Error`
   * cons cell (reference: SequenceFile.hs:74-76 — `foldMap` drops the error
   * tail); DROPMALFORMED goes beyond the reference: skip the corrupt block,
-  * rescan for the next sync marker, and continue. */
+  * rescan for the next sync marker, and continue. Unlike the reference, both
+  * count what they drop, as the scan metrics `seqfileMalformedBlocksDropped`
+  * and `seqfileUnreadableFilesSkipped` (SeqScanMetrics). */
 object ReadMode {
   val FailFast = "FAILFAST"
   val Permissive = "PERMISSIVE"
@@ -188,7 +192,8 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
                   keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
                   topNPlan: Option[Seq[(SeqFileDataSource.PartitionedFile, Seq[Long])]] = None,
                   maxFilesPerTrigger: Option[Int] = None,
-                  maxBytesPerTrigger: Option[Long] = None)
+                  maxBytesPerTrigger: Option[Long] = None,
+                  hadoopConf: Configuration)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeFiltering
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -255,7 +260,7 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     // partition-filter-aware: a scan of one partition out of hundreds
     // reports that partition's bytes, keeping it broadcast-eligible
     private val diskBytes =
-      try SeqFileDataSource.listPartitionedFiles(paths, new Configuration())
+      try SeqFileDataSource.listPartitionedFiles(paths, hadoopConf)
         .filter { pf =>
           val vals = pf.partitionValues.map { case (k, v) => k.toLowerCase -> v }.toMap
           partitionFilters.forall(PartitionFilters.eval(_, vals))
@@ -281,7 +286,7 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SeqFileMicroBatchStream(tableSchema, required, paths, maxSplitBytes, mode,
-      checkpointLocation, maxFilesPerTrigger, maxBytesPerTrigger)
+      checkpointLocation, maxFilesPerTrigger, maxBytesPerTrigger, hadoopConf)
 
   /** One partition per `maxSplitBytes` byte range per file; ranges align
     * themselves to record-block boundaries at read time by scanning for the
@@ -300,8 +305,7 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
         }.toArray
       case None => ()
     }
-    val conf = new Configuration()
-    val files = SeqFileDataSource.listPartitionedFiles(paths, conf)
+    val files = SeqFileDataSource.listPartitionedFiles(paths, hadoopConf)
       .filter { pf =>
         val vals = pf.partitionValues.map { case (k, v) => k.toLowerCase -> v }.toMap
         partitionFilters.forall(PartitionFilters.eval(_, vals)) &&
@@ -319,11 +323,12 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SeqFileReaderFactory(tableSchema, required, mode)
+    new SeqFileReaderFactory(tableSchema, required, mode,
+      SeqFileHadoopConf.broadcast(hadoopConf))
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new SeqZoneBlocksSkippedMetric, new SeqZoneBlocksReadMetric)
+    SeqScanMetrics.supported
 }
 
 case class SeqFilePartition(path: String, start: Long, end: Long,
@@ -338,12 +343,14 @@ case class SeqFilePartition(path: String, start: Long, end: Long,
       partValues.map(v => UTF8String.fromString(v._2): Any).toArray)
 }
 
+/** Ships to executors with the query's Hadoop conf as one broadcast, so no
+  * task builds its own (see SeqFileHadoopConf). */
 class SeqFileReaderFactory(tableSchema: StructType, required: StructType,
-                           mode: String)
+                           mode: String, conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new SeqFilePartitionReader(partition.asInstanceOf[SeqFilePartition], tableSchema,
-      required, mode)
+      required, mode, conf.value.value)
 
   /** Columnar read path: one ColumnarBatch per record block with zero-copy
     * vectors (the reference's columnar RecordBlock model) — Spark's
@@ -356,18 +363,24 @@ class SeqFileReaderFactory(tableSchema: StructType, required: StructType,
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new SeqFileColumnarPartitionReader(partition.asInstanceOf[SeqFilePartition],
-      tableSchema, required, mode)
+      tableSchema, required, mode, conf.value.value)
 }
 
-/** Executor-side reader: parse this file's header (one small read), validate
-  * it against the query schema (reference: Parser.hs:84-91 fail-fast), then
-  * stream record blocks in the split's byte range and emit rows. */
-class SeqFilePartitionReader(part: SeqFilePartition, tableSchema: StructType,
-                             required: StructType, mode: String = ReadMode.FailFast)
-  extends PartitionReader[InternalRow] {
+/** One split's decodable blocks, shared by the row and columnar readers:
+  * parse the file's header (one small read), validate it against the query
+  * schema (reference: Parser.hs:84-91 fail-fast), plan the blocks the zone
+  * map and Bloom keep, then hand out blocks in the split's byte range under
+  * the malformed-record mode (see ReadMode), counting what PERMISSIVE and
+  * DROPMALFORMED drop. */
+private[seqfile] final class SeqSplitBlocks(part: SeqFilePartition,
+                                            tableSchema: StructType,
+                                            required: StructType, mode: String,
+                                            conf: Configuration) {
 
-  private val input = new HadoopSeekableInput(new Path(part.path), new Configuration())
+  private val input = new HadoopSeekableInput(new Path(part.path), conf)
   private var planned: Option[ZoneMapPruning.PlannedBlocks] = None
+  private var malformedBlocks = 0L
+  private var unreadableFiles = 0L
   // Header parse + FULL-schema validation (the reference fails the whole
   // stream on a type mismatch even if the consumer never touches the
   // column, reference: Parser.hs:84-91; a bare count() prunes everything).
@@ -384,7 +397,7 @@ class SeqFilePartitionReader(part: SeqFilePartition, tableSchema: StructType,
         // TopN pushdown planned the exact blocks already
         case Some(offs) =>
           Some(ZoneMapPruning.PlannedBlocks(offs.toArray, 0L))
-        case None => ZoneMapPruning.plannedOffsets(new Configuration(),
+        case None => ZoneMapPruning.plannedOffsets(conf,
           part.path, header, input.length, part.start, part.end, part.keyFilters)
       }
       SeqStream.openRange(input, header, part.start, part.end,
@@ -395,8 +408,45 @@ class SeqFilePartitionReader(part: SeqFilePartition, tableSchema: StructType,
         input.close()
         if (mode == ReadMode.FailFast) throw e
         SeqFileScan.log.warn(s"seqfile $mode: skipping unreadable file ${part.path}: $e")
+        unreadableFiles = 1
         null // exhausted reader
     }
+  private var done = blocks == null
+
+  /** The next decodable block, or null at the end of the split. Corrupt
+    * bytes can surface as runtime exceptions beyond IOException
+    * (index/negative-size errors in the decoders), so the recovery path
+    * catches all non-fatal throwables. PERMISSIVE stops at the first bad
+    * block (the reference's error tail); DROPMALFORMED skips it. */
+  def next(): DecodedBlock = {
+    while (!done) {
+      try {
+        if (blocks.hasNext) return blocks.next()
+        done = true
+      } catch {
+        case scala.util.control.NonFatal(e) if mode != ReadMode.FailFast =>
+          SeqFileScan.log.warn(
+            s"seqfile $mode: dropping block in ${part.path}: ${e}")
+          malformedBlocks += 1
+          done = mode == ReadMode.Permissive || !blocks.skipToNextSync()
+      }
+    }
+    null
+  }
+
+  def metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    SeqScanMetrics.taskValues(planned, malformedBlocks, unreadableFiles)
+
+  def close(): Unit = if (blocks != null) blocks.close()
+}
+
+/** Executor-side row reader: streams the split's blocks (SeqSplitBlocks)
+  * and emits rows. */
+class SeqFilePartitionReader(part: SeqFilePartition, tableSchema: StructType,
+                             required: StructType, mode: String, conf: Configuration)
+  extends PartitionReader[InternalRow] {
+
+  private val blocks = new SeqSplitBlocks(part, tableSchema, required, mode, conf)
 
   private var block: DecodedBlock = null
   private var rowIdx = 0
@@ -445,7 +495,8 @@ class SeqFilePartitionReader(part: SeqFilePartition, tableSchema: StructType,
 
   override def next(): Boolean = {
     while (block == null || rowIdx >= block.count) {
-      if (!nextBlock()) return false
+      block = blocks.next()
+      if (block == null) return false
       rowIdx = 0
     }
     var f = 0
@@ -457,38 +508,11 @@ class SeqFilePartitionReader(part: SeqFilePartition, tableSchema: StructType,
     true
   }
 
-  /** Advance to the next decodable block honoring the malformed-record
-    * mode (see ReadMode). Corrupt bytes can surface as runtime exceptions
-    * beyond IOException (index/negative-size errors in the decoders), so the
-    * recovery path catches all non-fatal throwables. */
-  private def nextBlock(): Boolean = {
-    if (blocks == null) return false
-    while (true) {
-      try {
-        if (!blocks.hasNext) return false
-        block = blocks.next()
-        return true
-      } catch {
-        case scala.util.control.NonFatal(e) if mode != ReadMode.FailFast =>
-          SeqFileScan.log.warn(
-            s"seqfile $mode: dropping block in ${part.path}: ${e}")
-          if (mode == ReadMode.Permissive) return false // stop at error tail
-          if (!blocks.skipToNextSync()) return false    // DROPMALFORMED
-      }
-    }
-    false
-  }
-
   override def get(): InternalRow = row
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    planned match {
-      case Some(p) => Array(
-        SeqZoneTaskMetric("seqfileZoneBlocksSkipped", p.skipped),
-        SeqZoneTaskMetric("seqfileZoneBlocksRead", p.offsets.length.toLong))
-      case None => Array.empty
-    }
+    blocks.metrics
 
-  override def close(): Unit = if (blocks != null) blocks.close()
+  override def close(): Unit = blocks.close()
 }

@@ -4,7 +4,7 @@ import java.util.{Set => JSet}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
@@ -13,9 +13,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** One logical seqfile table = a set of files/directories sharing a (key,
   * value) schema. Header metadata of the first file is surfaced as table
-  * properties (the reference's `hdMetadata`, reference: Types.hs:22). */
+  * properties (the reference's `hdMetadata`, reference: Types.hs:22).
+  * Every scan and write of the table takes its Hadoop configuration from
+  * `spark` (see SeqFileHadoopConf). */
 class SeqFileTable(tableSchema: StructType, paths: Seq[String],
-                   tablePartitioning: Array[org.apache.spark.sql.connector.expressions.Transform] = Array.empty)
+                   tablePartitioning: Array[org.apache.spark.sql.connector.expressions.Transform] = Array.empty,
+                   spark: SparkSession)
   extends Table with SupportsRead with SupportsWrite {
 
   override def name(): String = s"seqfile(${paths.mkString(",")})"
@@ -33,15 +36,16 @@ class SeqFileTable(tableSchema: StructType, paths: Seq[String],
   override def properties(): java.util.Map[String, String] = {
     // Best-effort: expose first file's header metadata
     try {
-      val files = SeqFileDataSource.listFiles(paths, new Configuration())
+      val conf = SeqFileHadoopConf.of(spark)
+      val files = SeqFileDataSource.listFiles(paths, conf)
       if (files.isEmpty) java.util.Collections.emptyMap()
-      else SeqFileDataSource.readHeader(files.head.getPath, new Configuration())
+      else SeqFileDataSource.readHeader(files.head.getPath, conf)
         .metadata.toMap.asJava
     } catch { case _: Exception => java.util.Collections.emptyMap() }
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SeqFileScanBuilder(tableSchema, paths, options)
+    new SeqFileScanBuilder(tableSchema, paths, options, SeqFileHadoopConf.of(spark))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     // partition columns come from the table's own transforms (identity
@@ -54,6 +58,7 @@ class SeqFileTable(tableSchema: StructType, paths: Seq[String],
         s"seqfile write supports only identity partition transforms, got $t")
       refs(0).fieldNames()(0)
     }
-    new SeqFileWriteBuilder(info.schema(), paths, info.options(), partCols)
+    new SeqFileWriteBuilder(info.schema(), paths, info.options(), partCols,
+      SeqFileHadoopConf.of(spark))
   }
 }

@@ -4,11 +4,13 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.seqfile._
 
@@ -20,7 +22,8 @@ import graft.core.seqfile._
   * stores it's copy+delete, acceptable for part files. */
 class SeqFileWriteBuilder(schema: StructType, paths: Seq[String],
                           options: CaseInsensitiveStringMap,
-                          partitionCols: Seq[String] = Nil)
+                          partitionCols: Seq[String] = Nil,
+                          hadoopConf: Configuration)
   extends WriteBuilder with SupportsTruncate {
 
   private var truncateFirst = false
@@ -90,7 +93,7 @@ class SeqFileWriteBuilder(schema: StructType, paths: Seq[String],
     override def toBatch: BatchWrite = {
       val (path, blockSize, metadata, layout) = validated(partitionCols)
       new SeqFileBatchWrite(schema, path, truncateFirst, blockSize, metadata,
-        layout, partitionCols)
+        layout, partitionCols, hadoopConf)
     }
     override def toStreaming: StreamingWrite = {
       // Spark's DSv2 streaming path silently DROPS writeStream.partitionBy
@@ -117,7 +120,7 @@ class SeqFileWriteBuilder(schema: StructType, paths: Seq[String],
         """partition columns with .option("partitionBy", "col1,col2") instead.""")
       val (path, blockSize, metadata, layout) = validated(streamParts)
       new SeqFileStreamingWrite(schema, path, blockSize, metadata, layout,
-        streamParts)
+        streamParts, hadoopConf)
     }
   }
 }
@@ -163,13 +166,13 @@ object SeqWriteLayout {
 class SeqFileStreamingWrite(schema: StructType, path: String, blockSize: Int,
                             metadata: Seq[(String, String)],
                             layout: SeqWriteLayout = SeqWriteLayout.Default,
-                            partitionCols: Seq[String] = Nil)
+                            partitionCols: Seq[String] = Nil,
+                            hadoopConf: Configuration = SeqFileHadoopConf.current())
   extends StreamingWrite {
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = dir.getFileSystem(hadoopConf)
     fs.mkdirs(dir)
     // Flat sink: make the directory manifest-governed from the start, so a
     // reader never observes first-epoch files between task rename and epoch
@@ -178,13 +181,12 @@ class SeqFileStreamingWrite(schema: StructType, path: String, blockSize: Int,
     if (partitionCols.isEmpty)
       fs.mkdirs(new Path(dir, SeqFileDataSource.MetadataDirName))
     new SeqFileStreamingWriterFactory(schema, path, blockSize, metadata, layout,
-      partitionCols)
+      partitionCols, SeqFileHadoopConf.broadcast(hadoopConf))
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(hadoopConf)
     // qualify both sides: message paths may be schemeless while globStatus
     // returns fully-qualified URIs
     val committed = messages.flatMap {
@@ -203,10 +205,10 @@ class SeqFileStreamingWrite(schema: StructType, path: String, blockSize: Int,
         Map(fs.makeQualified(root) -> committed.toSeq)
       else committed.toSeq.groupBy(_.getParent)
     byDir.foreach { case (dir, files) =>
-      commitDir(fs, conf, epochId, dir, files.map(_.toString).toSet) }
+      commitDir(fs, epochId, dir, files.map(_.toString).toSet) }
   }
 
-  private def commitDir(fs: org.apache.hadoop.fs.FileSystem, conf: Configuration,
+  private def commitDir(fs: org.apache.hadoop.fs.FileSystem,
                         epochId: Long, dir: Path, committed: Set[String]): Unit = {
     val stale = fs.globStatus(new Path(dir, f"part-e$epochId%05d-p*.seq"))
     if (stale != null) stale.foreach { st =>
@@ -230,58 +232,57 @@ class SeqFileStreamingWrite(schema: StructType, path: String, blockSize: Int,
     try committed.map(new Path(_).getName).toSeq.sorted
       .foreach(n => out.write((n + "\n").getBytes("UTF-8")))
     finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(finalMeta.toUri, conf)
+    org.apache.hadoop.fs.FileContext.getFileContext(finalMeta.toUri, hadoopConf)
       .rename(tmpMeta, finalMeta, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
-    messages.flatMap {
-      case m: SeqFileCommitMessage => Seq(m.path)
-      case m: SeqFilePartitionedCommitMessage => m.paths
-      case _ => Nil
-    }.foreach { s =>
-      val p = new Path(s)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    SeqFileBatchWrite.deleteCommitted(messages, hadoopConf)
 }
 
 class SeqFileStreamingWriterFactory(schema: StructType, dir: String, blockSize: Int,
                                     metadata: Seq[(String, String)],
                                     layout: SeqWriteLayout = SeqWriteLayout.Default,
-                                    partitionCols: Seq[String] = Nil)
+                                    partitionCols: Seq[String] = Nil,
+                                    conf: Broadcast[SerializableConfiguration])
   extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     if (partitionCols.isEmpty)
       new SeqFileDataWriter(schema, dir, partitionId, taskId, blockSize, metadata,
-        epoch = Some(epochId), layout = layout)
+        epoch = Some(epochId), layout = layout, conf = conf.value.value)
     else
       new SeqFilePartitionedDataWriter(schema, dir, partitionId, taskId,
-        blockSize, metadata, layout, partitionCols, epoch = Some(epochId))
+        blockSize, metadata, layout, partitionCols, conf.value.value,
+        epoch = Some(epochId))
 }
 
 class SeqFileBatchWrite(schema: StructType, path: String, truncateFirst: Boolean,
                         blockSize: Int = 1 << 20,
                         metadata: Seq[(String, String)] = Nil,
                         layout: SeqWriteLayout = SeqWriteLayout.Default,
-                        partitionCols: Seq[String] = Nil)
+                        partitionCols: Seq[String] = Nil,
+                        hadoopConf: Configuration)
   extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
+    val fs = dir.getFileSystem(hadoopConf)
     if (truncateFirst && fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
-    new SeqFileWriterFactory(schema, path, blockSize, metadata, layout, partitionCols)
+    new SeqFileWriterFactory(schema, path, blockSize, metadata, layout, partitionCols,
+      SeqFileHadoopConf.broadcast(hadoopConf))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SeqFileBatchWrite.deleteCommitted(messages, hadoopConf)
+}
+
+object SeqFileBatchWrite {
+  /** Abort: delete every file the tasks committed. */
+  private[seqfile] def deleteCommitted(messages: Array[WriterCommitMessage],
+                                       conf: Configuration): Unit =
     messages.flatMap {
       case m: SeqFileCommitMessage => Seq(m.path)
       case m: SeqFilePartitionedCommitMessage => m.paths
@@ -291,7 +292,6 @@ class SeqFileBatchWrite(schema: StructType, path: String, truncateFirst: Boolean
       val fs = p.getFileSystem(conf)
       if (fs.exists(p)) fs.delete(p, false)
     }
-  }
 }
 
 case class SeqFileCommitMessage(path: String) extends WriterCommitMessage
@@ -300,15 +300,16 @@ case class SeqFilePartitionedCommitMessage(paths: Seq[String]) extends WriterCom
 class SeqFileWriterFactory(schema: StructType, dir: String, blockSize: Int,
                            metadata: Seq[(String, String)],
                            layout: SeqWriteLayout = SeqWriteLayout.Default,
-                           partitionCols: Seq[String] = Nil)
+                           partitionCols: Seq[String] = Nil,
+                           conf: Broadcast[SerializableConfiguration])
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     if (partitionCols.isEmpty)
       new SeqFileDataWriter(schema, dir, partitionId, taskId, blockSize, metadata,
-        layout = layout)
+        layout = layout, conf = conf.value.value)
     else
       new SeqFilePartitionedDataWriter(schema, dir, partitionId, taskId,
-        blockSize, metadata, layout, partitionCols)
+        blockSize, metadata, layout, partitionCols, conf.value.value)
 }
 
 /** Hive-style dynamic-partition writer: routes each row to a `k=v/...`
@@ -325,6 +326,7 @@ class SeqFilePartitionedDataWriter(schema: StructType, rootDir: String,
                                    blockSize: Int, metadata: Seq[(String, String)],
                                    layout: SeqWriteLayout,
                                    partitionCols: Seq[String],
+                                   conf: Configuration,
                                    epoch: Option[Long] = None)
   extends DataWriter[InternalRow] {
 
@@ -362,7 +364,7 @@ class SeqFilePartitionedDataWriter(schema: StructType, rootDir: String,
     }.mkString("/")
     val w = writers.getOrElseUpdate(rel, {
       new SeqFileDataWriter(dataSchema, s"$rootDir/$rel", partitionId, taskId,
-        blockSize, metadata, epoch = epoch, layout = layout)
+        blockSize, metadata, epoch = epoch, layout = layout, conf = conf)
     })
     proj.update(0, row.get(dataOrdinals(0), schema.fields(dataOrdinals(0)).dataType))
     proj.update(1, row.get(dataOrdinals(1), schema.fields(dataOrdinals(1)).dataType))
@@ -382,7 +384,6 @@ class SeqFilePartitionedDataWriter(schema: StructType, rootDir: String,
       SeqFilePartitionedCommitMessage(committed.toSeq)
     } catch {
       case e: Throwable =>
-        val conf = new Configuration()
         committed.foreach { s =>
           val p = new Path(s)
           val fs = p.getFileSystem(conf)
@@ -402,12 +403,12 @@ class SeqFileDataWriter(schema: StructType, dir: String, partitionId: Int, taskI
                         blockSize: Int = 1 << 20,
                         metadata: Seq[(String, String)] = Nil,
                         epoch: Option[Long] = None,
-                        layout: SeqWriteLayout = SeqWriteLayout.Default)
+                        layout: SeqWriteLayout = SeqWriteLayout.Default,
+                        conf: Configuration)
   extends DataWriter[InternalRow] {
 
   private val keyType = SeqFileSchema.writableFor(schema(0).dataType)
   private val valueType = SeqFileSchema.writableFor(schema(1).dataType)
-  private val conf = new Configuration()
   // Streaming writers (epoch defined) use a DETERMINISTIC name so epoch
   // replays are idempotent; batch writers get a per-attempt unique name.
   private val finalPath = epoch match {

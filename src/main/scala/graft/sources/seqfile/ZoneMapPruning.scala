@@ -147,20 +147,56 @@ object ZoneMapPruning {
   }
 }
 
-/** DSv2 custom metrics: per-query zone-map effectiveness in the Spark UI. */
+/** DSv2 custom metrics of the seqfile scan, summed over tasks (Spark UI,
+  * `executedPlan` metrics): zone-map effectiveness, and what PERMISSIVE and
+  * DROPMALFORMED dropped instead of failing the query. Spark instantiates
+  * each metric class by name, so every one is its own no-argument class. */
+object SeqScanMetrics {
+  val ZoneBlocksSkipped = "seqfileZoneBlocksSkipped"
+  val ZoneBlocksRead = "seqfileZoneBlocksRead"
+  val MalformedBlocksDropped = "seqfileMalformedBlocksDropped"
+  val UnreadableFilesSkipped = "seqfileUnreadableFilesSkipped"
+
+  def supported: Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new SeqZoneBlocksSkippedMetric, new SeqZoneBlocksReadMetric,
+      new SeqMalformedBlocksDroppedMetric, new SeqUnreadableFilesSkippedMetric)
+
+  /** One split's values; the zone-map pair only when pruning was planned. */
+  def taskValues(planned: Option[ZoneMapPruning.PlannedBlocks], malformedBlocks: Long,
+                 unreadableFiles: Long)
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    (planned.toSeq.flatMap(p => Seq(
+      SeqScanTaskMetric(ZoneBlocksSkipped, p.skipped),
+      SeqScanTaskMetric(ZoneBlocksRead, p.offsets.length.toLong))) ++ Seq(
+      SeqScanTaskMetric(MalformedBlocksDropped, malformedBlocks),
+      SeqScanTaskMetric(UnreadableFilesSkipped, unreadableFiles))).toArray
+}
+
 class SeqZoneBlocksSkippedMetric
   extends org.apache.spark.sql.connector.metric.CustomSumMetric {
-  override def name(): String = "seqfileZoneBlocksSkipped"
+  override def name(): String = SeqScanMetrics.ZoneBlocksSkipped
   override def description(): String = "seqfile blocks skipped by zone map"
 }
 
 class SeqZoneBlocksReadMetric
   extends org.apache.spark.sql.connector.metric.CustomSumMetric {
-  override def name(): String = "seqfileZoneBlocksRead"
+  override def name(): String = SeqScanMetrics.ZoneBlocksRead
   override def description(): String = "seqfile blocks read after zone pruning"
 }
 
-case class SeqZoneTaskMetric(metricName: String, v: Long)
+class SeqMalformedBlocksDroppedMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = SeqScanMetrics.MalformedBlocksDropped
+  override def description(): String = "seqfile malformed blocks dropped"
+}
+
+class SeqUnreadableFilesSkippedMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = SeqScanMetrics.UnreadableFilesSkipped
+  override def description(): String = "seqfile unreadable files skipped"
+}
+
+case class SeqScanTaskMetric(metricName: String, v: Long)
   extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
   override def name(): String = metricName
   override def value(): Long = v

@@ -7,15 +7,18 @@ import org.apache.hadoop.io.{IntWritable, SequenceFile, Text}
 import graft.core.seqfile._
 
 /** Single-node decode throughput: our core reader vs Hadoop's own
-  * `SequenceFile.Reader` on the reference's golden fixture — the concrete
+  * `SequenceFile.Reader` on the Hadoop-written golden fixtures — the concrete
   * form of the "match or beat the reference's single-node throughput"
   * target (the reference itself is an unbuildable 2014 Haskell lib; real
   * Hadoop is the strongest available stand-in, and is also what the
   * reference measured itself against in spirit: both decode the same
   * BLOCK+Snappy framing).
   *
-  * Run: `sbt "runMain graft.tools.DecodeBench"` — prints one JSON line.
-  * No SparkSession: this measures the pure-JVM codec (`core.seqfile`).
+  * Run from the repository root: `sbt "runMain graft.tools.DecodeBench"`
+  * reads the committed golden fixtures under `src/test/resources/golden`
+  * (see `GoldenFixtures` in the tests); an argument names another fixture
+  * directory. Prints one JSON line per fixture. No SparkSession: this
+  * measures the pure-JVM codec (`core.seqfile`).
   */
 object DecodeBench {
 
@@ -31,8 +34,9 @@ object DecodeBench {
   }
 
   def main(args: Array[String]): Unit = {
-    runOne("/root/reference/tests/text-int.seq") // variable-width (Text/Int)
-    runLongDouble("/root/reference/tests/long-double.seq") // fixed-width path
+    val dir = args.headOption.getOrElse("src/test/resources/golden")
+    runOne(s"$dir/text-int.seq") // variable-width (Text/Int)
+    runLongDouble(s"$dir/long-double.seq") // fixed-width path
   }
 
   private def reps: Int = sys.env.getOrElse("SPARK_GRAFT_DECODE_REPS", "15").toInt

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * assertions. */
 class SeqFileGoldenSpec extends AnyFunSuite {
 
-  val textInt = "/root/reference/tests/text-int.seq"
-  val longDouble = "/root/reference/tests/long-double.seq"
+  val textInt = GoldenFixtures.textInt
+  val longDouble = GoldenFixtures.longDouble
 
   test("text-int.seq header: classes, codec, sync") {
     val h = SeqFile.readHeader(textInt)
@@ -75,6 +75,51 @@ class SeqFileGoldenSpec extends AnyFunSuite {
     } finally r.close()
     assert(blocks === 2)
     assert(n > 0)
+  }
+
+  /** Hadoop closes a block once its key + value buffers reach
+    * `HadoopBlockBytes`; every record of a fixture serializes to the same
+    * size, so the block sizes follow from the generator's input alone. */
+  private def hadoopBlockCounts(recordBytes: Int): List[Int] = {
+    val perBlock = (GoldenFixtures.HadoopBlockBytes + recordBytes - 1) / recordBytes
+    val full = GoldenFixtures.Records / perBlock
+    List.fill(full)(perBlock) ++
+      List(GoldenFixtures.Records - full * perBlock).filter(_ > 0)
+  }
+
+  test("text-int.seq holds exactly the generator's records in Hadoop's blocks") {
+    val r = SeqFile.open(textInt)
+    val counts = List.newBuilder[Int]
+    val keys = Array.newBuilder[String]
+    val values = Array.newBuilder[Int]
+    try for (b <- r) {
+      counts += b.count
+      val kc = b.keys.get.asInstanceOf[BinaryColumn]
+      val vc = b.values.get.asInstanceOf[IntColumn]
+      (0 until b.count).foreach { i => keys += kc.sliceString(i); values += vc.values(i) }
+    } finally r.close()
+    // Text key = 1-byte length + 8 chars; IntWritable = 4 bytes
+    assert(counts.result() === hadoopBlockCounts(1 + 8 + 4))
+    assert(counts.result() === List(76924, 23076))
+    assert(keys.result().toSeq ===
+      (0 until GoldenFixtures.Records).map(GoldenFixtures.textIntKey))
+    assert(values.result().toSeq === GoldenFixtures.textIntValues.toSeq)
+  }
+
+  test("long-double.seq holds exactly the generator's records in Hadoop's blocks") {
+    val r = SeqFile.open(longDouble)
+    val counts = List.newBuilder[Int]
+    val keys = Array.newBuilder[Long]
+    val values = Array.newBuilder[Double]
+    try for (b <- r) {
+      counts += b.count
+      keys ++= b.keys.get.asInstanceOf[LongColumn].values.take(b.count)
+      values ++= b.values.get.asInstanceOf[DoubleColumn].values.take(b.count)
+    } finally r.close()
+    assert(counts.result() === hadoopBlockCounts(8 + 8))
+    assert(counts.result() === List(62500, 37500))
+    assert(keys.result().toSeq === (0L until GoldenFixtures.Records.toLong))
+    assert(values.result().toSeq === GoldenFixtures.longDoubleValues.toSeq)
   }
 
   test("column pruning decodes only the requested side") {

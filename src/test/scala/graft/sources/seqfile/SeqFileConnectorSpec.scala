@@ -17,8 +17,8 @@ class SeqFileConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  val textInt = "/root/reference/tests/text-int.seq"
-  val longDouble = "/root/reference/tests/long-double.seq"
+  val textInt = graft.core.seqfile.GoldenFixtures.textInt
+  val longDouble = graft.core.seqfile.GoldenFixtures.longDouble
 
   test("write options compression/codec produce the requested layout and " +
        "round-trip through the connector") {
@@ -91,6 +91,17 @@ class SeqFileConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getString(1) === "F0099999")
     assert(r.getInt(2) >= 0 && r.getInt(3) <= 100)
     assert(math.abs(r.getDouble(4) - 50.0) < 2.0) // uniform-ish 0..100
+  }
+
+  test("golden fixtures read through the connector as exactly the generator's records") {
+    import graft.core.seqfile.GoldenFixtures
+    val ti = spark.read.format("seqfile").load(textInt).orderBy("key").collect()
+    assert(ti.map(_.getString(0)).toSeq ===
+      (0 until GoldenFixtures.Records).map(GoldenFixtures.textIntKey))
+    assert(ti.map(_.getInt(1)).toSeq === GoldenFixtures.textIntValues.toSeq)
+    val ld = spark.read.format("seqfile").load(longDouble).orderBy("key").collect()
+    assert(ld.map(_.getLong(0)).toSeq === (0L until GoldenFixtures.Records.toLong))
+    assert(ld.map(_.getDouble(1)).toSeq === GoldenFixtures.longDoubleValues.toSeq)
   }
 
   test("long-double fixture reads as (long, double)") {
