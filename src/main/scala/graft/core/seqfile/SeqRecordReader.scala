@@ -37,7 +37,7 @@ object SeqStream {
   *
   * Records are batched into the same columnar `DecodedBlock` the
   * block-compressed reader emits (~`targetBatch` records per batch), so
-  * every consumer — row reader, columnar reader, pruned count — is layout
+  * every consumer — the columnar reader, a pruned count — is layout
   * agnostic. Column pruning skips the pruned column's bytes entirely (and
   * under RECORD compression skips its decompression).
   *

@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.seqfile.{SeqCompression, ZoneKey, ZoneMap}
+import graft.core.seqfile.ZoneKey
 
 /** MIN/MAX/COUNT pushdown answered ENTIRELY from zone-map sidecars: a
   * `SELECT max(key), count(*) FROM seqfileTable` never opens a data file —
@@ -21,8 +21,8 @@ import graft.core.seqfile.{SeqCompression, ZoneKey, ZoneMap}
   *
   * Pushdown is accepted only when every committed data file has a
   * VALIDATED sidecar carrying stats for every referenced column — one
-  * ~100-byte sidecar read per file, done with bounded driver-side
-  * parallelism (PlanParallel); the payoff is skipping the entire data scan. Queries with filters never reach this
+  * ~100-byte sidecar read per file (ZoneMapPruning.sidecars); the payoff
+  * is skipping the entire data scan. Queries with filters never reach this
   * path (all our filters stay residual, and Spark only pushes aggregates
   * below fully-consumed filters). */
 object SeqFileAggPushdown {
@@ -70,88 +70,34 @@ object SeqFileAggPushdown {
     schema.fields.find(_.name.equalsIgnoreCase(col)).map(_.dataType)
       .getOrElse(throw new IllegalArgumentException(s"no column $col"))
 
-  /** Per-file sidecar fold: count plus min/max of whichever columns are
-    * needed; None when the file can't serve the pushdown. */
-  private final case class FileStats(count: Long,
-                                     kMin: ZoneKey, kMax: ZoneKey,
-                                     vMin: ZoneKey, vMax: ZoneKey)
-
-  private def fileStats(pf: SeqFileDataSource.PartitionedFile,
-                        needKey: Boolean, needVal: Boolean,
-                        conf: Configuration): Option[FileStats] = {
-    val p = pf.status.getPath
-    val header =
-      try SeqFileDataSource.readHeader(p, conf)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    if (header.compression != SeqCompression.Block) return None
-    val entries = ZoneMap.readValidated(conf, p, header.keyClass,
-      header.valueClass, pf.status.getLen).getOrElse(return None)
-    var count = 0L
-    var kMin: ZoneKey = null; var kMax: ZoneKey = null
-    var vMin: ZoneKey = null; var vMax: ZoneKey = null
-    for (e <- entries) {
-      count += e.count
-      if (needKey) (e.kmin, e.kmax) match {
-        case (Some(lo), Some(hi)) =>
-          if (kMin == null || lo.cmp(kMin) < 0) kMin = lo
-          if (kMax == null || hi.cmp(kMax) > 0) kMax = hi
-        case _ => return None
-      }
-      if (needVal) (e.vmin, e.vmax) match {
-        case (Some(lo), Some(hi)) =>
-          if (vMin == null || lo.cmp(vMin) < 0) vMin = lo
-          if (vMax == null || hi.cmp(vMax) > 0) vMax = hi
-        case _ => return None
-      }
-    }
-    Some(FileStats(count, kMin, kMax, vMin, vMax))
-  }
-
-  /** Fold every file's sidecar into one partial row. None when any file
-    * lacks a valid sidecar with the needed stats (caller then declines the
-    * pushdown). Sidecars are read with bounded driver-side parallelism
-    * (PlanParallel): a million-file lake plans in O(files/parallelism)
-    * wall-clock instead of a serial read per file. */
-  def partialRow(paths: Seq[String], specs: Seq[Spec],
+  /** Fold every file's sidecar entries, in one pass, into one partial row.
+    * None when any file lacks a valid sidecar with the needed stats (caller
+    * then declines the pushdown); Some(null) for an empty table, which
+    * emits no partial row. */
+  def partialRow(files: Seq[SeqFileDataSource.PartitionedFile], specs: Seq[Spec],
                  tableSchema: StructType, conf: Configuration)
       : Option[InternalRow] = {
-    val needKey = specs.exists {
-      case MinOf("key") | MaxOf("key") => true; case _ => false }
-    val needVal = specs.exists {
-      case MinOf("value") | MaxOf("value") => true; case _ => false }
-
-    val files = SeqFileDataSource.listPartitionedFiles(paths, conf)
-    if (files.isEmpty) return Some(null) // empty table: emit no partial row
-    val perFile = PlanParallel.mapOrdered(files)(
-      fileStats(_, needKey, needVal, conf))
-    if (perFile.exists(_.isEmpty)) return None
-
+    if (files.isEmpty) return Some(null)
+    val entries = ZoneMapPruning.sidecars(files, conf).getOrElse(return None).flatten
+    val cols = specs.collect { case MinOf(c) => c; case MaxOf(c) => c }.distinct
     var count = 0L
-    var kMin: ZoneKey = null; var kMax: ZoneKey = null
-    var vMin: ZoneKey = null; var vMax: ZoneKey = null
-    for (fsOpt <- perFile; fs = fsOpt.get) {
-      count += fs.count
-      if (needKey && fs.kMin != null) {
-        if (kMin == null || fs.kMin.cmp(kMin) < 0) kMin = fs.kMin
-        if (kMax == null || fs.kMax.cmp(kMax) > 0) kMax = fs.kMax
-      }
-      if (needVal && fs.vMin != null) {
-        if (vMin == null || fs.vMin.cmp(vMin) < 0) vMin = fs.vMin
-        if (vMax == null || fs.vMax.cmp(vMax) > 0) vMax = fs.vMax
+    val range = scala.collection.mutable.Map.empty[String, (ZoneKey, ZoneKey)]
+    for (e <- entries) {
+      count += e.count
+      for (c <- cols) {
+        val (lo, hi) = ZoneMapPruning.bounds(e, c).getOrElse(return None)
+        range(c) = range.get(c).fold((lo, hi)) { case (l, h) =>
+          (if (lo.cmp(l) < 0) lo else l, if (hi.cmp(h) > 0) hi else h)
+        }
       }
     }
-    if (needKey && kMin == null) return None
-    if (needVal && vMin == null) return None
+    if (!cols.forall(range.contains)) return None
 
     val row = new GenericInternalRow(specs.length)
-    specs.zipWithIndex.foreach { case (s, i) =>
-      s match {
-        case CountAll => row.update(i, count)
-        case MinOf(c) => row.update(i,
-          catalystValue(if (c == "key") kMin else vMin, dataTypeOf(tableSchema, c)))
-        case MaxOf(c) => row.update(i,
-          catalystValue(if (c == "key") kMax else vMax, dataTypeOf(tableSchema, c)))
-      }
+    specs.zipWithIndex.foreach {
+      case (CountAll, i) => row.update(i, count)
+      case (MinOf(c), i) => row.update(i, catalystValue(range(c)._1, dataTypeOf(tableSchema, c)))
+      case (MaxOf(c), i) => row.update(i, catalystValue(range(c)._2, dataTypeOf(tableSchema, c)))
     }
     Some(row)
   }

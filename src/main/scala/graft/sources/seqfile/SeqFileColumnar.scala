@@ -1,5 +1,6 @@
 package graft.sources.seqfile
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
@@ -83,41 +84,107 @@ final class SeqFileConstantStringVector(value: UTF8String)
   override def getChild(ordinal: Int): ColumnVector = throw new UnsupportedOperationException
 }
 
-/** Columnar partition reader: one ColumnarBatch per record block (the
-  * reference's `Stream (RecordBlock k v)` pull model, batch-at-a-time).
-  * Honors the malformed-record mode like the row reader (SeqSplitBlocks). */
+/** Executor-side partition reader, the connector's one decode path: one
+  * ColumnarBatch per record block (the reference's `Stream (RecordBlock k
+  * v)` pull model, batch-at-a-time). It parses the file's header (one small
+  * read), validates it against the query schema (reference: Parser.hs:84-91
+  * fail-fast), plans the blocks the zone map and Bloom keep, then streams
+  * the blocks in the split's byte range under the malformed-record mode (see
+  * ReadMode), counting what PERMISSIVE and DROPMALFORMED drop. Hive-
+  * partition columns ride along as constant vectors. */
 class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: StructType,
                                      required: StructType, mode: String,
                                      conf: org.apache.hadoop.conf.Configuration =
                                        SeqFileHadoopConf.current())
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
-  private val blocks = new SeqSplitBlocks(part, tableSchema, required, mode, conf)
+  // One vector per output field for each block: key and value wrap the
+  // decoded columns; a partition column is the split's constant. Resolved
+  // before the file is opened, so an unknown column leaks no stream.
+  private val vectorsOf: Array[DecodedBlock => ColumnVector] = required.fields.map { f =>
+    if (f.name.equalsIgnoreCase("key"))
+      (b: DecodedBlock) => new SeqFileColumnVector(f.dataType, b.keys.get): ColumnVector
+    else if (f.name.equalsIgnoreCase("value"))
+      (b: DecodedBlock) => new SeqFileColumnVector(f.dataType, b.values.get): ColumnVector
+    else part.partValues.collectFirst {
+      case (k, v) if k.equalsIgnoreCase(f.name) =>
+        val const: ColumnVector = new SeqFileConstantStringVector(UTF8String.fromString(v))
+        (_: DecodedBlock) => const
+    }.getOrElse(throw new SeqFileFormatException(
+      s"unknown column '${f.name}' (expect key/value or a partition column)"))
+  }
+
+  private val input = new HadoopSeekableInput(new Path(part.path), conf)
+  private var planned: Option[ZoneMapPruning.PlannedBlocks] = None
+  private var malformedBlocks = 0L
+  private var unreadableFiles = 0L
+  // Header parse + FULL-schema validation (the reference fails the whole
+  // stream on a type mismatch even if the consumer never touches the
+  // column, reference: Parser.hs:84-91; a bare count() prunes everything).
+  // Under PERMISSIVE/DROPMALFORMED a file with an unreadable header (e.g. a
+  // zero-byte part from a killed writer) yields an empty partition instead
+  // of failing the query; the input is closed either way on failure.
+  private val blocks: SeqStream =
+    try {
+      val header = SeqHeader.parse(new SeqInput(input))
+      SeqFileSchema.validate(tableSchema, header, part.path)
+      val needKey = required.fieldNames.exists(_.equalsIgnoreCase("key"))
+      val needValue = required.fieldNames.exists(_.equalsIgnoreCase("value"))
+      planned = part.fixedOffsets match {
+        // TopN pushdown planned the exact blocks already
+        case Some(offs) =>
+          Some(ZoneMapPruning.PlannedBlocks(offs.toArray, 0L))
+        case None => ZoneMapPruning.plannedOffsets(conf,
+          part.path, header, input.length, part.start, part.end, part.keyFilters)
+      }
+      SeqStream.openRange(input, header, part.start, part.end,
+        decodeKey = needKey, decodeValue = needValue,
+        plannedOffsets = planned.map(_.offsets))
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        input.close()
+        if (mode == ReadMode.FailFast) throw e
+        SeqFileScan.log.warn(s"seqfile $mode: skipping unreadable file ${part.path}: $e")
+        unreadableFiles = 1
+        null // exhausted reader
+    }
+  private var done = blocks == null
+
   private var batch: ColumnarBatch = null
 
   override def next(): Boolean = {
-    val b = blocks.next()
+    val b = nextBlock()
     if (b == null) return false
-    val vectors: Array[ColumnVector] = required.fields.map { f =>
-      if (f.name.equalsIgnoreCase("key"))
-        new SeqFileColumnVector(f.dataType, b.keys.get): ColumnVector
-      else if (f.name.equalsIgnoreCase("value"))
-        new SeqFileColumnVector(f.dataType, b.values.get): ColumnVector
-      else part.partValues.collectFirst {
-        case (k, v) if k.equalsIgnoreCase(f.name) =>
-          new SeqFileConstantStringVector(UTF8String.fromString(v)): ColumnVector
-      }.getOrElse(throw new SeqFileFormatException(
-        s"unknown column '${f.name}' (expect key/value or a partition column)"))
-    }
-    batch = new ColumnarBatch(vectors, b.count)
+    batch = new ColumnarBatch(vectorsOf.map(_(b)), b.count)
     true
+  }
+
+  /** The next decodable block, or null at the end of the split. Corrupt
+    * bytes can surface as runtime exceptions beyond IOException
+    * (index/negative-size errors in the decoders), so the recovery path
+    * catches all non-fatal throwables. PERMISSIVE stops at the first bad
+    * block (the reference's error tail); DROPMALFORMED skips it. */
+  private def nextBlock(): DecodedBlock = {
+    while (!done) {
+      try {
+        if (blocks.hasNext) return blocks.next()
+        done = true
+      } catch {
+        case scala.util.control.NonFatal(e) if mode != ReadMode.FailFast =>
+          SeqFileScan.log.warn(
+            s"seqfile $mode: dropping block in ${part.path}: ${e}")
+          malformedBlocks += 1
+          done = mode == ReadMode.Permissive || !blocks.skipToNextSync()
+      }
+    }
+    null
   }
 
   override def get(): ColumnarBatch = batch
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    blocks.metrics
+    SeqScanMetrics.taskValues(planned, malformedBlocks, unreadableFiles)
 
-  override def close(): Unit = blocks.close()
+  override def close(): Unit = if (blocks != null) blocks.close()
 }

@@ -171,15 +171,11 @@ class SeqFileMicroBatchStream(tableSchema: StructType, required: StructType,
           s"(${log.size} entries) at $logPath — checkpoint log lost or " +
           "directory not append-only; refusing to rebind offsets to " +
           "different files")
+      // partition values re-derive from the stored path's k=v segments,
+      // so hive-partitioned directories stream like flat ones
       log.slice(s, e).flatMap { case (path, len) =>
-        // partition values re-derive from the stored path's k=v segments,
-        // so hive-partitioned directories stream like flat ones
-        val pvals = SeqFileDataSource.partitionValuesFromPath(path)
-        val n = math.max(1L, (len + maxSplitBytes - 1) / maxSplitBytes)
-        (0L until n).map { i =>
-          SeqFilePartition(path, i * maxSplitBytes,
-            math.min((i + 1) * maxSplitBytes, len), pvals)
-        }
+        SeqFilePartition.split(path, len,
+          SeqFileDataSource.partitionValuesFromPath(path), maxSplitBytes)
       }.toArray
     }
   }

@@ -1,7 +1,6 @@
 package graft.sources.seqfile
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -10,8 +9,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
-
-import graft.core.seqfile._
 
 /** Scan builder with column pruning — the connector-level optimization the
   * reference cannot do (it always decodes both columns, reference:
@@ -32,6 +29,10 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
   private var partFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var aggScan: Option[SeqFileAggScan] = None
+
+  /** The table's files, listed once per query on first use and shared by
+    * both pushdowns and the scan. */
+  private lazy val files = SeqFileDataSource.listPartitionedFiles(paths, hadoopConf)
 
   private val partCols: Set[String] =
     tableSchema.fieldNames.filterNot(n =>
@@ -72,13 +73,9 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     SeqFileTopNPushdown.orderFor(orders) match {
       case Some(key) if tableSchema.fields.exists(f =>
           f.name.equalsIgnoreCase(key.col) && f.dataType != NullType) =>
-        SeqFileTopNPushdown.planFiles(paths, key, limit, hadoopConf) match {
-          case Some(plan) =>
-            topNPlan = Some(plan)
-            SeqFileTopNPushdown.pushes.increment()
-            true
-          case None => false
-        }
+        topNPlan = SeqFileTopNPushdown.planFiles(files, key, limit, hadoopConf)
+        if (topNPlan.nonEmpty) SeqFileTopNPushdown.pushes.increment()
+        topNPlan.nonEmpty
       case _ => false
     }
   }
@@ -99,29 +96,41 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     SeqFileAggPushdown.specsFor(agg, tableSchema) match {
       case Some(specs) if specs.nonEmpty =>
         val out = SeqFileAggPushdown.schemaFor(specs, tableSchema)
-        SeqFileAggPushdown.partialRow(paths, specs, tableSchema, hadoopConf) match {
-          case Some(row) =>
-            aggScan = Some(new SeqFileAggScan(out, row,
-              s"seqfile agg-pushdown paths=${paths.mkString(",")} " +
-                s"aggs=${specs.mkString(",")}"))
-            true
-          case None => false
-        }
+        aggScan = SeqFileAggPushdown.partialRow(files, specs, tableSchema, hadoopConf)
+          .map(new SeqFileAggScan(out, _,
+            s"seqfile agg-pushdown paths=${paths.mkString(",")} " +
+              s"aggs=${specs.mkString(",")}"))
+        aggScan.nonEmpty
       case _ => false
     }
   }
 
-  override def build(): Scan = aggScan.getOrElse(
-    new SeqFileScan(tableSchema, required, paths,
-      maxSplitBytes = Option(options.get("maxSplitBytes")).map(_.toLong)
-        .getOrElse(128L * 1024 * 1024),
-      mode = ReadMode.parse(Option(options.get("mode")).getOrElse("FAILFAST")),
-      partitionFilters = partFilters,
-      keyFilters = keyFilters,
-      topNPlan = topNPlan,
-      maxFilesPerTrigger = Option(options.get("maxFilesPerTrigger")).map(_.toInt),
-      maxBytesPerTrigger = Option(options.get("maxBytesPerTrigger")).map(_.toLong),
-      hadoopConf = hadoopConf))
+  /** A numeric read option that must be positive when set: a zero or
+    * negative split size or trigger limit would read nothing, divide by
+    * zero or never advance the stream. */
+  private def positive[T](name: String, parse: String => T)(implicit num: Numeric[T]): Option[T] =
+    Option(options.get(name)).map { s =>
+      val v = parse(s)
+      if (num.signum(v) <= 0)
+        throw new IllegalArgumentException(s"seqfile option $name must be > 0, got $s")
+      v
+    }
+
+  override def build(): Scan = {
+    val maxSplitBytes = positive("maxSplitBytes", _.toLong).getOrElse(128L * 1024 * 1024)
+    val maxFilesPerTrigger = positive("maxFilesPerTrigger", _.toInt)
+    val maxBytesPerTrigger = positive("maxBytesPerTrigger", _.toLong)
+    aggScan.getOrElse(
+      new SeqFileScan(tableSchema, required, paths, files,
+        maxSplitBytes = maxSplitBytes,
+        mode = ReadMode.parse(Option(options.get("mode")).getOrElse("FAILFAST")),
+        partitionFilters = partFilters,
+        keyFilters = keyFilters,
+        topNPlan = topNPlan,
+        maxFilesPerTrigger = maxFilesPerTrigger,
+        maxBytesPerTrigger = maxBytesPerTrigger,
+        hadoopConf = hadoopConf))
+  }
 }
 
 /** Evaluate pushed filters against a file's partition values. Only shapes
@@ -138,6 +147,12 @@ object PartitionFilters {
     case Or(l, r) => supported(l) && supported(r)
     case Not(c) => supported(c)
     case _ => false
+  }
+
+  /** Does the file survive every filter? */
+  def keep(filters: Seq[Filter], pf: SeqFileDataSource.PartitionedFile): Boolean = {
+    val vals = pf.partitionValues.map { case (k, v) => k.toLowerCase -> v }.toMap
+    filters.forall(eval(_, vals))
   }
 
   def eval(f: Filter, vals: Map[String, String]): Boolean = {
@@ -185,8 +200,11 @@ object SeqFileScan {
   private[seqfile] val log = org.slf4j.LoggerFactory.getLogger(classOf[SeqFileScan])
 }
 
+/** The batch and micro-batch scan of a seqfile table. `files` is the
+  * builder's listing of `paths`, taken on first use. */
 class SeqFileScan(tableSchema: StructType, required: StructType,
-                  paths: Seq[String], maxSplitBytes: Long,
+                  paths: Seq[String], files: => Seq[SeqFileDataSource.PartitionedFile],
+                  maxSplitBytes: Long,
                   mode: String = ReadMode.FailFast,
                   partitionFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
                   keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
@@ -197,6 +215,10 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeFiltering
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
+
+  /** The listing under the static partition filters, computed once and read
+    * by planning, statistics and partitioning alike. */
+  private lazy val staticFiles = files.filter(PartitionFilters.keep(partitionFilters.toSeq, _))
 
   /** Storage-partitioned execution: a hive-partitioned lake reports
     * KeyGroupedPartitioning over its partition columns, so (with
@@ -260,11 +282,7 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     // partition-filter-aware: a scan of one partition out of hundreds
     // reports that partition's bytes, keeping it broadcast-eligible
     private val diskBytes =
-      try SeqFileDataSource.listPartitionedFiles(paths, hadoopConf)
-        .filter { pf =>
-          val vals = pf.partitionValues.map { case (k, v) => k.toLowerCase -> v }.toMap
-          partitionFilters.forall(PartitionFilters.eval(_, vals))
-        }.map(_.status.getLen).sum
+      try staticFiles.map(_.status.getLen).sum
       catch { case _: Exception => -1L }
     override def sizeInBytes(): java.util.OptionalLong =
       if (diskBytes < 0) java.util.OptionalLong.empty()
@@ -288,38 +306,23 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     new SeqFileMicroBatchStream(tableSchema, required, paths, maxSplitBytes, mode,
       checkpointLocation, maxFilesPerTrigger, maxBytesPerTrigger, hadoopConf)
 
-  /** One partition per `maxSplitBytes` byte range per file; ranges align
-    * themselves to record-block boundaries at read time by scanning for the
-    * next sync marker (semantics of reference: Parser.hs:93-101). At 100 TB
-    * this yields ~800k splits of 128 MiB — Spark's scheduler handles that;
-    * tune `maxSplitBytes` upward for very large clusters. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // TopN pushdown: one partition per file with an explicit block list
-    // (the selection already read every sidecar at planning)
-    topNPlan match {
-      case Some(plan) =>
-        return plan.map { case (pf, offs) =>
-          SeqFilePartition(pf.status.getPath.toString, 0L,
-            pf.status.getLen, pf.partitionValues,
-            fixedOffsets = Some(offs)): InputPartition
-        }.toArray
-      case None => ()
-    }
-    val files = SeqFileDataSource.listPartitionedFiles(paths, hadoopConf)
-      .filter { pf =>
-        val vals = pf.partitionValues.map { case (k, v) => k.toLowerCase -> v }.toMap
-        partitionFilters.forall(PartitionFilters.eval(_, vals)) &&
-          runtimeFilters.forall(PartitionFilters.eval(_, vals))
-      }
-    files.flatMap { pf =>
-      val len = pf.status.getLen
-      val n = math.max(1L, (len + maxSplitBytes - 1) / maxSplitBytes)
-      (0L until n).map { i =>
-        SeqFilePartition(pf.status.getPath.toString, i * maxSplitBytes,
-          math.min((i + 1) * maxSplitBytes, len), pf.partitionValues,
-          (keyFilters ++ runtimeDataFilters).toSeq)
-      }
-    }.toArray
+  /** Byte-range splits of the files that survive the static and runtime
+    * partition filters (see SeqFilePartition.split). A TopN pushdown instead
+    * plans one partition per file with an explicit block list (the
+    * selection already read every sidecar at planning). */
+  override def planInputPartitions(): Array[InputPartition] = topNPlan match {
+    case Some(plan) =>
+      plan.map { case (pf, offs) =>
+        SeqFilePartition(pf.status.getPath.toString, 0L,
+          pf.status.getLen, pf.partitionValues,
+          fixedOffsets = Some(offs)): InputPartition
+      }.toArray
+    case None =>
+      val dataFilters = (keyFilters ++ runtimeDataFilters).toSeq
+      staticFiles.filter(PartitionFilters.keep(runtimeFilters.toSeq, _)).flatMap { pf =>
+        SeqFilePartition.split(pf.status.getPath.toString, pf.status.getLen,
+          pf.partitionValues, maxSplitBytes, dataFilters)
+      }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -343,176 +346,59 @@ case class SeqFilePartition(path: String, start: Long, end: Long,
       partValues.map(v => UTF8String.fromString(v._2): Any).toArray)
 }
 
+object SeqFilePartition {
+  /** The split rule of batch and micro-batch scans alike: one partition per
+    * `maxSplitBytes` byte range of a file. Ranges align themselves to
+    * record-block boundaries at read time by scanning for the next sync
+    * marker (semantics of reference: Parser.hs:93-101). At 100 TB this
+    * yields ~800k splits of 128 MiB — Spark's scheduler handles that; tune
+    * `maxSplitBytes` upward for very large clusters. */
+  def split(path: String, len: Long, partValues: Seq[(String, String)],
+            maxSplitBytes: Long,
+            keyFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil): Seq[SeqFilePartition] = {
+    val n = math.max(1L, (len + maxSplitBytes - 1) / maxSplitBytes)
+    (0L until n).map { i =>
+      SeqFilePartition(path, i * maxSplitBytes, math.min((i + 1) * maxSplitBytes, len),
+        partValues, keyFilters)
+    }
+  }
+}
+
 /** Ships to executors with the query's Hadoop conf as one broadcast, so no
-  * task builds its own (see SeqFileHadoopConf). */
+  * task builds its own (see SeqFileHadoopConf). Every partition reads
+  * columnar: one ColumnarBatch per record block with zero-copy vectors (the
+  * reference's columnar RecordBlock model), which Spark's vectorized
+  * operators and ColumnarToRow consume directly. */
 class SeqFileReaderFactory(tableSchema: StructType, required: StructType,
                            mode: String, conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new SeqFilePartitionReader(partition.asInstanceOf[SeqFilePartition], tableSchema,
-      required, mode, conf.value.value)
 
-  /** Columnar read path: one ColumnarBatch per record block with zero-copy
-    * vectors (the reference's columnar RecordBlock model) — Spark's
-    * vectorized operators and ColumnarToRow consume it directly. Hive-
-    * partition columns ride along as constant vectors; NullType columns
-    * fall back to the row reader. */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    required.fields.forall(_.dataType != NullType)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new SeqFileColumnarPartitionReader(partition.asInstanceOf[SeqFilePartition],
       tableSchema, required, mode, conf.value.value)
-}
 
-/** One split's decodable blocks, shared by the row and columnar readers:
-  * parse the file's header (one small read), validate it against the query
-  * schema (reference: Parser.hs:84-91 fail-fast), plan the blocks the zone
-  * map and Bloom keep, then hand out blocks in the split's byte range under
-  * the malformed-record mode (see ReadMode), counting what PERMISSIVE and
-  * DROPMALFORMED drop. */
-private[seqfile] final class SeqSplitBlocks(part: SeqFilePartition,
-                                            tableSchema: StructType,
-                                            required: StructType, mode: String,
-                                            conf: Configuration) {
-
-  private val input = new HadoopSeekableInput(new Path(part.path), conf)
-  private var planned: Option[ZoneMapPruning.PlannedBlocks] = None
-  private var malformedBlocks = 0L
-  private var unreadableFiles = 0L
-  // Header parse + FULL-schema validation (the reference fails the whole
-  // stream on a type mismatch even if the consumer never touches the
-  // column, reference: Parser.hs:84-91; a bare count() prunes everything).
-  // Under PERMISSIVE/DROPMALFORMED a file with an unreadable header (e.g. a
-  // zero-byte part from a killed writer) yields an empty partition instead
-  // of failing the query; the input is closed either way on failure.
-  private val blocks: SeqStream =
-    try {
-      val header = SeqHeader.parse(new SeqInput(input))
-      SeqFileSchema.validate(tableSchema, header, part.path)
-      val needKey = required.fieldNames.exists(_.equalsIgnoreCase("key"))
-      val needValue = required.fieldNames.exists(_.equalsIgnoreCase("value"))
-      planned = part.fixedOffsets match {
-        // TopN pushdown planned the exact blocks already
-        case Some(offs) =>
-          Some(ZoneMapPruning.PlannedBlocks(offs.toArray, 0L))
-        case None => ZoneMapPruning.plannedOffsets(conf,
-          part.path, header, input.length, part.start, part.end, part.keyFilters)
-      }
-      SeqStream.openRange(input, header, part.start, part.end,
-        decodeKey = needKey, decodeValue = needValue,
-        plannedOffsets = planned.map(_.offsets))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        input.close()
-        if (mode == ReadMode.FailFast) throw e
-        SeqFileScan.log.warn(s"seqfile $mode: skipping unreadable file ${part.path}: $e")
-        unreadableFiles = 1
-        null // exhausted reader
-    }
-  private var done = blocks == null
-
-  /** The next decodable block, or null at the end of the split. Corrupt
-    * bytes can surface as runtime exceptions beyond IOException
-    * (index/negative-size errors in the decoders), so the recovery path
-    * catches all non-fatal throwables. PERMISSIVE stops at the first bad
-    * block (the reference's error tail); DROPMALFORMED skips it. */
-  def next(): DecodedBlock = {
-    while (!done) {
-      try {
-        if (blocks.hasNext) return blocks.next()
-        done = true
-      } catch {
-        case scala.util.control.NonFatal(e) if mode != ReadMode.FailFast =>
-          SeqFileScan.log.warn(
-            s"seqfile $mode: dropping block in ${part.path}: ${e}")
-          malformedBlocks += 1
-          done = mode == ReadMode.Permissive || !blocks.skipToNextSync()
-      }
-    }
-    null
-  }
-
-  def metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    SeqScanMetrics.taskValues(planned, malformedBlocks, unreadableFiles)
-
-  def close(): Unit = if (blocks != null) blocks.close()
-}
-
-/** Executor-side row reader: streams the split's blocks (SeqSplitBlocks)
-  * and emits rows. */
-class SeqFilePartitionReader(part: SeqFilePartition, tableSchema: StructType,
-                             required: StructType, mode: String, conf: Configuration)
-  extends PartitionReader[InternalRow] {
-
-  private val blocks = new SeqSplitBlocks(part, tableSchema, required, mode, conf)
-
-  private var block: DecodedBlock = null
-  private var rowIdx = 0
-  private val row = new GenericInternalRow(required.length)
-
-  // Per-output-field accessor: (block, record index) → catalyst value.
-  // Driven by the required field's Catalyst type (already validated against
-  // the header). StringType wraps the block buffer via UTF8String.fromBytes
-  // without copying; BinaryType copies (consumers may retain the array).
-  private val getters: Array[(DecodedBlock, Int) => Any] =
-    required.fields.map { f =>
-      val fromKey = f.name.equalsIgnoreCase("key")
-      val isData = fromKey || f.name.equalsIgnoreCase("value")
-      def col(b: DecodedBlock): ColumnData = if (fromKey) b.keys.get else b.values.get
-      if (!isData) {
-        // hive-style partition column: constant per split
-        part.partValues.collectFirst {
-          case (k, v) if k.equalsIgnoreCase(f.name) => v
-        } match {
-          case Some(v) =>
-            val const = UTF8String.fromString(v)
-            val g: (DecodedBlock, Int) => Any = (_, _) => const
-            g
-          case None =>
-            throw new SeqFileFormatException(
-              s"unknown column '${f.name}' (expect key/value or a partition column)")
+  /** Row view over the columnar reader. Spark never calls it, since every
+    * partition reads columnar. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private val batches = createColumnarReader(partition)
+      private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+      private var row: InternalRow = null
+      override def next(): Boolean = {
+        while (!rows.hasNext) {
+          if (!batches.next()) return false
+          rows = batches.get().rowIterator()
         }
-      } else {
-        val g: (DecodedBlock, Int) => Any = f.dataType match {
-          case NullType => (_, _) => null
-          case ShortType => (b, i) => col(b).asInstanceOf[ShortColumn].values(i)
-          case IntegerType => (b, i) => col(b).asInstanceOf[IntColumn].values(i)
-          case LongType => (b, i) => col(b).asInstanceOf[LongColumn].values(i)
-          case FloatType => (b, i) => col(b).asInstanceOf[FloatColumn].values(i)
-          case DoubleType => (b, i) => col(b).asInstanceOf[DoubleColumn].values(i)
-          case StringType => (b, i) => {
-            val c = col(b).asInstanceOf[BinaryColumn]
-            UTF8String.fromBytes(c.bytes, c.starts(i), c.lens(i))
-          }
-          case BinaryType => (b, i) => col(b).asInstanceOf[BinaryColumn].slice(i)
-          case other => throw new SeqFileFormatException(s"unsupported read type $other")
-        }
-        g
+        row = rows.next()
+        true
       }
+      override def get(): InternalRow = row
+      override def currentMetricsValues()
+          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+        batches.currentMetricsValues()
+      override def close(): Unit = batches.close()
     }
-
-  override def next(): Boolean = {
-    while (block == null || rowIdx >= block.count) {
-      block = blocks.next()
-      if (block == null) return false
-      rowIdx = 0
-    }
-    var f = 0
-    while (f < getters.length) {
-      row.update(f, getters(f)(block, rowIdx))
-      f += 1
-    }
-    rowIdx += 1
-    true
-  }
-
-  override def get(): InternalRow = row
-
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    blocks.metrics
-
-  override def close(): Unit = blocks.close()
 }

@@ -3,7 +3,7 @@ package graft.sources.seqfile
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder}
 
-import graft.core.seqfile.{SeqCompression, ZoneEntry, ZoneKey, ZoneMap}
+import graft.core.seqfile.{ZoneEntry, ZoneKey}
 
 /** Top-N pushdown over zone-mapped files: for `ORDER BY key DESC LIMIT n`
   * (or ASC, or on `value`), per-block statistics select a provably
@@ -43,11 +43,6 @@ object SeqFileTopNPushdown {
         .map(c => Key(c, o.direction() == SortDirection.DESCENDING))
     }
 
-  private def lo(e: ZoneEntry, col: String): Option[ZoneKey] =
-    if (col == "key") e.kmin else e.vmin
-  private def hi(e: ZoneEntry, col: String): Option[ZoneKey] =
-    if (col == "key") e.kmax else e.vmax
-
   /** Offsets of the blocks of ONE file that can contain the file's top-n
     * under `key`; None when the file has no usable stats (caller declines
     * the whole pushdown). */
@@ -55,10 +50,8 @@ object SeqFileTopNPushdown {
       : Option[Seq[Long]] = {
     if (entries.isEmpty) return Some(Nil)
     val stats = entries.map { e =>
-      (lo(e, key.col), hi(e, key.col)) match {
-        case (Some(a), Some(b)) => (e.offset, e.count, a, b)
-        case _ => return None
-      }
+      val (a, b) = ZoneMapPruning.bounds(e, key.col).getOrElse(return None)
+      (e.offset, e.count, a, b)
     }
     // normalize to "descending on best": best = max (DESC) or min (ASC);
     // worst = the other end. cmpBetter(a,b) > 0 when a is closer to the top.
@@ -95,25 +88,12 @@ object SeqFileTopNPushdown {
 
   /** Per-file planned offsets for the whole table, or None when any file
     * can't participate (missing/stale sidecar, non-BLOCK layout, missing
-    * column stats). Sidecars are read with bounded driver-side parallelism
-    * (PlanParallel), so planning a million-file lake costs
-    * O(files/parallelism) wall-clock, not a serial read per file. */
-  def planFiles(paths: Seq[String], key: Key, n: Int, conf: Configuration)
-      : Option[Seq[(SeqFileDataSource.PartitionedFile, Seq[Long])]] = {
-    val files = SeqFileDataSource.listPartitionedFiles(paths, conf)
-    val perFile = PlanParallel.mapOrdered(files) { pf =>
-      val p = pf.status.getPath
-      (try Some(SeqFileDataSource.readHeader(p, conf))
-       catch { case scala.util.control.NonFatal(_) => None })
-        .filter(_.compression == SeqCompression.Block)
-        .flatMap { header =>
-          ZoneMap.readValidated(conf, p, header.keyClass,
-            header.valueClass, pf.status.getLen)
-        }
-        .flatMap(selectBlocks(_, key, n))
-        .map(offs => (pf, offs))
+    * column stats). */
+  def planFiles(files: Seq[SeqFileDataSource.PartitionedFile], key: Key, n: Int,
+                conf: Configuration)
+      : Option[Seq[(SeqFileDataSource.PartitionedFile, Seq[Long])]] =
+    ZoneMapPruning.sidecars(files, conf).flatMap { perFile =>
+      val offsets = perFile.map(selectBlocks(_, key, n))
+      if (offsets.exists(_.isEmpty)) None else Some(files.zip(offsets.map(_.get)))
     }
-    if (perFile.exists(_.isEmpty)) None
-    else Some(perFile.map(_.get))
-  }
 }

@@ -88,13 +88,10 @@ object ZoneMapPruning {
     }
   }
 
-  /** mightMatch against optional per-block stats (absent stats keep). */
-  private def mightMatchOpt(f: Filter, min: Option[ZoneKey],
-                            max: Option[ZoneKey], t: WritableType): Boolean =
-    (min, max) match {
-      case (Some(lo), Some(hi)) => mightMatch(f, lo, hi, t)
-      case _ => true
-    }
+  /** A block's [min, max] of column `col` ("key"/"value"), when its
+    * sidecar entry records them. */
+  def bounds(e: ZoneEntry, col: String): Option[(ZoneKey, ZoneKey)] =
+    if (col == "key") e.kmin.zip(e.kmax) else e.vmin.zip(e.vmax)
 
   /** Could the block's key Bloom filter admit `f`? Only equality shapes
     * consult the filter (a Bloom answers set membership, nothing else);
@@ -114,6 +111,30 @@ object ZoneMapPruning {
     }
   }
 
+  /** A file's validated sidecar entries, or None when the file is not
+    * BLOCK-compressed or its sidecar is missing or stale. The one sidecar
+    * lookup behind zone pruning and both pushdowns. */
+  def sidecar(conf: Configuration, path: Path, header: SeqHeader,
+              fileLen: Long): Option[Seq[ZoneEntry]] =
+    if (header.compression != SeqCompression.Block) None
+    else ZoneMap.readValidated(conf, path, header.keyClass, header.valueClass, fileLen)
+
+  /** Every listed file's sidecar entries, in listing order, or None when any
+    * file has none (an unreadable header counts as none) — what agg and
+    * top-N pushdown plan from. Read with bounded driver-side parallelism
+    * (PlanParallel): a million-file lake plans in O(files/parallelism)
+    * wall-clock instead of a serial read per file. */
+  def sidecars(files: Seq[SeqFileDataSource.PartitionedFile],
+               conf: Configuration): Option[Seq[Seq[ZoneEntry]]] = {
+    val perFile = PlanParallel.mapOrdered(files) { pf =>
+      val p = pf.status.getPath
+      (try Some(SeqFileDataSource.readHeader(p, conf))
+       catch { case scala.util.control.NonFatal(_) => None })
+        .flatMap(sidecar(conf, p, _, pf.status.getLen))
+    }
+    if (perFile.exists(_.isEmpty)) None else Some(perFile.map(_.get))
+  }
+
   /** One split's pruning outcome: exact offsets to read + how many owned
     * blocks the zone map proved unmatchable. */
   final case class PlannedBlocks(offsets: Array[Long], skipped: Long)
@@ -124,26 +145,24 @@ object ZoneMapPruning {
   def plannedOffsets(conf: Configuration, path: String, header: SeqHeader,
                      fileLen: Long, start: Long, end: Long,
                      filters: Seq[Filter]): Option[PlannedBlocks] = {
-    val kt = header.keyType
-    val vt = header.valueType
     val useK = filters.filter(usable(_, "key"))
     val useV = filters.filter(usable(_, "value"))
-    if ((useK.isEmpty && useV.isEmpty) ||
-        header.compression != SeqCompression.Block) return None
-    ZoneMap.readValidated(conf, new Path(path), header.keyClass,
-        header.valueClass, fileLen)
-      .map { entries =>
-        // split contract: this reader owns blocks whose escape starts in
-        // [start, end) — identical to the sync-scan discovery rule
-        val owned = entries.filter(e => e.offset >= start && e.offset < end)
-        val kept = owned.filter(e =>
-          useK.forall(mightMatchOpt(_, e.kmin, e.kmax, kt)) &&
-            useK.forall(f => e.kbloom.forall(bloomMightMatch(f, _, kt))) &&
-            useV.forall(mightMatchOpt(_, e.vmin, e.vmax, vt)))
-        blocksPlanned.add(owned.size.toLong)
-        blocksSkipped.add((owned.size - kept.size).toLong)
-        PlannedBlocks(kept.map(_.offset).toArray, (owned.size - kept.size).toLong)
-      }
+    if (useK.isEmpty && useV.isEmpty) return None
+    // absent stats keep the block
+    def keeps(fs: Seq[Filter], e: ZoneEntry, col: String, t: WritableType): Boolean =
+      bounds(e, col).forall { case (lo, hi) => fs.forall(mightMatch(_, lo, hi, t)) }
+    sidecar(conf, new Path(path), header, fileLen).map { entries =>
+      // split contract: this reader owns blocks whose escape starts in
+      // [start, end) — identical to the sync-scan discovery rule
+      val owned = entries.filter(e => e.offset >= start && e.offset < end)
+      val kept = owned.filter(e =>
+        keeps(useK, e, "key", header.keyType) &&
+          useK.forall(f => e.kbloom.forall(bloomMightMatch(f, _, header.keyType))) &&
+          keeps(useV, e, "value", header.valueType))
+      blocksPlanned.add(owned.size.toLong)
+      blocksSkipped.add((owned.size - kept.size).toLong)
+      PlannedBlocks(kept.map(_.offset).toArray, (owned.size - kept.size).toLong)
+    }
   }
 }
 

@@ -262,16 +262,60 @@ class SeqFileConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("NullWritable key (NullType column) writes and reads through the connector") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("nullrt").toString
-    (0 until 100).map(i => s"v$i").toDF("value")
-      .select(lit(null).cast("void").as("key"), col("value"))
-      .write.format("seqfile").mode("overwrite").save(dir)
-    val back = spark.read.format("seqfile").load(dir)
-    assert(back.schema("key").dataType === org.apache.spark.sql.types.NullType)
-    assert(back.count() === 100L)
-    // NullType forces the row-based read path (columnar declines)
-    val vals = back.select("value").collect().map(_.getString(0)).toSet
-    assert(vals === (0 until 100).map(i => s"v$i").toSet)
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.types.NullType
+    // NullType columns read columnar like any other: the seqfile BatchScan
+    // feeds whole-stage-codegen ColumnarToRow, with no interpreted fallback
+    def assertColumnar(df: DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan
+      val c2r = plan.collect { case w: WholeStageCodegenExec => w.child }
+        .collect { case c: ColumnarToRowExec => c }
+      assert(c2r.nonEmpty, plan.toString)
+      assert(c2r.forall(_.collectFirst { case b: BatchScanExec => b }
+        .exists(b => b.supportsColumnar && b.scan.isInstanceOf[SeqFileScan])), plan.toString)
+    }
+    val fallback = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("nullrt").toString
+      (0 until 100).map(i => s"v$i").toDF("value")
+        .select(lit(null).cast("void").as("key"), col("value"))
+        .write.format("seqfile").mode("overwrite").save(dir)
+      val back = spark.read.format("seqfile").load(dir)
+      assert(back.schema("key").dataType === NullType)
+      assert(back.count() === 100L)
+      val valuesOnly = back.select("value")
+      val vals = valuesOnly.collect().map(_.getString(0)).toSet
+      assert(vals === (0 until 100).map(i => s"v$i").toSet)
+      assertColumnar(valuesOnly)
+      val rows = back.collect()
+      assert(rows.forall(_.isNullAt(0)))
+      assert(rows.map(_.getString(1)).toSet === vals)
+      assertColumnar(back)
+      assert(back.filter(col("key").isNull).count() === 100L)
+      assert(back.filter(col("key").isNotNull).count() === 0L)
+      assert(back.groupBy("key").count().collect().map(r => (r.isNullAt(0), r.getLong(1)))
+        .toSeq === Seq((true, 100L)))
+
+      // NullWritable value
+      val vdir = java.nio.file.Files.createTempDirectory("nullvalrt").toString
+      (0L until 100L).toDF("key").select(col("key"), lit(null).cast("void").as("value"))
+        .write.format("seqfile").mode("overwrite").save(vdir)
+      val nv = spark.read.format("seqfile").load(vdir)
+      assert(nv.schema("value").dataType === NullType)
+      val got = nv.collect()
+      assert(got.map(_.getLong(0)).sorted.toSeq === (0L until 100L))
+      assert(got.forall(_.isNullAt(1)))
+      assertColumnar(nv)
+      assert(nv.filter(col("value").isNull).count() === 100L)
+      assert(nv.filter(col("value").isNotNull).count() === 0L)
+      assert(nv.groupBy("key").count().count() === 100L)
+    } finally fallback match {
+      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
+      case None => spark.conf.unset("spark.sql.codegen.fallback")
+    }
   }
 
   test("recursive listing reads date-partitioned nested directories") {

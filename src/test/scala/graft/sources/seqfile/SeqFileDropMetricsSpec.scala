@@ -13,7 +13,8 @@ import graft.core.seqfile._
 
 /** PERMISSIVE and DROPMALFORMED report what they drop as scan metrics
   * (`seqfileMalformedBlocksDropped`, `seqfileUnreadableFilesSkipped`) on
-  * both the columnar and the row reader, instead of only logging it. */
+  * the columnar reader, for a NullType value column as for any other,
+  * instead of only logging it. */
 class SeqFileDropMetricsSpec extends AnyFunSuite with BeforeAndAfterAll
     with AdaptiveSparkPlanHelper {
 
@@ -29,8 +30,8 @@ class SeqFileDropMetricsSpec extends AnyFunSuite with BeforeAndAfterAll
 
   /** A 5+-block file with the 3rd block's sync marker flipped, plus a
     * zero-byte part from a killed writer. NullWritable values make the
-    * scan's schema carry a NullType column, which only the row reader
-    * serves. Returns (dir, rows in the first two blocks). */
+    * scan's schema carry a NullType column. Returns (dir, rows in the first
+    * two blocks). */
   private def corruptedDir(valueType: WritableType): (String, Long) = {
     val dir = Files.createTempDirectory("seqdrop")
     val f = dir.resolve("data.seq")
@@ -68,14 +69,14 @@ class SeqFileDropMetricsSpec extends AnyFunSuite with BeforeAndAfterAll
   private def read(dir: String, mode: String): DataFrame =
     spark.read.format("seqfile").option("mode", mode).load(dir)
 
-  for ((valueType, columnar) <- Seq((WritableType.TextW, true), (WritableType.NullW, false))) {
-    val reader = if (columnar) "columnar" else "row"
+  for (valueType <- Seq(WritableType.TextW, WritableType.NullW)) {
+    val reader = if (valueType == WritableType.NullW) "NullType columnar" else "columnar"
 
     test(s"$reader reader: PERMISSIVE counts the block it stopped at and the skipped file") {
       val (dir, goodPrefix) = corruptedDir(valueType)
       val df = read(dir, "permissive")
       assert(df.collect().length.toLong === goodPrefix)
-      assert(scans(df).map(_.supportsColumnar) === Seq(columnar))
+      assert(scans(df).map(_.supportsColumnar) === Seq(true))
       assert(metric(df, SeqScanMetrics.MalformedBlocksDropped) === 1L)
       assert(metric(df, SeqScanMetrics.UnreadableFilesSkipped) === 1L)
     }
@@ -85,7 +86,7 @@ class SeqFileDropMetricsSpec extends AnyFunSuite with BeforeAndAfterAll
       val df = read(dir, "dropmalformed")
       val n = df.collect().length.toLong
       assert(n > goodPrefix && n < Rows)
-      assert(scans(df).map(_.supportsColumnar) === Seq(columnar))
+      assert(scans(df).map(_.supportsColumnar) === Seq(true))
       assert(metric(df, SeqScanMetrics.MalformedBlocksDropped) === 1L)
       assert(metric(df, SeqScanMetrics.UnreadableFilesSkipped) === 1L)
     }

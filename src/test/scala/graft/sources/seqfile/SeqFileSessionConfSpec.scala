@@ -62,7 +62,8 @@ class SeqFileSessionConfSpec extends AnyFunSuite with BeforeAndAfterAll
       Map("path" -> dir).asJava)
     assert(table.properties().asScala.get("origin") === Some("session"))
 
-    // full row scan: the row reader under the scan's broadcast conf
+    // full row scan: the factory's row view over the columnar reader,
+    // under the scan's broadcast conf
     val opts = new CaseInsensitiveStringMap(java.util.Collections.emptyMap())
     val scan = new SeqFileScanBuilder(df.schema, Seq(dir), opts).build()
       .asInstanceOf[SeqFileScan]
