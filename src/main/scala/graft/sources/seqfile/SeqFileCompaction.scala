@@ -2,12 +2,11 @@ package graft.sources.seqfile
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import graft.core.seqfile.{SeqFileFormatException, ZoneMap}
+import graft.core.seqfile.ZoneMap
 
 /** Small-files compaction for seqfile directories — the maintenance job a
   * streaming sink's output needs at scale: a sink committing one file per
@@ -24,57 +23,22 @@ import graft.core.seqfile.{SeqFileFormatException, ZoneMap}
   *     temp dir, then move the parts (+ zone-map sidecars) into the
   *     directory — invisible until manifested;
   *  3. atomically publish a `compact-<seq>` manifest listing the new files
-  *     and naming every manifest file it absorbs — from this rename on,
-  *     readers see exactly the compacted set plus any epochs committed
-  *     after the snapshot (a live sink keeps appending throughout);
+  *     and naming every manifest it absorbs (epoch, batch and earlier
+  *     compaction manifests alike) — from this rename on, readers see
+  *     exactly the compacted set plus any epoch or batch manifest committed
+  *     after the snapshot (a live sink or a batch append keeps going);
   *  4. delete absorbed manifests and unreferenced data files. A crash
   *     before 3 leaves only invisible garbage (cleaned by the next run);
   *     a crash during 4 leaves absorbed manifests that readers already
   *     ignore and files the next compaction deletes — self-healing, never
   *     duplicates.
   *
+  * The manifest names, formats and read rule live in `SeqManifest`.
   * Assumes one compaction job at a time per directory (standard for lake
   * maintenance without a lock service) and a leaf directory (run once per
   * partition directory of a partitioned lake).
   */
 object SeqFileCompaction {
-
-  val ManifestHeader = "graft.compaction 1"
-
-  /** Parse a compaction manifest: (absorbed manifest names, data file
-    * names). */
-  def parseManifest(content: String): (Set[String], Set[String]) = {
-    val lines = content.split('\n').map(_.trim).filter(_.nonEmpty)
-    if (lines.isEmpty || lines.head != ManifestHeader)
-      throw new SeqFileFormatException("not a graft.compaction v1 manifest")
-    val absorbed = lines.collect { case l if l.startsWith("absorb ") =>
-      l.substring("absorb ".length) }.toSet
-    val files = lines.collect { case l if l.startsWith("file ") =>
-      l.substring("file ".length) }.toSet
-    (absorbed, files)
-  }
-
-  def renderManifest(absorbed: Seq[String], files: Seq[String]): String =
-    (ManifestHeader +:
-      (absorbed.sorted.map("absorb " + _) ++ files.sorted.map("file " + _)))
-      .mkString("", "\n", "\n")
-
-  private def atomicWrite(fs: FileSystem, conf: Configuration, target: Path,
-                          content: String): Unit = {
-    val tmp = new Path(target.getParent, s".${target.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(target.toUri, conf)
-      .rename(tmp, target, Options.Rename.OVERWRITE)
-  }
-
-  private def nextCompactionSeq(manifests: Seq[String]): Long =
-    manifests.filter(_.startsWith(SeqFileDataSource.CompactionPrefix))
-      .map(_.substring(SeqFileDataSource.CompactionPrefix.length).toLong)
-      .maxOption.map(_ + 1).getOrElse(0L)
-
-  private def compactionName(seq: Long): String =
-    f"${SeqFileDataSource.CompactionPrefix}$seq%020d"
 
   /** Compact `dir` (a leaf seqfile directory). Returns the number of data
     * files after compaction. `sortByKey` range-partitions and sorts so the
@@ -87,7 +51,7 @@ object SeqFileCompaction {
     val conf = SeqFileHadoopConf.of(spark)
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
-    val metaDir = new Path(root, SeqFileDataSource.MetadataDirName)
+    val metaDir = SeqManifest.dir(root)
 
     // clean leftovers of a previously crashed run (invisible by design)
     Option(fs.globStatus(new Path(root, ".compact-tmp-*")))
@@ -103,9 +67,9 @@ object SeqFileCompaction {
           !st.getPath.getName.startsWith("."))
         .map(_.getPath.getName)
       val staging = new Path(root, s".compact-meta-${UUID.randomUUID().toString.take(8)}")
-      fs.mkdirs(staging)
-      atomicWrite(fs, conf, new Path(staging, compactionName(0L)),
-        renderManifest(Nil, current))
+      SeqManifest.writeAtomically(fs, conf,
+        new Path(staging, SeqManifest.nextCompactionName(Nil)),
+        SeqManifest.renderCompaction(Nil, current))
       if (!fs.rename(staging, metaDir)) {
         fs.delete(staging, true)
         // racing initializer — if someone else created it, proceed with it
@@ -114,38 +78,23 @@ object SeqFileCompaction {
       }
     }
 
-    // 2. snapshot: manifest names + the data files they make visible —
-    // BOTH from the same listing (see readManifestsFrom)
-    val manifestNames = Option(fs.listStatus(metaDir)).map(_.toSeq).getOrElse(Nil)
-      .filter(e => e.isFile && !e.getPath.getName.startsWith("."))
-      .map(_.getPath.getName)
-    val visible = SeqFileDataSource.readManifestsFrom(fs, metaDir, manifestNames)
-    // every file any snapshot manifest references — including files behind
-    // ABSORBED manifests a crashed cleanup left behind (invisible, but on
-    // disk until deleted here)
-    val allReferenced: Set[String] = manifestNames.flatMap { n =>
-      val in = fs.open(new Path(metaDir, n))
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      if (n.startsWith(SeqFileDataSource.CompactionPrefix))
-        parseManifest(content)._2
-      else content.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-    }.toSet
+    // 2. snapshot: manifest names, the files they make visible and every
+    // file any of them references, all from one listing
+    val snap = SeqManifest.snapshot(fs, root)
     // orphaned `compacted-*` files (crash between move and publish): ours
     // alone by construction, never referenced, safe to remove. In-flight
     // SINK files (part-e*) are deliberately left alone — their epoch
     // manifest may be about to commit.
     Option(fs.listStatus(root)).map(_.toSeq).getOrElse(Nil)
       .filter(st => st.isFile && st.getPath.getName.startsWith("compacted-")
-        && !allReferenced.contains(st.getPath.getName))
+        && !snap.referenced.contains(st.getPath.getName))
       .foreach { st =>
         fs.delete(st.getPath, false)
         val side = ZoneMap.sidecarPath(st.getPath)
         if (fs.exists(side)) fs.delete(side, false)
       }
-    if (visible.isEmpty) return 0
-    val inputPaths = visible.toSeq.sorted.map(n => new Path(root, n))
+    if (snap.visible.isEmpty) return 0
+    val inputPaths = snap.visible.toSeq.sorted.map(n => new Path(root, n))
     val totalBytes = inputPaths.map(p => fs.getFileStatus(p).getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
 
@@ -206,16 +155,16 @@ object SeqFileCompaction {
     }
 
     // 4. publish: one atomic rename flips visibility to the compacted set
-    // (epochs committed after the snapshot stay visible — not absorbed)
-    val seq = nextCompactionSeq(manifestNames)
-    atomicWrite(fs, conf, new Path(metaDir, compactionName(seq)),
-      renderManifest(manifestNames, moved))
+    // (manifests committed after the snapshot stay visible — not absorbed)
+    SeqManifest.writeAtomically(fs, conf,
+      new Path(metaDir, SeqManifest.nextCompactionName(snap.names)),
+      SeqManifest.renderCompaction(snap.names, moved))
 
     // 5. cleanup: absorbed manifests, every data file they referenced
     // (visible or stale-invisible), temp dir
-    manifestNames.foreach(n => fs.delete(new Path(metaDir, n), false))
+    snap.names.foreach(n => fs.delete(new Path(metaDir, n), false))
     val keep = moved.toSet
-    allReferenced.filterNot(keep).foreach { n =>
+    snap.referenced.filterNot(keep).foreach { n =>
       val p = new Path(root, n)
       if (fs.exists(p)) fs.delete(p, false)
       val side = ZoneMap.sidecarPath(p)

@@ -5,7 +5,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -24,7 +24,8 @@ import graft.core.seqfile._
   *        src/Data/Hadoop/SequenceFile/Types.hs:16-25, Parser.hs:53-54).
   * Write: `df.write.format("seqfile").save(path)` — version-6 BLOCK+Snappy
   *        files (the write support the reference's README promises but never
-  *        implements, reference: README.md:3-5).
+  *        implements, reference: README.md:3-5); batch and streaming share
+  *        one write path (SeqFileWrite) and one manifest (SeqManifest).
   */
 class SeqFileDataSource extends TableProvider with DataSourceRegister {
 
@@ -98,25 +99,11 @@ object SeqFileDataSource {
     all
   }
 
-  /** Streaming-sink manifest directory (FileStreamSink's metadata-log
-    * pattern): when present in a directory, only files named by a committed
-    * epoch manifest are visible to reads — files from epochs that crashed
-    * before commit are filtered out. */
-  val MetadataDirName = "_seq_metadata"
-
   /** A data file plus the hive-style partition values (`k=v` directory
     * levels, outermost first) on its path. */
   final case class PartitionedFile(status: FileStatus,
                                    partitionValues: Seq[(String, String)])
 
-  /** List data files under each path (directory, glob, or file), recursing
-    * into subdirectories and skipping hidden/_SUCCESS-style entries.
-    * `k=v`-named directory levels are collected as hive-style partition
-    * values (URL-decoded, like Spark's own file sources write them).
-    * A directory containing `_seq_metadata` is manifest-governed (it was
-    * written by our streaming sink): only manifested file names are listed.
-    * Uses the Hadoop FileSystem API so HDFS / S3 paths work unchanged on a
-    * real cluster. */
   /** Parse one directory name as a hive partition component. */
   private def partOf(dirName: String): Option[(String, String)] = {
     val i = dirName.indexOf('=')
@@ -142,6 +129,14 @@ object SeqFileDataSource {
     acc
   }
 
+  /** List data files under each path (directory, glob, or file), recursing
+    * into subdirectories and skipping hidden/_SUCCESS-style entries.
+    * `k=v`-named directory levels are collected as hive-style partition
+    * values (URL-decoded, like Spark's own file sources write them).
+    * A directory holding `_seq_metadata` is manifest-governed (a streaming
+    * sink, a compaction or a batch append into either wrote it): only the
+    * files `SeqManifest.visibleFiles` names are listed. Uses the Hadoop
+    * FileSystem API so HDFS / S3 paths work unchanged on a real cluster. */
   def listPartitionedFiles(paths: Seq[String], conf: Configuration): Seq[PartitionedFile] = {
     def expand(fs: org.apache.hadoop.fs.FileSystem, st: FileStatus,
                pvals: Seq[(String, String)]): Seq[PartitionedFile] =
@@ -149,17 +144,13 @@ object SeqFileDataSource {
         if (hidden(st.getPath.getName)) Seq.empty
         else {
           val children = fs.listStatus(st.getPath).toSeq
-          val metaDir = children.find(c =>
-            c.isDirectory && c.getPath.getName == MetadataDirName)
-          metaDir match {
-            case Some(md) =>
-              val committed = readManifests(fs, md.getPath)
-              children.filter(c => !c.isDirectory && committed(c.getPath.getName))
-                .map(PartitionedFile(_, pvals))
-            case None => children.flatMap { c =>
-              val cp = if (c.isDirectory) partOf(c.getPath.getName) else None
-              expand(fs, c, pvals ++ cp)
-            }
+          if (children.exists(c => c.isDirectory && c.getPath.getName == SeqManifest.DirName)) {
+            val committed = SeqManifest.visibleFiles(fs, st.getPath)
+            children.filter(c => !c.isDirectory && committed(c.getPath.getName))
+              .map(PartitionedFile(_, pvals))
+          } else children.flatMap { c =>
+            val cp = if (c.isDirectory) partOf(c.getPath.getName) else None
+            expand(fs, c, pvals ++ cp)
           }
         }
       } else Seq(PartitionedFile(st, pvals))
@@ -185,48 +176,6 @@ object SeqFileDataSource {
         s"inconsistent partition layout: found key sequences " +
           keySeqs.map(_.mkString("/")).mkString("[", ", ", "]"))
     keySeqs.headOption.getOrElse(Nil)
-  }
-
-  val CompactionPrefix = "compact-"
-
-  /** Committed data file names for a manifest-managed directory.
-    *
-    * Epoch manifests (streaming sink commits) are plain name-per-line
-    * files. A COMPACTION manifest (`compact-<seq>`, written by
-    * `SeqFileCompaction`) atomically supersedes the epoch manifests it
-    * absorbed: the newest compaction manifest contributes its own file
-    * list, absorbed manifests are ignored even if their deletion crashed
-    * mid-way, and epoch manifests committed AFTER the compaction snapshot
-    * (not in its absorbed list) remain visible — so a live streaming sink
-    * keeps appending through a concurrent compaction. */
-  private[seqfile] def readManifests(fs: FileSystem, metaDir: Path): Set[String] =
-    readManifestsFrom(fs, metaDir,
-      Option(fs.listStatus(metaDir)).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(e => e.isFile && !hidden(e.getPath.getName))
-        .map(_.getPath.getName))
-
-  /** Same, over an explicit snapshot of manifest names — compaction uses
-    * this so its input set and its absorbed set are the SAME snapshot (a
-    * re-list could see an epoch committed in between: its files would be
-    * compacted but its manifest not absorbed → duplicates). */
-  private[seqfile] def readManifestsFrom(fs: FileSystem, metaDir: Path,
-                                         names: Seq[String]): Set[String] = {
-    def contentOf(name: String): String = {
-      val in = fs.open(new Path(metaDir, name))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val (compactions, epochs) = names.partition(_.startsWith(CompactionPrefix))
-    compactions.sorted.lastOption match {
-      case None =>
-        epochs.flatMap(n => contentOf(n)
-          .split("\n").iterator.map(_.trim).filter(_.nonEmpty)).toSet
-      case Some(c) =>
-        val (absorbed, files) = SeqFileCompaction.parseManifest(contentOf(c))
-        val live = epochs.filterNot(absorbed.contains)
-        files ++ live.flatMap(n => contentOf(n)
-          .split("\n").iterator.map(_.trim).filter(_.nonEmpty))
-    }
   }
 
   private def hidden(name: String): Boolean =

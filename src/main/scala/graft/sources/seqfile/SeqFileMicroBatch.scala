@@ -113,18 +113,9 @@ class SeqFileMicroBatchStream(tableSchema: StructType, required: StructType,
   // swallowed write would let the query commit offsets whose file binding
   // exists only in this JVM — a restart would rebuild ordering from
   // (modTime, path) and could silently duplicate or drop data.
-  private def persistLog(): Unit = {
-    val fs = logPath.getFileSystem(hadoopConf)
-    fs.mkdirs(logPath.getParent)
-    val tmp = new Path(logPath.getParent, logPath.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try log.foreach { case (p, len) => out.write(s"$p\t$len\n".getBytes("UTF-8")) }
-    finally out.close()
-    // Atomic replace: a delete-then-rename pair would lose the log entirely
-    // if the process died between the two calls.
-    org.apache.hadoop.fs.FileContext.getFileContext(logPath.toUri, hadoopConf)
-      .rename(tmp, logPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def persistLog(): Unit =
+    SeqManifest.writeAtomically(logPath.getFileSystem(hadoopConf), hadoopConf, logPath,
+      log.iterator.map { case (p, len) => s"$p\t$len\n" }.mkString)
 
   private def appendNew(): Unit = synchronized {
     // Files must APPEAR atomically (write to a temp name, rename in — the

@@ -88,7 +88,7 @@ class SeqFileCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val part = SeqFileDataSource.listFiles(Seq(extraDir), conf).head.getPath
     val lateName = "part-e00042-p00000.seq"
     fs.rename(part, new Path(root, lateName))
-    val metaDir = new Path(root, SeqFileDataSource.MetadataDirName)
+    val metaDir = new Path(root, SeqManifest.DirName)
     val out = fs.create(new Path(metaDir, f"${42L}%020d"), true)
     out.write((lateName + "\n").getBytes("UTF-8")); out.close()
 
@@ -110,7 +110,7 @@ class SeqFileCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0L until 8000L).map(i => (i, s"v$i")).toDF("key", "value")
       .repartition(4).write.format("seqfile").mode("overwrite").save(dir)
     SeqFileCompaction.compact(spark, dir, targetFileBytes = 512L * 1024 * 1024)
-    val metaDir = new Path(root, SeqFileDataSource.MetadataDirName)
+    val metaDir = new Path(root, SeqManifest.DirName)
 
     // resurrect a "crashed cleanup": stale absorbed manifest naming a stale
     // data file, both physically present
@@ -122,13 +122,13 @@ class SeqFileCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.write((staleData + "\n").getBytes("UTF-8")); out.close()
     // make the stale manifest ABSORBED by rewriting the compaction manifest
     val cName = fs.listStatus(metaDir).map(_.getPath.getName)
-      .filter(_.startsWith(SeqFileDataSource.CompactionPrefix)).max
-    val (absorbed, files) = SeqFileCompaction.parseManifest {
+      .filter(_.startsWith(SeqManifest.CompactionPrefix)).max
+    val (absorbed, files) = SeqManifest.parseCompaction {
       val in = fs.open(new Path(metaDir, cName))
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     }
     val o2 = fs.create(new Path(metaDir, cName), true)
-    o2.write(SeqFileCompaction.renderManifest(
+    o2.write(SeqManifest.renderCompaction(
       (absorbed + f"${7L}%020d").toSeq, files.toSeq).getBytes("UTF-8"))
     o2.close()
 
@@ -144,10 +144,10 @@ class SeqFileCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("compaction manifest render/parse round-trips") {
-    val m = SeqFileCompaction.renderManifest(
+    val m = SeqManifest.renderCompaction(
       Seq("00000000000000000001", "compact-00000000000000000000"),
       Seq("compacted-a.seq", "compacted-b.seq"))
-    val (a, f) = SeqFileCompaction.parseManifest(m)
+    val (a, f) = SeqManifest.parseCompaction(m)
     assert(a === Set("00000000000000000001", "compact-00000000000000000000"))
     assert(f === Set("compacted-a.seq", "compacted-b.seq"))
   }
