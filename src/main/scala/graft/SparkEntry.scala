@@ -52,10 +52,11 @@ object SparkEntry {
     * see SparkEntryOracles.frozenScan). Partitions older than a day are
     * GC'd at freeze time, bounding the root across rounds without ever
     * touching a frame a concurrent same-round process could be reading.
-    * Returns the RELOADED frame so the gate serves from exactly the bytes
-    * the oracle will read (parquet doubles round-trip exactly). Not
-    * cleaned on exit: the oracle runs after this JVM is gone; the frames
-    * are m·ks/C rows. */
+    * Returns its INPUT frame, not a read-back of the file: every freeze
+    * input is a driver-local trained frame or a parquet-backed load, so it
+    * holds the values the oracle will read (parquet doubles round-trip
+    * exactly). Not cleaned on exit: the oracle runs after this JVM is
+    * gone; the frames are m·ks/C rows. */
   private[graft] val frozenRoot = "/tmp/graft_frozen"
 
   /** (row count, content token) of an embeddings corpus in ONE aggregate

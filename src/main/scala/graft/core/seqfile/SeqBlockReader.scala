@@ -30,7 +30,7 @@ final class SeqBlockReader(
     end: Long,
     decodeKey: Boolean = true,
     decodeValue: Boolean = true,
-    plannedOffsets: Option[Array[Long]] = None)
+    blockOffsets: Option[Array[Long]] = None)
   extends SeqStream {
 
   private val in = new SeqInput(input)
@@ -39,7 +39,7 @@ final class SeqBlockReader(
   // Zone-map path: exact block offsets were planned ahead (sidecar), so no
   // sync scanning and non-qualifying blocks are never read. Offsets remain
   // verified by the sync-marker check at each seek.
-  private val planned: Array[Long] = plannedOffsets.orNull
+  private val planned: Array[Long] = blockOffsets.orNull
   private var plannedIdx = 0
   private var nextPos: Long = {
     if (planned != null) { if (planned.isEmpty) -1L else planned(0) }

@@ -10,16 +10,16 @@ trait SeqStream extends Iterator[DecodedBlock] with java.io.Closeable {
 }
 
 object SeqStream {
-  /** Reader for a byte range of any supported layout. `plannedOffsets`
+  /** Reader for a byte range of any supported layout. `blockOffsets`
     * (zone-map pruning; BLOCK layout only) bypasses sync scanning and reads
     * exactly the given block offsets. */
   def openRange(input: SeekableInput, header: SeqHeader, start: Long, end: Long,
                 decodeKey: Boolean = true, decodeValue: Boolean = true,
-                plannedOffsets: Option[Array[Long]] = None): SeqStream =
+                blockOffsets: Option[Array[Long]] = None): SeqStream =
     header.compression match {
       case SeqCompression.Block =>
         new SeqBlockReader(input, header, start, end, decodeKey, decodeValue,
-          plannedOffsets)
+          blockOffsets)
       case _ =>
         new SeqRecordReader(input, header, start, end, decodeKey, decodeValue)
     }

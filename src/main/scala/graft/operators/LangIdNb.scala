@@ -222,13 +222,16 @@ object LangIdNb {
         greatest(length(col("t")) - 2, lit(0)).cast("long").as("n"),
         explode_outer(trigramsOf(col("t"))).as("g"))
       .join(broadcast(model.weights), Seq("g"), "left")
-    val msCols = langRows.map { case (l, _, _) =>
-      sum(when(col("lang") === lit(l), col("wd"))).as(s"__ms_$l") }
+    // columns are named by the language's index, never by its label: a
+    // label such as `zh.Hant` would not resolve as a column name
+    val msCols = langRows.indices.map { i =>
+      sum(when(col("lang") === lit(langRows(i)._1), col("wd"))).as(s"__ms_$i") }
     val agg = grams.groupBy(col("__id"))
       .agg(max(col("n")).as("n"), msCols: _*)
-    val winner = least(langRows.map { case (l, prior, dflt) =>
+    val winner = least(langRows.indices.map { i =>
+      val (l, prior, dflt) = langRows(i)
       struct((-(lit(prior) + col("n") * lit(dflt)
-          + coalesce(col(s"__ms_$l"), lit(0.0)))).as("negs"),
+          + coalesce(col(s"__ms_$i"), lit(0.0)))).as("negs"),
         lit(l).as("lang"))
     }: _*)
     agg.select(col("__id"), winner.as("w"))

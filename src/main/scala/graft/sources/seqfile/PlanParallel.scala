@@ -2,8 +2,9 @@ package graft.sources.seqfile
 
 /** Bounded-parallelism, order-preserving map for driver-side planning work.
   *
-  * Agg and top-N pushdown read one ~100-byte zone-map sidecar (plus the
-  * file header) per data file at PLANNING time. Done serially that is
+  * The scan's block planner and both pushdowns read each data file's
+  * zone-map sidecar (plus the file header) once per query, at PLANNING
+  * time (ZoneMapPruning.sidecars); tasks read none. Done serially that is
   * O(files) round-trips of driver I/O — fine at thousands of files, minutes
   * at a million-file lake. These reads are independent and I/O-bound, so a
   * fixed thread pool turns planning into O(files / parallelism) wall-clock

@@ -1,6 +1,5 @@
 package graft.sources.seqfile
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
@@ -74,11 +73,11 @@ object SeqFileAggPushdown {
     * None when any file lacks a valid sidecar with the needed stats (caller
     * then declines the pushdown); Some(null) for an empty table, which
     * emits no partial row. */
-  def partialRow(files: Seq[SeqFileDataSource.PartitionedFile], specs: Seq[Spec],
-                 tableSchema: StructType, conf: Configuration)
-      : Option[InternalRow] = {
-    if (files.isEmpty) return Some(null)
-    val entries = ZoneMapPruning.sidecars(files, conf).getOrElse(return None).flatten
+  def partialRow(sidecars: Seq[Option[ZoneMapPruning.Sidecar]], specs: Seq[Spec],
+                 tableSchema: StructType): Option[InternalRow] = {
+    if (sidecars.isEmpty) return Some(null)
+    if (sidecars.exists(_.isEmpty)) return None
+    val entries = sidecars.flatMap(_.get.entries)
     val cols = specs.collect { case MinOf(c) => c; case MaxOf(c) => c }.distinct
     var count = 0L
     val range = scala.collection.mutable.Map.empty[String, (ZoneKey, ZoneKey)]

@@ -88,10 +88,11 @@ final class SeqFileConstantStringVector(value: UTF8String)
   * ColumnarBatch per record block (the reference's `Stream (RecordBlock k
   * v)` pull model, batch-at-a-time). It parses the file's header (one small
   * read), validates it against the query schema (reference: Parser.hs:84-91
-  * fail-fast), plans the blocks the zone map and Bloom keep, then streams
-  * the blocks in the split's byte range under the malformed-record mode (see
-  * ReadMode), counting what PERMISSIVE and DROPMALFORMED drop. Hive-
-  * partition columns ride along as constant vectors. */
+  * fail-fast), then decodes the blocks the driver planned for the split
+  * (`SeqFilePartition.fixedOffsets`), or every block in its byte range when
+  * none were planned, under the malformed-record mode (see ReadMode),
+  * counting what PERMISSIVE and DROPMALFORMED drop. Hive-partition columns
+  * ride along as constant vectors. */
 class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: StructType,
                                      required: StructType, mode: String,
                                      conf: org.apache.hadoop.conf.Configuration =
@@ -115,7 +116,6 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
   }
 
   private val input = new HadoopSeekableInput(new Path(part.path), conf)
-  private var planned: Option[ZoneMapPruning.PlannedBlocks] = None
   private var malformedBlocks = 0L
   private var unreadableFiles = 0L
   // Header parse + FULL-schema validation (the reference fails the whole
@@ -130,16 +130,9 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
       SeqFileSchema.validate(tableSchema, header, part.path)
       val needKey = required.fieldNames.exists(_.equalsIgnoreCase("key"))
       val needValue = required.fieldNames.exists(_.equalsIgnoreCase("value"))
-      planned = part.fixedOffsets match {
-        // TopN pushdown planned the exact blocks already
-        case Some(offs) =>
-          Some(ZoneMapPruning.PlannedBlocks(offs.toArray, 0L))
-        case None => ZoneMapPruning.plannedOffsets(conf,
-          part.path, header, input.length, part.start, part.end, part.keyFilters)
-      }
       SeqStream.openRange(input, header, part.start, part.end,
         decodeKey = needKey, decodeValue = needValue,
-        plannedOffsets = planned.map(_.offsets))
+        blockOffsets = part.fixedOffsets.map(_.toArray))
     } catch {
       case scala.util.control.NonFatal(e) =>
         input.close()
@@ -184,7 +177,7 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    SeqScanMetrics.taskValues(planned, malformedBlocks, unreadableFiles)
+    SeqScanMetrics.taskValues(malformedBlocks, unreadableFiles)
 
   override def close(): Unit = if (blocks != null) blocks.close()
 }

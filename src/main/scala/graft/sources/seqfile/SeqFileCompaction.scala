@@ -51,32 +51,14 @@ object SeqFileCompaction {
     val conf = SeqFileHadoopConf.of(spark)
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
-    val metaDir = SeqManifest.dir(root)
 
     // clean leftovers of a previously crashed run (invisible by design)
     Option(fs.globStatus(new Path(root, ".compact-tmp-*")))
       .foreach(_.foreach(st => fs.delete(st.getPath, true)))
 
-    // 1. ensure manifest management. For a plain directory, build the
-    // metadata dir ASIDE with a baseline compaction manifest listing the
-    // current files, then atomically rename it into place — readers switch
-    // from "all files" to "exactly these files" with no window of nothing.
-    if (!fs.exists(metaDir)) {
-      val current = Option(fs.listStatus(root)).map(_.toSeq).getOrElse(Nil)
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map(_.getPath.getName)
-      val staging = new Path(root, s".compact-meta-${UUID.randomUUID().toString.take(8)}")
-      SeqManifest.writeAtomically(fs, conf,
-        new Path(staging, SeqManifest.nextCompactionName(Nil)),
-        SeqManifest.renderCompaction(Nil, current))
-      if (!fs.rename(staging, metaDir)) {
-        fs.delete(staging, true)
-        // racing initializer — if someone else created it, proceed with it
-        if (!fs.exists(metaDir))
-          throw new java.io.IOException(s"cannot create $metaDir")
-      }
-    }
+    // 1. ensure manifest management (a plain directory gets a baseline
+    // manifest of its current files, see SeqManifest.govern)
+    SeqManifest.govern(fs, conf, root)
 
     // 2. snapshot: manifest names, the files they make visible and every
     // file any of them references, all from one listing
@@ -157,12 +139,12 @@ object SeqFileCompaction {
     // 4. publish: one atomic rename flips visibility to the compacted set
     // (manifests committed after the snapshot stay visible — not absorbed)
     SeqManifest.writeAtomically(fs, conf,
-      new Path(metaDir, SeqManifest.nextCompactionName(snap.names)),
+      new Path(SeqManifest.dir(root), SeqManifest.nextCompactionName(snap.names)),
       SeqManifest.renderCompaction(snap.names, moved))
 
     // 5. cleanup: absorbed manifests, every data file they referenced
     // (visible or stale-invisible), temp dir
-    snap.names.foreach(n => fs.delete(new Path(metaDir, n), false))
+    snap.names.foreach(n => fs.delete(new Path(SeqManifest.dir(root), n), false))
     val keep = moved.toSet
     snap.referenced.filterNot(keep).foreach { n =>
       val p = new Path(root, n)

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -27,12 +28,16 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
 
   private var required: StructType = tableSchema
   private var partFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
+  private var dataFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var aggScan: Option[SeqFileAggScan] = None
 
-  /** The table's files, listed once per query on first use and shared by
-    * both pushdowns and the scan. */
+  /** The table's files under the static partition filters, and their
+    * sidecars: each listed or read once per query, on first use, and shared
+    * by both pushdowns and the scan. Spark pushes filters before aggregates
+    * and top-N, so the first use sees the final partition filters. */
   private lazy val files = SeqFileDataSource.listPartitionedFiles(paths, hadoopConf)
+    .filter(PartitionFilters.keep(partFilters.toSeq, _))
+  private lazy val sidecars = ZoneMapPruning.sidecars(files, hadoopConf)
 
   private val partCols: Set[String] =
     tableSchema.fieldNames.filterNot(n =>
@@ -47,35 +52,34 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     partFilters = filters.filter(f =>
       f.references.forall(r => partCols.contains(r.toLowerCase))
         && PartitionFilters.supported(f))
-    // key/value predicates drive zone-map block skipping in the readers
-    keyFilters = filters.filter(ZoneMapPruning.usableAny)
+    // key/value predicates drive the scan's zone-map block planning
+    dataFilters = filters.filter(ZoneMapPruning.usableAny)
     // ALL filters stay residual: Spark re-evaluates them on surviving rows,
     // so correctness never depends on the pruning logic.
     filters
   }
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    partFilters ++ keyFilters
+    partFilters ++ dataFilters
 
   /** ORDER BY key/value LIMIT n: zone maps select a provably sufficient
     * block subset per file (see SeqFileTopNPushdown) — partially pushed,
     * Spark's TakeOrdered still runs over the emitted superset. Offered only
     * with no filters and full sidecar coverage. */
-  private var topNPlan: Option[Seq[(SeqFileDataSource.PartitionedFile, Seq[Long])]] = None
+  private var topN: Option[Seq[Seq[Long]]] = None
 
   override def isPartiallyPushed(): Boolean = true
 
   override def pushTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       limit: Int): Boolean = {
-    if (partFilters.nonEmpty || keyFilters.nonEmpty || aggScan.nonEmpty)
+    if (partFilters.nonEmpty || dataFilters.nonEmpty || aggScan.nonEmpty)
       return false
     SeqFileTopNPushdown.orderFor(orders) match {
       case Some(key) if tableSchema.fields.exists(f =>
           f.name.equalsIgnoreCase(key.col) && f.dataType != NullType) =>
-        topNPlan = SeqFileTopNPushdown.planFiles(files, key, limit, hadoopConf)
-        if (topNPlan.nonEmpty) SeqFileTopNPushdown.pushes.increment()
-        topNPlan.nonEmpty
+        topN = SeqFileTopNPushdown.planFiles(sidecars, key, limit)
+        topN.nonEmpty
       case _ => false
     }
   }
@@ -92,11 +96,11 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     // Spark only pushes aggregates below fully-consumed filters, and ours
     // all stay residual — but keep the explicit guard for safety
-    if (partFilters.nonEmpty || keyFilters.nonEmpty) return false
+    if (partFilters.nonEmpty || dataFilters.nonEmpty) return false
     SeqFileAggPushdown.specsFor(agg, tableSchema) match {
       case Some(specs) if specs.nonEmpty =>
         val out = SeqFileAggPushdown.schemaFor(specs, tableSchema)
-        aggScan = SeqFileAggPushdown.partialRow(files, specs, tableSchema, hadoopConf)
+        aggScan = SeqFileAggPushdown.partialRow(sidecars, specs, tableSchema)
           .map(new SeqFileAggScan(out, _,
             s"seqfile agg-pushdown paths=${paths.mkString(",")} " +
               s"aggs=${specs.mkString(",")}"))
@@ -121,12 +125,11 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     val maxFilesPerTrigger = positive("maxFilesPerTrigger", _.toInt)
     val maxBytesPerTrigger = positive("maxBytesPerTrigger", _.toLong)
     aggScan.getOrElse(
-      new SeqFileScan(tableSchema, required, paths, files,
+      new SeqFileScan(tableSchema, required, paths, files, sidecars,
         maxSplitBytes = maxSplitBytes,
         mode = ReadMode.parse(Option(options.get("mode")).getOrElse("FAILFAST")),
-        partitionFilters = partFilters,
-        keyFilters = keyFilters,
-        topNPlan = topNPlan,
+        dataFilters = dataFilters.toSeq,
+        topN = topN,
         maxFilesPerTrigger = maxFilesPerTrigger,
         maxBytesPerTrigger = maxBytesPerTrigger,
         hadoopConf = hadoopConf))
@@ -201,24 +204,22 @@ object SeqFileScan {
 }
 
 /** The batch and micro-batch scan of a seqfile table. `files` is the
-  * builder's listing of `paths`, taken on first use. */
+  * builder's listing of `paths` under the static partition filters and
+  * `sidecars` their sidecars, in the same order; both are taken on first
+  * use, and an unfiltered scan without top-N never reads a sidecar. */
 class SeqFileScan(tableSchema: StructType, required: StructType,
                   paths: Seq[String], files: => Seq[SeqFileDataSource.PartitionedFile],
+                  sidecars: => Seq[Option[ZoneMapPruning.Sidecar]],
                   maxSplitBytes: Long,
                   mode: String = ReadMode.FailFast,
-                  partitionFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-                  keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-                  topNPlan: Option[Seq[(SeqFileDataSource.PartitionedFile, Seq[Long])]] = None,
+                  dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
+                  topN: Option[Seq[Seq[Long]]] = None,
                   maxFilesPerTrigger: Option[Int] = None,
                   maxBytesPerTrigger: Option[Long] = None,
                   hadoopConf: Configuration)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeFiltering
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
-
-  /** The listing under the static partition filters, computed once and read
-    * by planning, statistics and partitioning alike. */
-  private lazy val staticFiles = files.filter(PartitionFilters.keep(partitionFilters.toSeq, _))
 
   /** Storage-partitioned execution: a hive-partitioned lake reports
     * KeyGroupedPartitioning over its partition columns, so (with
@@ -248,13 +249,13 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
   /** Dynamic pruning: Spark may call filter() AFTER planning, with runtime
     * filters derived from a joined dimension (e.g. the join keys that
     * survived the dim's WHERE). Partition-column filters skip whole files;
-    * key/value filters feed zone-map BLOCK skipping in the readers (runtime
+    * key/value filters join the pushed ones in block planning (runtime
     * data skipping — the seqfile analog of DPP on a fact table joined by
     * key). Both compose with the static pushed filters and only ever SKIP
     * data; rows are still verified by the residual join/filter, so an
     * over-broad runtime filter can't break correctness. */
-  private var runtimeFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var runtimeDataFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
+  private var runtimeFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil
+  private var runtimeDataFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil
 
   private def isDataCol(n: String): Boolean =
     n.equalsIgnoreCase("key") || n.equalsIgnoreCase("value")
@@ -266,13 +267,14 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     required.fieldNames
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
 
-  override def filter(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
+  override def filter(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = synchronized {
     // partition filters must reference ONLY partition columns — a filter on
     // `key` would evaluate as non-matching against partition values and
     // mis-prune whole files
-    runtimeFilters = filters.filter(f =>
+    runtimeFilters = filters.toSeq.filter(f =>
       f.references.forall(r => !isDataCol(r)) && PartitionFilters.supported(f))
-    runtimeDataFilters = filters.filter(ZoneMapPruning.usableAny)
+    runtimeDataFilters = filters.toSeq.filter(ZoneMapPruning.usableAny)
+    plan = None
   }
 
   /** Size estimate so Catalyst's join planning can broadcast small seqfile
@@ -282,7 +284,7 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     // partition-filter-aware: a scan of one partition out of hundreds
     // reports that partition's bytes, keeping it broadcast-eligible
     private val diskBytes =
-      try staticFiles.map(_.status.getLen).sum
+      try files.map(_.status.getLen).sum
       catch { case _: Exception => -1L }
     override def sizeInBytes(): java.util.OptionalLong =
       if (diskBytes < 0) java.util.OptionalLong.empty()
@@ -306,23 +308,54 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     new SeqFileMicroBatchStream(tableSchema, required, paths, maxSplitBytes, mode,
       checkpointLocation, maxFilesPerTrigger, maxBytesPerTrigger, hadoopConf)
 
-  /** Byte-range splits of the files that survive the static and runtime
-    * partition filters (see SeqFilePartition.split). A TopN pushdown instead
-    * plans one partition per file with an explicit block list (the
-    * selection already read every sidecar at planning). */
-  override def planInputPartitions(): Array[InputPartition] = topNPlan match {
-    case Some(plan) =>
-      plan.map { case (pf, offs) =>
-        SeqFilePartition(pf.status.getPath.toString, 0L,
-          pf.status.getLen, pf.partitionValues,
-          fixedOffsets = Some(offs)): InputPartition
-      }.toArray
-    case None =>
-      val dataFilters = (keyFilters ++ runtimeDataFilters).toSeq
-      staticFiles.filter(PartitionFilters.keep(runtimeFilters.toSeq, _)).flatMap { pf =>
-        SeqFilePartition.split(pf.status.getPath.toString, pf.status.getLen,
-          pf.partitionValues, maxSplitBytes, dataFilters)
-      }.toArray
+  /** The plan for the current runtime filters: Spark and
+    * `outputPartitioning()` each ask for it, and `filter()` clears it. */
+  private var plan: Option[(Array[InputPartition], Array[CustomTaskMetric])] = None
+
+  private def planned = synchronized {
+    if (plan.isEmpty) plan = Some(planBlocks())
+    plan.get
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = planned._1
+
+  /** The zone-map counts of the plan, so `executedPlan` metrics carry them
+    * although no task prunes. */
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = planned._2
+
+  /** The connector's one block planner. Per file, the blocks a query reads:
+    * top-N's selection, or, with pushed or runtime key/value filters, the
+    * blocks whose zone map and Bloom filter admit them all; a file without
+    * either (or without a usable sidecar) is read whole. Each byte-range
+    * split of a surviving file (SeqFilePartition.split) gets the planned
+    * blocks it owns, those whose offset lies in its [start, end) — the
+    * reader's own split rule — and a split that owns none gets no partition,
+    * so a Bloom miss runs no task. */
+  private def planBlocks(): (Array[InputPartition], Array[CustomTaskMetric]) = {
+    val filters = dataFilters ++ runtimeDataFilters
+    // per file: the offsets to read and the sidecar's block count
+    val blocks: Seq[Option[(Seq[Long], Int)]] = topN match {
+      case Some(selected) =>
+        sidecars.zip(selected).map { case (sc, offs) => sc.map(s => (offs, s.entries.size)) }
+      case None if filters.nonEmpty =>
+        sidecars.map(_.map(s => (ZoneMapPruning.surviving(s, filters), s.entries.size)))
+      case None => files.map(_ => None)
+    }
+    var read, skipped = 0L
+    val parts = files.zip(blocks).filter(fb => PartitionFilters.keep(runtimeFilters, fb._1))
+      .flatMap { case (pf, sel) =>
+        val splits = SeqFilePartition.split(pf.status.getPath.toString, pf.status.getLen,
+          pf.partitionValues, maxSplitBytes)
+        sel.fold(splits) { case (offs, total) =>
+          read += offs.size
+          skipped += total - offs.size
+          splits.flatMap { s =>
+            val owned = offs.filter(o => o >= s.start && o < s.end)
+            if (owned.isEmpty) None else Some(s.copy(fixedOffsets = Some(owned)))
+          }
+        }
+      }
+    (parts.toArray, SeqScanMetrics.driverValues(read, skipped))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -334,9 +367,11 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     SeqScanMetrics.supported
 }
 
+/** One task's byte range of a file. `fixedOffsets` are the blocks the
+  * scan's planner chose in that range (all of them start in [start, end));
+  * without them the reader streams every block the range owns. */
 case class SeqFilePartition(path: String, start: Long, end: Long,
                             partValues: Seq[(String, String)] = Nil,
-                            keyFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
                             fixedOffsets: Option[Seq[Long]] = None)
   extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
   /** Hive-partition values as the partition key (only consulted when the
@@ -354,12 +389,11 @@ object SeqFilePartition {
     * yields ~800k splits of 128 MiB — Spark's scheduler handles that; tune
     * `maxSplitBytes` upward for very large clusters. */
   def split(path: String, len: Long, partValues: Seq[(String, String)],
-            maxSplitBytes: Long,
-            keyFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil): Seq[SeqFilePartition] = {
+            maxSplitBytes: Long): Seq[SeqFilePartition] = {
     val n = math.max(1L, (len + maxSplitBytes - 1) / maxSplitBytes)
     (0L until n).map { i =>
       SeqFilePartition(path, i * maxSplitBytes, math.min((i + 1) * maxSplitBytes, len),
-        partValues, keyFilters)
+        partValues)
     }
   }
 }

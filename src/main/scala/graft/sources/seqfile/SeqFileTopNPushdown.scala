@@ -1,6 +1,5 @@
 package graft.sources.seqfile
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder}
 
 import graft.core.seqfile.{ZoneEntry, ZoneKey}
@@ -24,9 +23,6 @@ import graft.core.seqfile.{ZoneEntry, ZoneKey}
   * below residual filters, and a filter would invalidate the rule: the
   * filtered top n may live in pruned blocks). */
 object SeqFileTopNPushdown {
-
-  /** Accepted-pushdown counter (spec/debug instrumentation). */
-  val pushes = new java.util.concurrent.atomic.LongAdder
 
   final case class Key(col: String, descending: Boolean)
 
@@ -86,14 +82,12 @@ object SeqFileTopNPushdown {
     Some(selected.result().sorted)
   }
 
-  /** Per-file planned offsets for the whole table, or None when any file
-    * can't participate (missing/stale sidecar, non-BLOCK layout, missing
-    * column stats). */
-  def planFiles(files: Seq[SeqFileDataSource.PartitionedFile], key: Key, n: Int,
-                conf: Configuration)
-      : Option[Seq[(SeqFileDataSource.PartitionedFile, Seq[Long])]] =
-    ZoneMapPruning.sidecars(files, conf).flatMap { perFile =>
-      val offsets = perFile.map(selectBlocks(_, key, n))
-      if (offsets.exists(_.isEmpty)) None else Some(files.zip(offsets.map(_.get)))
-    }
+  /** Per-file selected offsets for the whole table, in the order of
+    * `sidecars`, or None when any file can't participate (missing/stale
+    * sidecar, non-BLOCK layout, missing column stats). */
+  def planFiles(sidecars: Seq[Option[ZoneMapPruning.Sidecar]], key: Key, n: Int)
+      : Option[Seq[Seq[Long]]] = {
+    val offsets = sidecars.map(_.flatMap(sc => selectBlocks(sc.entries, key, n)))
+    if (offsets.exists(_.isEmpty)) None else Some(offsets.map(_.get))
+  }
 }

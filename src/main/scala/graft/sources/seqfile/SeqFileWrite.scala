@@ -412,8 +412,9 @@ class SeqFileDataWriter(schema: StructType, dir: String, partitionId: Int, taskI
         // BEFORE its data file becomes visible: its first-ever file would
         // otherwise be readable between this rename and the epoch commit
         // that publishes its manifest (a crashed attempt's orphan would
-        // stay visible forever). mkdirs is idempotent.
-        fs.mkdirs(SeqManifest.dir(leafDir))
+        // stay visible forever). The baseline manifest keeps the files
+        // already in a plain leaf visible.
+        SeqManifest.govern(fs, conf, leafDir)
         // Epoch replay: the deterministic final name may exist from a prior
         // attempt of the same epoch — replace it, don't duplicate.
         if (fs.exists(finalPath)) fs.delete(finalPath, false)

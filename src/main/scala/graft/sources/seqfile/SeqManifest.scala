@@ -37,6 +37,32 @@ object SeqManifest {
 
   def governs(fs: FileSystem, root: Path): Boolean = fs.exists(dir(root))
 
+  /** Make `root` manifest-governed, keeping the data already in it visible:
+    * a baseline compaction manifest naming the directory's current files is
+    * built in a staging directory, which is then renamed into place, so
+    * readers switch from "all files" to "exactly these files" with no window
+    * of nothing. A no-op when `root` is governed already; when a concurrent
+    * caller wins the rename, its baseline stands. Compaction and every sink
+    * leaf call this before their first file is renamed in. */
+  def govern(fs: FileSystem, conf: Configuration, root: Path): Unit = {
+    val md = dir(root)
+    if (fs.exists(md)) return
+    val current = Option(fs.listStatus(root)).map(_.toSeq).getOrElse(Nil)
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath.getName)
+    val staging = new Path(root, s".seq-meta-${UUID.randomUUID().toString.take(8)}")
+    writeAtomically(fs, conf, new Path(staging, nextCompactionName(Nil)),
+      renderCompaction(Nil, current))
+    if (!fs.rename(staging, md)) {
+      fs.delete(staging, true)
+      if (!fs.exists(md)) throw new java.io.IOException(s"cannot create $md")
+    }
+    // a local or HDFS rename onto an existing directory moves the staging
+    // directory inside it: a concurrent caller won, and its baseline stands
+    fs.delete(new Path(md, staging.getName), true)
+  }
+
   def epochName(epoch: Long): String = f"$epoch%020d"
 
   /** Unique per batch job; never numeric and never a compaction name. */

@@ -3,25 +3,20 @@ package graft.sources.seqfile
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.sources._
 
-import graft.core.seqfile.{KeyBloom, SeqCompression, SeqHeader, WritableType, ZoneEntry, ZoneKey, ZoneMap}
+import graft.core.seqfile.{KeyBloom, SeqCompression, WritableType, ZoneEntry, ZoneKey, ZoneMap}
 
-/** Executor-side zone-map pruning: evaluate pushed key predicates against a
-  * part file's per-block [min, max] sidecar and return the exact offsets of
-  * the blocks that might match. Everything here is conservative — a filter
-  * shape or literal we can't map to the key's order returns "might match",
-  * and Spark re-evaluates all filters on surviving rows regardless — so
-  * pruning can only ever skip blocks that provably contain no match.
+/** Zone-map and Bloom pruning, planned on the driver: evaluate a query's
+  * key and value predicates against each file's per-block sidecar and keep
+  * the offsets of the blocks that might match. `SeqFileScan` is the only
+  * caller; tasks decode exactly the blocks it hands them. Everything here is
+  * conservative — a filter shape or literal we can't map to the column's
+  * order returns "might match", and Spark re-evaluates all filters on
+  * surviving rows regardless — so pruning can only ever skip blocks that
+  * provably contain no match.
   */
 object ZoneMapPruning {
-
-  /** Cross-cutting counters for specs and local debugging; the production
-    * surface for the same numbers is the scan's DSv2 custom task metrics
-    * (visible per-query in the Spark UI). */
-  val blocksSkipped = new java.util.concurrent.atomic.LongAdder
-  val blocksPlanned = new java.util.concurrent.atomic.LongAdder
 
   /** Is `f` usable for zone pruning against column `col` ("key"/"value"):
     * references exactly that column and only shapes mightMatch
@@ -111,65 +106,48 @@ object ZoneMapPruning {
     }
   }
 
-  /** A file's validated sidecar entries, or None when the file is not
-    * BLOCK-compressed or its sidecar is missing or stale. The one sidecar
-    * lookup behind zone pruning and both pushdowns. */
-  def sidecar(conf: Configuration, path: Path, header: SeqHeader,
-              fileLen: Long): Option[Seq[ZoneEntry]] =
-    if (header.compression != SeqCompression.Block) None
-    else ZoneMap.readValidated(conf, path, header.keyClass, header.valueClass, fileLen)
+  /** A file's validated sidecar entries, with the column types filter
+    * literals compare in. */
+  final case class Sidecar(keyType: WritableType, valueType: WritableType,
+                           entries: Seq[ZoneEntry])
 
-  /** Every listed file's sidecar entries, in listing order, or None when any
-    * file has none (an unreadable header counts as none) — what agg and
-    * top-N pushdown plan from. Read with bounded driver-side parallelism
+  /** Every listed file's sidecar, in listing order: None for a file that is
+    * not BLOCK-compressed, has an unreadable header, or whose sidecar is
+    * missing or stale. The one sidecar read of a query, shared by filter
+    * planning and both pushdowns, with bounded driver-side parallelism
     * (PlanParallel): a million-file lake plans in O(files/parallelism)
     * wall-clock instead of a serial read per file. */
   def sidecars(files: Seq[SeqFileDataSource.PartitionedFile],
-               conf: Configuration): Option[Seq[Seq[ZoneEntry]]] = {
-    val perFile = PlanParallel.mapOrdered(files) { pf =>
+               conf: Configuration): Seq[Option[Sidecar]] =
+    PlanParallel.mapOrdered(files) { pf =>
       val p = pf.status.getPath
       (try Some(SeqFileDataSource.readHeader(p, conf))
        catch { case scala.util.control.NonFatal(_) => None })
-        .flatMap(sidecar(conf, p, _, pf.status.getLen))
+        .filter(_.compression == SeqCompression.Block)
+        .flatMap(h => ZoneMap.readValidated(conf, p, h.keyClass, h.valueClass,
+          pf.status.getLen).map(Sidecar(h.keyType, h.valueType, _)))
     }
-    if (perFile.exists(_.isEmpty)) None else Some(perFile.map(_.get))
-  }
 
-  /** One split's pruning outcome: exact offsets to read + how many owned
-    * blocks the zone map proved unmatchable. */
-  final case class PlannedBlocks(offsets: Array[Long], skipped: Long)
-
-  /** Blocks of this split that survive the filters, or None when no pruning
-    * applies (no usable filters, non-BLOCK layout, missing or stale
-    * sidecar) — callers then stream the range normally. */
-  def plannedOffsets(conf: Configuration, path: String, header: SeqHeader,
-                     fileLen: Long, start: Long, end: Long,
-                     filters: Seq[Filter]): Option[PlannedBlocks] = {
+  /** Offsets of the file's blocks that survive every key/value filter: the
+    * zone map's [min, max] (absent stats keep the block) and, for key
+    * equality shapes, the block's Bloom filter. The planning entry point. */
+  def surviving(sc: Sidecar, filters: Seq[Filter]): Seq[Long] = {
     val useK = filters.filter(usable(_, "key"))
     val useV = filters.filter(usable(_, "value"))
-    if (useK.isEmpty && useV.isEmpty) return None
-    // absent stats keep the block
     def keeps(fs: Seq[Filter], e: ZoneEntry, col: String, t: WritableType): Boolean =
       bounds(e, col).forall { case (lo, hi) => fs.forall(mightMatch(_, lo, hi, t)) }
-    sidecar(conf, new Path(path), header, fileLen).map { entries =>
-      // split contract: this reader owns blocks whose escape starts in
-      // [start, end) — identical to the sync-scan discovery rule
-      val owned = entries.filter(e => e.offset >= start && e.offset < end)
-      val kept = owned.filter(e =>
-        keeps(useK, e, "key", header.keyType) &&
-          useK.forall(f => e.kbloom.forall(bloomMightMatch(f, _, header.keyType))) &&
-          keeps(useV, e, "value", header.valueType))
-      blocksPlanned.add(owned.size.toLong)
-      blocksSkipped.add((owned.size - kept.size).toLong)
-      PlannedBlocks(kept.map(_.offset).toArray, (owned.size - kept.size).toLong)
-    }
+    sc.entries.filter(e =>
+      keeps(useK, e, "key", sc.keyType) &&
+        useK.forall(f => e.kbloom.forall(bloomMightMatch(f, _, sc.keyType))) &&
+        keeps(useV, e, "value", sc.valueType)).map(_.offset)
   }
 }
 
-/** DSv2 custom metrics of the seqfile scan, summed over tasks (Spark UI,
-  * `executedPlan` metrics): zone-map effectiveness, and what PERMISSIVE and
-  * DROPMALFORMED dropped instead of failing the query. Spark instantiates
-  * each metric class by name, so every one is its own no-argument class. */
+/** DSv2 custom metrics of the seqfile scan (Spark UI, `executedPlan`
+  * metrics): zone-map effectiveness, reported once by the driver's block
+  * plan, and what PERMISSIVE and DROPMALFORMED dropped instead of failing
+  * the query, summed over tasks. Spark instantiates each metric class by
+  * name, so every one is its own no-argument class. */
 object SeqScanMetrics {
   val ZoneBlocksSkipped = "seqfileZoneBlocksSkipped"
   val ZoneBlocksRead = "seqfileZoneBlocksRead"
@@ -180,15 +158,17 @@ object SeqScanMetrics {
     Array(new SeqZoneBlocksSkippedMetric, new SeqZoneBlocksReadMetric,
       new SeqMalformedBlocksDroppedMetric, new SeqUnreadableFilesSkippedMetric)
 
-  /** One split's values; the zone-map pair only when pruning was planned. */
-  def taskValues(planned: Option[ZoneMapPruning.PlannedBlocks], malformedBlocks: Long,
-                 unreadableFiles: Long)
+  /** One split's values, reported by its task. */
+  def taskValues(malformedBlocks: Long, unreadableFiles: Long)
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    (planned.toSeq.flatMap(p => Seq(
-      SeqScanTaskMetric(ZoneBlocksSkipped, p.skipped),
-      SeqScanTaskMetric(ZoneBlocksRead, p.offsets.length.toLong))) ++ Seq(
-      SeqScanTaskMetric(MalformedBlocksDropped, malformedBlocks),
-      SeqScanTaskMetric(UnreadableFilesSkipped, unreadableFiles))).toArray
+    Array(SeqScanTaskMetric(MalformedBlocksDropped, malformedBlocks),
+      SeqScanTaskMetric(UnreadableFilesSkipped, unreadableFiles))
+
+  /** The zone-map pair of a planned scan, reported by the driver. */
+  def driverValues(read: Long, skipped: Long)
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(SeqScanTaskMetric(ZoneBlocksSkipped, skipped),
+      SeqScanTaskMetric(ZoneBlocksRead, read))
 }
 
 class SeqZoneBlocksSkippedMetric

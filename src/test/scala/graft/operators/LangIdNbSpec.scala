@@ -86,6 +86,26 @@ class LangIdNbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(w.length <= 4 * v)
   }
 
+  test("dotted language labels: predictions match the undotted run") {
+    val spark2 = spark
+    import spark2.implicits._
+    // an order-preserving relabelling, so argmax ties break the same way
+    val dotted = Map("de" -> "de.CH", "en" -> "en.US", "es" -> "es.419", "fr" -> "zh.Hant")
+    val docs = eval.zipWithIndex.map { case ((_, s), i) => (i.toLong, s) }.toDF("id", "text")
+    def run(label: String => String): Seq[(Long, String, Double)] = {
+      val m = LangIdNb.train(
+        LangIdNb.fixture.map { case (l, s) => (label(l), s) }.toDF("lang", "s"), "lang", "s")
+      LangIdNb.predict(m, docs, "id", "text").as[(Long, String, Double)]
+        .collect().sortBy(_._1).toSeq
+    }
+    val plain = run(identity)
+    val dot = run(dotted)
+    assert(dot.map(r => (r._1, r._2)) === plain.map(r => (r._1, dotted(r._2))))
+    dot.zip(plain).foreach { case (d, p) =>
+      assert(math.abs(d._3 - p._3) < 1e-3, s"score of doc ${d._1}: $d vs $p")
+    }
+  }
+
   test("trigramsOf: position-ordered multiset after normalization; short/empty safe") {
     val spark2 = spark
     import spark2.implicits._

@@ -5,19 +5,23 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 
 /** The local filesystem under a scheme of its own, `countfs:`, counting the
-  * `globStatus` calls made on each path, so a spec can see how many times a
-  * query lists a table. Registered like SessionSchemeFileSystem. */
+  * `globStatus` and `open` calls made on each path, so a spec can see how
+  * many times a query lists a table or reads a file. Registered like
+  * SessionSchemeFileSystem. */
 class CountingFileSystem extends LocalFileSystem(new CountingRawFileSystem) {
   override def getScheme: String = CountingFileSystem.Scheme
 
   override def globStatus(pathPattern: Path): Array[FileStatus] = {
-    CountingFileSystem.globs
-      .computeIfAbsent(pathPattern.toUri.getPath, _ => new AtomicInteger)
-      .incrementAndGet()
+    CountingFileSystem.bump(CountingFileSystem.globs, pathPattern)
     super.globStatus(pathPattern)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingFileSystem.bump(CountingFileSystem.opens, f)
+    super.open(f, bufferSize)
   }
 }
 
@@ -25,13 +29,22 @@ object CountingFileSystem {
   val Scheme = "countfs"
 
   private val globs = new ConcurrentHashMap[String, AtomicInteger]
+  private val opens = new ConcurrentHashMap[String, AtomicInteger]
+
+  private def bump(calls: ConcurrentHashMap[String, AtomicInteger], p: Path): Unit =
+    calls.computeIfAbsent(p.toUri.getPath, _ => new AtomicInteger).incrementAndGet()
+
+  private def count(calls: ConcurrentHashMap[String, AtomicInteger], path: String): Int =
+    Option(calls.get(new Path(path).toUri.getPath)).map(_.get).getOrElse(0)
 
   /** `globStatus` calls on `path` (a scheme-less local path) since the last
     * reset. */
-  def globCalls(path: String): Int =
-    Option(globs.get(new Path(path).toUri.getPath)).map(_.get).getOrElse(0)
+  def globCalls(path: String): Int = count(globs, path)
 
-  def reset(): Unit = globs.clear()
+  /** `open` calls on `path` (a scheme-less local path) since the last reset. */
+  def openCalls(path: String): Int = count(opens, path)
+
+  def reset(): Unit = { globs.clear(); opens.clear() }
 
   /** Register the scheme on `conf`, with the FileSystem cache off. */
   def register(conf: Configuration): Unit = {

@@ -1,0 +1,36 @@
+package graft.sources.seqfile
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
+/** What the seqfile scans of an executed query planned and reported, read
+  * from its executed plan (adaptive query stages included). */
+object ScanPlans extends AdaptiveSparkPlanHelper {
+
+  def scans(df: DataFrame): Seq[BatchScanExec] =
+    collect(df.queryExecution.executedPlan: SparkPlan) { case b: BatchScanExec => b }
+
+  /** Sum of one SQL metric over the query's scan nodes (0 when absent). */
+  def scanMetric(df: DataFrame, name: String): Long =
+    scans(df).flatMap(_.metrics.get(name)).map(_.value).sum
+
+  /** Blocks the zone map planned: read plus skipped. */
+  def blocksPlanned(df: DataFrame): Long =
+    scanMetric(df, SeqScanMetrics.ZoneBlocksRead) + scanMetric(df, SeqScanMetrics.ZoneBlocksSkipped)
+
+  def blocksSkipped(df: DataFrame): Long = scanMetric(df, SeqScanMetrics.ZoneBlocksSkipped)
+
+  /** The partitions the query's seqfile scans planned. */
+  def partitions(df: DataFrame): Seq[SeqFilePartition] =
+    scans(df).map(_.scan).collect { case s: SeqFileScan => s }
+      .flatMap(_.planInputPartitions().map(_.asInstanceOf[SeqFilePartition]))
+
+  /** Did top-N pushdown plan the scan: every partition reads only the
+    * blocks the selection kept. */
+  def topNPlanned(df: DataFrame): Boolean = {
+    val parts = partitions(df)
+    parts.nonEmpty && parts.forall(_.fixedOffsets.isDefined)
+  }
+}

@@ -79,11 +79,9 @@ class SeqBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
       dir
     }
     def lookup(dir: String, key: Long): (Long, Long, Long) = {
-      ZoneMapPruning.blocksPlanned.reset()
-      ZoneMapPruning.blocksSkipped.reset()
-      val c = spark.read.format("seqfile").load(dir)
-        .filter(col("key") === key).count()
-      (c, ZoneMapPruning.blocksPlanned.sum(), ZoneMapPruning.blocksSkipped.sum())
+      val q = spark.read.format("seqfile").load(dir).filter(col("key") === key)
+      val c = q.collect().length.toLong
+      (c, ScanPlans.blocksPlanned(q), ScanPlans.blocksSkipped(q))
     }
     val plain = writeDir(bloom = false)
     val bloomed = writeDir(bloom = true)
@@ -110,10 +108,10 @@ class SeqBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // IN probes with only absent (odd, in-range) keys also skip; mixed IN
     // finds its row
-    ZoneMapPruning.blocksSkipped.reset(); ZoneMapPruning.blocksPlanned.reset()
-    assert(spark.read.format("seqfile").load(bloomed)
-      .filter(col("key").isin(12345L, 22223L, 33331L)).count() === 0L)
-    assert(ZoneMapPruning.blocksSkipped.sum() >= ZoneMapPruning.blocksPlanned.sum() - 1)
+    val absentIn = spark.read.format("seqfile").load(bloomed)
+      .filter(col("key").isin(12345L, 22223L, 33331L))
+    assert(absentIn.collect().isEmpty)
+    assert(ScanPlans.blocksSkipped(absentIn) >= ScanPlans.blocksPlanned(absentIn) - 1)
     val hit = rows.head._1
     assert(spark.read.format("seqfile").load(bloomed)
       .filter(col("key").isin(12345L, hit)).count() === rows.count(_._1 == hit).toLong)

@@ -92,9 +92,9 @@ class SeqFileAggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(agg.as[(Long, Long, String, String, Long)].head() ===
       ((keys.min, keys.max, "v000000", f"v${n - 1}%06d", n)))
     // top-N pushdown across the same 96 files
-    SeqFileTopNPushdown.pushes.reset()
-    val top = df.orderBy(col("key").desc).limit(7).as[(Long, String)].collect()
-    assert(SeqFileTopNPushdown.pushes.sum() > 0, "pushTopN must have fired")
+    val topQ = df.orderBy(col("key").desc).limit(7)
+    val top = topQ.as[(Long, String)].collect()
+    assert(ScanPlans.topNPlanned(topQ), "pushTopN must have fired")
     val expect = (0L until n).map(i => (i * 13 % 999983L, f"v$i%06d"))
       .sortBy { case (k, v) => (-k, v) }.take(7)
     assert(top.sortBy { case (k, v) => (-k, v) }.toSeq === expect)

@@ -50,10 +50,9 @@ class SeqFileCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fs.exists(ZoneMap.sidecarPath(new Path(dir, nm))),
         s"sidecar missing for $nm")
     }
-    ZoneMapPruning.blocksSkipped.reset(); ZoneMapPruning.blocksPlanned.reset()
-    assert(spark.read.format("seqfile").load(dir)
-      .filter(col("key") === 12345L).count() === 1L)
-    assert(ZoneMapPruning.blocksSkipped.sum() > 0,
+    val lookup = spark.read.format("seqfile").load(dir).filter(col("key") === 12345L)
+    assert(lookup.collect().length === 1)
+    assert(ScanPlans.blocksSkipped(lookup) > 0,
       "compacted output must be zone-map prunable")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }

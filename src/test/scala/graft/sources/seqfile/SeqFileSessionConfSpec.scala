@@ -2,24 +2,21 @@ package graft.sources.seqfile
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.api.SequenceFiles
+import ScanPlans.scanMetric
 
 /** Every seqfile read and write path takes its Hadoop settings from the
   * session. The `sessfs:` scheme is registered only on
   * `sparkContext.hadoopConfiguration`, with its FileSystem cache disabled,
   * so any path that resolves a filesystem from a conf of its own fails with
   * "No FileSystem for scheme". */
-class SeqFileSessionConfSpec extends AnyFunSuite with BeforeAndAfterAll
-    with AdaptiveSparkPlanHelper {
+class SeqFileSessionConfSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -33,10 +30,6 @@ class SeqFileSessionConfSpec extends AnyFunSuite with BeforeAndAfterAll
     SessionSchemeFileSystem.register(spark.sparkContext.hadoopConfiguration)
 
   override def afterAll(): Unit = spark.stop()
-
-  private def scanMetric(df: DataFrame, name: String): Long =
-    collect(df.queryExecution.executedPlan: SparkPlan) { case b: BatchScanExec => b }
-      .flatMap(_.metrics.get(name)).map(_.value).sum
 
   test("session-registered filesystem reaches every seqfile read and write path") {
     import spark.implicits._
@@ -100,10 +93,10 @@ class SeqFileSessionConfSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(cnt.head().getLong(0) === n.toLong)
 
     // ORDER BY key LIMIT through top-N pushdown
-    SeqFileTopNPushdown.pushes.reset()
-    val top = df.orderBy(col("key").desc).limit(3).collect().map(_.getLong(0))
+    val topQ = df.orderBy(col("key").desc).limit(3)
+    val top = topQ.collect().map(_.getLong(0))
     assert(top.toSeq === keys.reverse.take(3))
-    assert(SeqFileTopNPushdown.pushes.sum() > 0, "pushTopN must have fired")
+    assert(ScanPlans.topNPlanned(topQ), "pushTopN must have fired")
 
     // micro-batch read
     val q = spark.readStream.format("seqfile").schema(df.schema).load(dir)

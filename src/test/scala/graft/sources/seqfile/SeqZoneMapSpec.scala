@@ -24,11 +24,6 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   import spark.implicits._
 
-  private def resetCounters(): Unit = {
-    ZoneMapPruning.blocksSkipped.reset()
-    ZoneMapPruning.blocksPlanned.reset()
-  }
-
   // ---- writer-side stats ----
 
   test("writer collects one zone entry per block with true min/max and offsets") {
@@ -56,7 +51,7 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val in = new LocalSeekableInput(tmp)
     val header = SeqHeader.parse(new SeqInput(in))
     val r = new SeqBlockReader(in, header, 0L, Files.size(tmp),
-      plannedOffsets = Some(entries.map(_.offset).toArray))
+      blockOffsets = Some(entries.map(_.offset).toArray))
     var n = 0L
     try { for (b <- r) n += b.count } finally r.close()
     assert(n === 5000L)
@@ -153,23 +148,21 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val side = ZoneMap.sidecarPath(files.head.getPath)
     assert(side.getFileSystem(new Configuration()).exists(side))
 
-    resetCounters()
-    val got = spark.read.format("seqfile").load(dir)
-      .filter(col("key") >= 99990L).collect()
+    val tail = spark.read.format("seqfile").load(dir).filter(col("key") >= 99990L)
+    val got = tail.collect()
     assert(got.length === 10)
     assert(got.map(_.getLong(0)).sorted.toSeq === (99990L until 100000L).toSeq)
-    val skipped = ZoneMapPruning.blocksSkipped.sum()
-    val plannedN = ZoneMapPruning.blocksPlanned.sum()
+    val skipped = ScanPlans.blocksSkipped(tail)
+    val plannedN = ScanPlans.blocksPlanned(tail)
     assert(plannedN > 3, s"expected several blocks, saw $plannedN")
     assert(skipped >= plannedN - 2,
       s"tail range must skip nearly all blocks (skipped=$skipped of $plannedN)")
 
     // point lookup reads at most one block
-    resetCounters()
-    val one = spark.read.format("seqfile").load(dir)
-      .filter(col("key") === 54321L).collect()
+    val point = spark.read.format("seqfile").load(dir).filter(col("key") === 54321L)
+    val one = point.collect()
     assert(one.length === 1 && one.head.getString(1) === "payload-54321")
-    assert(ZoneMapPruning.blocksPlanned.sum() - ZoneMapPruning.blocksSkipped.sum() <= 1)
+    assert(ScanPlans.blocksPlanned(point) - ScanPlans.blocksSkipped(point) <= 1)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -179,11 +172,10 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1).sortWithinPartitions("key")
       .write.format("seqfile").option("blockSize", "65536")
       .mode("overwrite").save(dir)
-    resetCounters()
-    val got = spark.read.format("seqfile").load(dir)
-      .filter(col("key").startsWith("k004999")).collect()
-    assert(got.length === 10)
-    assert(ZoneMapPruning.blocksSkipped.sum() > 0)
+    val prefix = spark.read.format("seqfile").load(dir)
+      .filter(col("key").startsWith("k004999"))
+    assert(prefix.collect().length === 10)
+    assert(ScanPlans.blocksSkipped(prefix) > 0)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -203,11 +195,9 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     ZoneMap.write(dataFile.getFileSystem(conf), dataFile,
       WritableType.LongW.javaClass, WritableType.TextW.javaClass,
       1L /* wrong */, entries)
-    resetCounters()
-    val got = spark.read.format("seqfile").load(dir)
-      .filter(col("key") >= 19990L).collect()
-    assert(got.length === 10)
-    assert(ZoneMapPruning.blocksPlanned.sum() === 0L, "stale sidecar must be ignored")
+    val q = spark.read.format("seqfile").load(dir).filter(col("key") >= 19990L)
+    assert(q.collect().length === 10)
+    assert(ScanPlans.blocksPlanned(q) === 0L, "stale sidecar must be ignored")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -235,13 +225,11 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1).sortWithinPartitions("value")
       .write.format("seqfile").option("blockSize", "65536")
       .mode("overwrite").save(dir)
-    resetCounters()
-    val got = spark.read.format("seqfile").load(dir)
-      .filter(col("value") >= 79990L).collect()
-    assert(got.length === 10)
-    val plannedN = ZoneMapPruning.blocksPlanned.sum()
+    val tail = spark.read.format("seqfile").load(dir).filter(col("value") >= 79990L)
+    assert(tail.collect().length === 10)
+    val plannedN = ScanPlans.blocksPlanned(tail)
     assert(plannedN > 3)
-    assert(ZoneMapPruning.blocksSkipped.sum() >= plannedN - 2,
+    assert(ScanPlans.blocksSkipped(tail) >= plannedN - 2,
       "value-sorted tail range must skip nearly all blocks")
     // combined: impossible key+value conjunction prunes everything the
     // value range allows, and returns no rows
@@ -265,15 +253,15 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     // learned from a broadcast dim arrive as an In filter after planning
     scan.filter(Array[Filter](In("key", Array(17L, 99999L))))
     val parts = scan.planInputPartitions()
-    resetCounters()
     val factory = scan.createReaderFactory()
     var rows = 0L
     parts.foreach { p =>
       val r = factory.createReader(p)
       try { while (r.next()) rows += 1 } finally r.close()
     }
-    val plannedN = ZoneMapPruning.blocksPlanned.sum()
-    val skipped = ZoneMapPruning.blocksSkipped.sum()
+    val metrics = scan.reportDriverMetrics().map(m => m.name() -> m.value()).toMap
+    val skipped = metrics(SeqScanMetrics.ZoneBlocksSkipped)
+    val plannedN = metrics(SeqScanMetrics.ZoneBlocksRead) + skipped
     assert(plannedN > 3)
     assert(plannedN - skipped <= 2, "two-point In must read at most 2 blocks")
     assert(rows > 0 && rows < 100000L, "reader emits only surviving blocks' rows")
