@@ -27,7 +27,13 @@ final class LocalSeekableInput(path: Path) extends SeekableInput {
 }
 
 /** Buffered cursor over a SeekableInput with the primitive readers the
-  * SequenceFile grammar needs. Tracks the absolute stream position. */
+  * SequenceFile grammar needs. Tracks the absolute stream position.
+  *
+  * Reads go forward and fetch each byte once: `readByte`/`readVLong` refill
+  * the buffer from the cursor, and `readFully` first copies whatever of its
+  * range the buffer already holds, then reads only the rest straight into
+  * the destination. So a block's vint-prefixed buffers cost one pass over
+  * the file, not a re-read of each vint's read-ahead. */
 final class SeqInput(in: SeekableInput, bufSize: Int = 1 << 16) {
   private val buf = new Array[Byte](bufSize)
   private var bufStart = 0L // absolute position of buf(0)
@@ -62,6 +68,10 @@ final class SeqInput(in: SeekableInput, bufSize: Int = 1 << 16) {
 
   def readFully(dst: Array[Byte], off: Int, len: Int): Unit = {
     var done = 0
+    if (cursor >= bufStart && cursor < bufStart + bufLen) {
+      done = math.min(len.toLong, bufStart + bufLen - cursor).toInt
+      System.arraycopy(buf, (cursor - bufStart).toInt, dst, off, done)
+    }
     while (done < len) {
       val r = in.readAt(cursor + done, dst, off + done, len - done)
       if (r < 0) throw new EOFException(s"unexpected EOF at ${cursor + done}")

@@ -188,28 +188,30 @@ object SeqFileDataSource {
   }
 }
 
-/** SeekableInput over Hadoop's FSDataInputStream (positioned reads), so the
-  * core codec runs against any Hadoop filesystem.
+/** SeekableInput over one open Hadoop `FSDataInputStream`, so the core
+  * codec runs against any Hadoop filesystem.
   *
-  * Cost on `ChecksumFileSystem` (the `file:` scheme's default
-  * `LocalFileSystem`): its positioned read opens a new checksum-verifying
-  * stream for every call — it reopens the data and `.crc` files and stats
-  * them — so each `readAt` pays an open and a stat. A JFR profile of the
-  * repository benchmark's `scan` workload (12 one-split files, local[3],
-  * 4-vCPU VM) put that at 35 % of executor CPU. A seek+read on the one
-  * open stream would avoid it, but is not done yet: a prototype raised the
-  * benchmark's `heap_live_mb` by 12.8 %, past its 0.1 bound, because that
-  * figure grows with the number of aggregate queries finishing in the fixed
-  * window (Spark's AQE pools keep one idle thread per query for 60 s), not
-  * because the reader holds more memory. The fix waits for that metric to
-  * be made independent of throughput. HDFS serves positioned reads from
-  * the open stream and does not pay this. */
+  * `readAt` reads on that stream: it seeks only when `pos` is not where the
+  * stream already is, then reads forward. A split's reads go forward (see
+  * SeqInput), so reading a split costs one open and one pass over its
+  * bytes, and on `ChecksumFileSystem` (the `file:` scheme's default
+  * `LocalFileSystem`) the stream's own checker still verifies every byte
+  * against the `.crc` file. It does not use positioned reads: on
+  * `ChecksumFileSystem` each one builds a new checker, which reopens and
+  * stats the data and `.crc` files.
+  *
+  * Like the stream, an instance is not safe for concurrent use; each reader
+  * opens its own. */
 final class HadoopSeekableInput(path: Path, conf: Configuration) extends SeekableInput {
   private val fs = path.getFileSystem(conf)
   private val stream = fs.open(path)
   val length: Long = fs.getFileStatus(path).getLen
   def readAt(pos: Long, buf: Array[Byte], off: Int, len: Int): Int =
-    if (pos >= length) -1 else stream.read(pos, buf, off, len)
+    if (pos >= length) -1
+    else {
+      if (pos != stream.getPos) stream.seek(pos)
+      stream.read(buf, off, len)
+    }
   def close(): Unit = stream.close()
 }
 

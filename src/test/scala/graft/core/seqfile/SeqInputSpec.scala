@@ -71,4 +71,47 @@ class SeqInputSpec extends AnyFunSuite {
     val in = new SeqInput(drip)
     assert(in.readVLong() === Long.MinValue)
   }
+
+  test("a block's escape, sync, count and four vint-prefixed buffers read each byte once") {
+    // the block grammar SeqBlockReader replays, with buffers both smaller
+    // and larger than SeqInput's 64 KiB buffer
+    val lens = Seq(300, 70000, 90, 200000)
+    val out = new java.io.ByteArrayOutputStream
+    val vint = new Array[Byte](9)
+    def putVInt(v: Long): Unit = out.write(vint, 0, VInt.write(vint, 0, v))
+    out.write(Array.fill[Byte](4)(-1))
+    out.write(Array.tabulate[Byte](16)(i => (i * 7).toByte))
+    putVInt(1234)
+    for ((n, b) <- lens.zipWithIndex) {
+      putVInt(n)
+      out.write(Array.tabulate[Byte](n)(i => (i * 31 + b).toByte))
+    }
+    val data = out.toByteArray
+
+    val ranges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    val recording = new MemInput(data) {
+      override def readAt(pos: Long, buf: Array[Byte], off: Int, len: Int): Int = {
+        val n = super.readAt(pos, buf, off, len)
+        if (n > 0) ranges += (pos -> (pos + n))
+        n
+      }
+    }
+    val in = new SeqInput(recording)
+    in.readFully(4)
+    in.readFully(16)
+    assert(in.readVInt() === 1234)
+    for ((n, b) <- lens.zipWithIndex) {
+      assert(in.readVInt() === n)
+      val got = in.readFully(n)
+      assert(got.indices.forall(i => got(i) == (i * 31 + b).toByte), s"buffer $b")
+    }
+    assert(in.pos === data.length)
+
+    val sorted = ranges.sortBy(_._1)
+    sorted.zip(sorted.drop(1)).foreach { case ((_, end), (start, _)) =>
+      assert(start >= end, s"reads overlap: $sorted")
+    }
+    assert(ranges.map { case (s, e) => e - s }.sum === data.length.toLong,
+      s"bytes read vs consumed: $sorted")
+  }
 }

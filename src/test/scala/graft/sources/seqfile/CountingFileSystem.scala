@@ -9,8 +9,10 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Pat
 
 /** The local filesystem under a scheme of its own, `countfs:`, counting the
   * `globStatus` and `open` calls made on each path, so a spec can see how
-  * many times a query lists a table or reads a file. Registered like
-  * SessionSchemeFileSystem. */
+  * many times a query lists a table or reads a file. Its raw filesystem
+  * (CountingRawFileSystem) counts the raw opens that the checksum layer
+  * makes, one of the data file and one of its `.crc` file per checker.
+  * Registered like SessionSchemeFileSystem. */
 class CountingFileSystem extends LocalFileSystem(new CountingRawFileSystem) {
   override def getScheme: String = CountingFileSystem.Scheme
 
@@ -30,6 +32,7 @@ object CountingFileSystem {
 
   private val globs = new ConcurrentHashMap[String, AtomicInteger]
   private val opens = new ConcurrentHashMap[String, AtomicInteger]
+  private val rawOpens = new ConcurrentHashMap[String, AtomicInteger]
 
   private def bump(calls: ConcurrentHashMap[String, AtomicInteger], p: Path): Unit =
     calls.computeIfAbsent(p.toUri.getPath, _ => new AtomicInteger).incrementAndGet()
@@ -44,7 +47,13 @@ object CountingFileSystem {
   /** `open` calls on `path` (a scheme-less local path) since the last reset. */
   def openCalls(path: String): Int = count(opens, path)
 
-  def reset(): Unit = { globs.clear(); opens.clear() }
+  /** Raw `open` calls on `path` (a scheme-less local path, data or `.crc`
+    * file) since the last reset. */
+  def rawOpenCalls(path: String): Int = count(rawOpens, path)
+
+  private[seqfile] def bumpRawOpen(p: Path): Unit = bump(rawOpens, p)
+
+  def reset(): Unit = { globs.clear(); opens.clear(); rawOpens.clear() }
 
   /** Register the scheme on `conf`, with the FileSystem cache off. */
   def register(conf: Configuration): Unit = {
@@ -56,4 +65,9 @@ object CountingFileSystem {
 class CountingRawFileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create(s"${CountingFileSystem.Scheme}:///")
   override def getScheme: String = CountingFileSystem.Scheme
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingFileSystem.bumpRawOpen(f)
+    super.open(f, bufferSize)
+  }
 }
