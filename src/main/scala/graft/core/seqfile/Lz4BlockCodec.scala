@@ -22,13 +22,17 @@ object Lz4BlockCodec {
     buf(pos + 3) = v.toByte
   }
 
-  def decompress(compressed: Array[Byte], off: Int, len: Int): Array[Byte] = {
+  /** Decompress one framed buffer into `out` (see SeqBlockCodec); returns
+    * the declared total. Each chunk may fill at most the room left under
+    * that total, so a chunk that expands past it fails however large `out`
+    * already is. */
+  def decompress(compressed: Array[Byte], off: Int, len: Int, out: GrowableBytes): Int = {
     if (len < 4)
       throw new SeqFileFormatException(s"lz4 block truncated: $len bytes, need >= 4")
     val total = readBE32(compressed, off)
     if (total < 0)
       throw new SeqFileFormatException(s"lz4 block claims negative size $total")
-    val out = new Array[Byte](total)
+    val dst = out.ensure(total)
     val dec = factory.safeDecompressor()
     var inPos = off + 4
     val inEnd = off + len
@@ -43,17 +47,15 @@ object Lz4BlockCodec {
           s"lz4 chunk overruns buffer: chunk=$chunkLen remaining=${inEnd - inPos}")
       if (chunkLen > 0) {
         val wrote =
-          try dec.decompress(compressed, inPos, chunkLen, out, outPos)
+          try dec.decompress(compressed, inPos, chunkLen, dst, outPos, total - outPos)
           catch { case e: net.jpountz.lz4.LZ4Exception =>
-            throw new SeqFileFormatException(s"corrupt lz4 chunk: ${e.getMessage}") }
+            throw new SeqFileFormatException(
+              s"corrupt lz4 chunk (or one that overruns the declared size $total): ${e.getMessage}") }
         outPos += wrote
       }
       inPos += chunkLen
-      if (outPos > total)
-        throw new SeqFileFormatException(
-          s"lz4 decompression overran declared size: $outPos > $total")
     }
-    out
+    total
   }
 
   /** Compress with Hadoop's default lz4 buffer size (256 KiB chunks). */

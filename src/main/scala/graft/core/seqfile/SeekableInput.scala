@@ -33,8 +33,14 @@ final class LocalSeekableInput(path: Path) extends SeekableInput {
   * the buffer from the cursor, and `readFully` first copies whatever of its
   * range the buffer already holds, then reads only the rest straight into
   * the destination. So a block's vint-prefixed buffers cost one pass over
-  * the file, not a re-read of each vint's read-ahead. */
-final class SeqInput(in: SeekableInput, bufSize: Int = 1 << 16) {
+  * the file, not a re-read of each vint's read-ahead.
+  *
+  * It is itself a SeekableInput (positioned reads and `close` go to the
+  * wrapped input), so a split parses its header and reads its blocks
+  * through one SeqInput: hand the one `SeqHeader.parse` used to
+  * `SeqStream.openRange`, and the blocks start from the header's
+  * read-ahead instead of reading those bytes again. */
+final class SeqInput(in: SeekableInput, bufSize: Int = 1 << 16) extends SeekableInput {
   private val buf = new Array[Byte](bufSize)
   private var bufStart = 0L // absolute position of buf(0)
   private var bufLen = 0    // valid bytes in buf
@@ -43,6 +49,8 @@ final class SeqInput(in: SeekableInput, bufSize: Int = 1 << 16) {
   def pos: Long = cursor
   def length: Long = in.length
   def seek(p: Long): Unit = cursor = p
+  def readAt(pos: Long, dst: Array[Byte], off: Int, len: Int): Int = in.readAt(pos, dst, off, len)
+  def close(): Unit = in.close()
 
   private def ensure(n: Int): Boolean = {
     if (cursor >= bufStart && cursor + n <= bufStart + bufLen) return true
@@ -116,5 +124,13 @@ final class SeqInput(in: SeekableInput, bufSize: Int = 1 << 16) {
   def readBE32(): Long = {
     val a = readFully(4)
     ((a(0) & 0xffL) << 24) | ((a(1) & 0xffL) << 16) | ((a(2) & 0xffL) << 8) | (a(3) & 0xffL)
+  }
+}
+
+object SeqInput {
+  /** `input` itself when it already is a SeqInput, else a new one over it. */
+  def over(input: SeekableInput): SeqInput = input match {
+    case s: SeqInput => s
+    case _ => new SeqInput(input)
   }
 }

@@ -4,7 +4,11 @@ package graft.core.seqfile
   * reference's `RecordBlock` with its two parallel columnar vectors
   * (reference: src/Data/Hadoop/SequenceFile/Types.hs:32-38). Keys or values
   * are None when the consumer pruned them — an optimization the reference
-  * cannot do (it always decodes both, reference: Parser.hs:109-110). */
+  * cannot do (it always decodes both, reference: Parser.hs:109-110).
+  *
+  * Lifetime: a block and its columns are valid until the next `next()` of
+  * the stream that returned it, which reuses the variable-width columns'
+  * buffers (see BinaryColumn). Copy what you keep. */
 final case class DecodedBlock(count: Int, keys: Option[ColumnData], values: Option[ColumnData])
 
 /** Streaming block reader over a byte range of one file — the analog of the
@@ -19,6 +23,15 @@ final case class DecodedBlock(count: Int, keys: Option[ColumnData], values: Opti
   * [start, end); the final owned block is read past `end` if needed. With
   * splits covering a file disjointly, every block is read exactly once.
   *
+  * Buffers: the reader holds one set of growable buffers and decodes every
+  * block into them — the compressed bytes, the decompressed lengths and
+  * fixed-width data, the record lengths, and one variable-width data buffer
+  * per column slot, which a BinaryColumn slices. A block allocates only the
+  * arrays whose length defines a column (fixed-width values, `starts` and
+  * `lens`) and their wrappers; so it is valid until the next `next()`.
+  *
+  * @param input the file; a SeqInput that already parsed the header is used
+  *   as is, so its read-ahead serves the first block.
   * @param decodeKey/decodeValue column pruning: skip snappy decompression and
   *   decode of the unwanted column entirely (only the 4 buffer lengths are
   *   read to advance the cursor).
@@ -33,9 +46,20 @@ final class SeqBlockReader(
     blockOffsets: Option[Array[Long]] = None)
   extends SeqStream {
 
-  private val in = new SeqInput(input)
+  private val in = SeqInput.over(input)
   private val sync = header.sync
   private val codec = header.codec
+  private val keyType = header.keyType
+  private val valueType = header.valueType
+  // Per-reader buffers (see the class doc). `marker` holds a block's sync
+  // escape and marker, `compressed` each buffer as read, `scratch` the
+  // decompressed bytes a column does not keep (lengths, fixed-width data).
+  private val marker = new Array[Byte](4 + SeqHeader.SyncSize)
+  private val compressed = new GrowableBytes
+  private val scratch = new GrowableBytes
+  private var recLens = new Array[Int](0)
+  private val keyData = new GrowableBytes
+  private val valueData = new GrowableBytes
   // Zone-map path: exact block offsets were planned ahead (sidecar), so no
   // sync scanning and non-qualifying blocks are never read. Offsets remain
   // verified by the sync-marker check at each seek.
@@ -86,77 +110,86 @@ final class SeqBlockReader(
   /** Parse one block at the cursor: sync escape + sync verification
     * (reference: Parser.hs:93-101), vint record count (Parser.hs:103), then
     * the 4 vint-length-prefixed compressed buffers keyLengths / keys /
-    * valueLengths / values (Parser.hs:104-107). */
+    * valueLengths / values (Parser.hs:104-107), each column decoded right
+    * after its two buffers. */
   private def readBlock(): DecodedBlock = {
-    val escape = in.readFully(4)
-    if (!(escape(0) == -1 && escape(1) == -1 && escape(2) == -1 && escape(3) == -1))
+    in.readFully(marker, 0, 4)
+    if (!(marker(0) == -1 && marker(1) == -1 && marker(2) == -1 && marker(3) == -1))
       throw new SeqFileFormatException(
         s"file corrupt: expected sync escape 0xffffffff at ${in.pos - 4}")
-    val syncGot = in.readFully(SeqHeader.SyncSize)
-    if (!java.util.Arrays.equals(syncGot, sync))
+    in.readFully(marker, 4, SeqHeader.SyncSize)
+    if (!java.util.Arrays.equals(marker, 4, marker.length, sync, 0, sync.length))
       throw new SeqFileFormatException(
         s"file corrupt: sync marker mismatch at ${in.pos - SeqHeader.SyncSize}")
     val n = in.readVInt()
     if (n < 0)
       throw new SeqFileFormatException(s"negative record count $n")
-
-    val keyType = header.keyType
-    val valueType = header.valueType
-
-    val keyLensBuf = readBuffer(decodeKey && keyType.isVariable)
-    val keysBuf = readBuffer(decodeKey)
-    val valLensBuf = readBuffer(decodeValue && valueType.isVariable)
-    val valsBuf = readBuffer(decodeValue)
-
-    val keys =
-      if (!decodeKey) None
-      else Some(decodeColumn(keyType, n, keyLensBuf, keysBuf))
-    val values =
-      if (!decodeValue) None
-      else Some(decodeColumn(valueType, n, valLensBuf, valsBuf))
+    val keys = readColumn(keyType, n, decodeKey, keyData)
+    val values = readColumn(valueType, n, decodeValue, valueData)
     DecodedBlock(n, keys, values)
   }
 
-  /** Read one vint-length-prefixed compressed buffer; when `wanted` is false
-    * just skip over it (no read, no decompression). */
-  private def readBuffer(wanted: Boolean): Array[Byte] = {
+  /** Read one column's lengths and data buffers. When `wanted` is false just
+    * skip over both (no read, no decompression). Fixed-width types never
+    * consult the lengths buffer, matching the reference kernel (reference:
+    * cbits/decode.c:137-168 variable-only); their data goes to `scratch`,
+    * since decode copies it into the column's own array. */
+  private def readColumn(t: WritableType, n: Int, wanted: Boolean,
+                         varData: GrowableBytes): Option[ColumnData] = {
+    if (!wanted) { skipBuffer(); skipBuffer(); return None }
+    val lens =
+      if (!t.isVariable) { skipBuffer(); null }
+      else vintDecodeLengths(decompressNext(scratch), n)
+    val data = if (t.isVariable) varData else scratch
+    val dataLen = decompressNext(data)
+    Some(ColumnDecoder.decode(t, n, lens, data.array, dataLen))
+  }
+
+  private def bufferLength(): Int = {
     val len = in.readVInt()
     if (len < 0) throw new SeqFileFormatException(s"negative buffer length $len")
-    if (wanted) in.readFully(len)
-    else { in.seek(in.pos + len); null }
+    len
   }
 
-  private def decodeColumn(t: WritableType, n: Int, lensBuf: Array[Byte], dataBuf: Array[Byte]): ColumnData = {
-    // Fixed-width types never consult the lengths buffer, matching the
-    // reference kernel (reference: cbits/decode.c:137-168 variable-only).
-    val recLens: Array[Int] =
-      if (!t.isVariable) null
-      else {
-        val raw = codec.decompress(lensBuf)
-        vintDecodeLengths(raw, n)
-      }
-    val data = codec.decompress(dataBuf)
-    ColumnDecoder.decode(t, n, recLens, data)
+  private def skipBuffer(): Unit = {
+    val len = bufferLength()
+    in.seek(in.pos + len)
   }
 
-  /** Bulk vint-decode the n per-record lengths (reference: decode.c:148-161). */
-  private def vintDecodeLengths(raw: Array[Byte], n: Int): Array[Int] = {
-    val out = new Array[Int](n)
+  /** Read the next vint-length-prefixed compressed buffer and decompress it
+    * into `out`; returns the decompressed length. */
+  private def decompressNext(out: GrowableBytes): Int = {
+    val len = bufferLength()
+    if (len > in.length - in.pos)
+      throw new java.io.EOFException(
+        s"buffer of $len bytes at ${in.pos} runs past the end of the file (${in.length} bytes)")
+    val buf = compressed.ensure(len)
+    in.readFully(buf, 0, len)
+    codec.decompress(buf, 0, len, out)
+  }
+
+  /** Bulk vint-decode the n per-record lengths from `scratch[0, rawLen)`
+    * into `recLens` (reference: decode.c:148-161). */
+  private def vintDecodeLengths(rawLen: Int, n: Int): Array[Int] = {
+    if (recLens.length < n) recLens = new Array[Int](math.max(n, recLens.length * 2))
+    val raw = scratch.array
+    val out = recLens
     var pos = 0
     var i = 0
     while (i < n) {
-      if (pos >= raw.length)
+      val size = if (pos < rawLen) VInt.decodeSize(raw(pos)) else 1
+      if (pos + size > rawLen)
         throw new SeqFileFormatException(s"lengths buffer truncated at record $i of $n")
       val v = VInt.readLong(raw, pos)
-      pos += VInt.decodeSize(raw(pos))
+      pos += size
       if (v < 0 || v > Int.MaxValue)
         throw new SeqFileFormatException(s"invalid record length $v")
       out(i) = v.toInt
       i += 1
     }
-    if (pos != raw.length)
+    if (pos != rawLen)
       throw new SeqFileFormatException(
-        s"lengths buffer has ${raw.length - pos} trailing bytes after $n records")
+        s"lengths buffer has ${rawLen - pos} trailing bytes after $n records")
     out
   }
 

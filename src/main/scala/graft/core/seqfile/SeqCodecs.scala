@@ -17,10 +17,41 @@ import java.util.zip.{Deflater, DeflaterOutputStream, GZIPInputStream, GZIPOutpu
   */
 trait SeqBlockCodec {
   def javaClass: String
-  def decompress(buf: Array[Byte], off: Int, len: Int): Array[Byte]
-  final def decompress(buf: Array[Byte]): Array[Byte] =
-    decompress(buf, 0, buf.length)
+  /** Decompress `buf[off, off + len)` into `out`, growing it as needed, and
+    * return the decompressed length. `out.array` holds the block from 0 to
+    * that length; the bytes past it are left from earlier calls. A caller
+    * that reuses `out` for the next buffer overwrites this one, so what a
+    * decoded block slices from it is valid until the reader's next
+    * `next()`: copy what you keep. */
+  def decompress(buf: Array[Byte], off: Int, len: Int, out: GrowableBytes): Int
+  /** Allocating form: a fresh array of exactly the decompressed bytes. */
+  final def decompress(buf: Array[Byte]): Array[Byte] = {
+    val out = new GrowableBytes
+    val n = decompress(buf, 0, buf.length, out)
+    if (out.array.length == n) out.array else java.util.Arrays.copyOf(out.array, n)
+  }
   def compress(raw: Array[Byte], rawLen: Int): Array[Byte]
+}
+
+/** A byte array that a reader reuses for one kind of buffer across blocks,
+  * grown on demand. Its contents are valid only up to the length the last
+  * writer returned. */
+final class GrowableBytes {
+  private var buf: Array[Byte] = Array.emptyByteArray
+
+  def array: Array[Byte] = buf
+
+  /** The array, at least `n` bytes long. When it has to grow, the first
+    * `keep` bytes are carried over; it at least doubles, so a growing
+    * stream of writes costs amortised constant copies per byte. */
+  def ensure(n: Int, keep: Int = 0): Array[Byte] = {
+    if (buf.length < n) {
+      val grown = new Array[Byte](math.max(n, math.min(buf.length * 2L, Int.MaxValue - 8).toInt))
+      System.arraycopy(buf, 0, grown, 0, keep)
+      buf = grown
+    }
+    buf
+  }
 }
 
 object SeqCodecs {
@@ -31,27 +62,30 @@ object SeqCodecs {
 
   object SnappyCodec extends SeqBlockCodec {
     val javaClass: String = SnappyClass
-    def decompress(buf: Array[Byte], off: Int, len: Int): Array[Byte] =
-      SnappyBlockCodec.decompress(buf, off, len)
+    def decompress(buf: Array[Byte], off: Int, len: Int, out: GrowableBytes): Int =
+      SnappyBlockCodec.decompress(buf, off, len, out)
     def compress(raw: Array[Byte], rawLen: Int): Array[Byte] =
       SnappyBlockCodec.compress(raw, rawLen)
   }
 
-  private def drain(in: java.io.InputStream): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(1 << 16)
-    val buf = new Array[Byte](1 << 16)
-    var r = in.read(buf)
-    while (r >= 0) {
-      if (r > 0) out.write(buf, 0, r)
-      r = in.read(buf)
-    }
-    out.toByteArray
-  }
+  /** Read `in` to its end into `out`; returns the number of bytes read. */
+  private def drain(in: java.io.InputStream, out: GrowableBytes): Int =
+    try {
+      var dst = out.ensure(1 << 16)
+      var n = 0
+      var r = in.read(dst, 0, dst.length)
+      while (r >= 0) {
+        n += r
+        if (n == dst.length) dst = out.ensure(n + 1, keep = n)
+        r = in.read(dst, n, dst.length - n)
+      }
+      n
+    } finally in.close()
 
   object GzipCodec extends SeqBlockCodec {
     val javaClass: String = GzipClass
-    def decompress(buf: Array[Byte], off: Int, len: Int): Array[Byte] =
-      try drain(new GZIPInputStream(new ByteArrayInputStream(buf, off, len)))
+    def decompress(buf: Array[Byte], off: Int, len: Int, out: GrowableBytes): Int =
+      try drain(new GZIPInputStream(new ByteArrayInputStream(buf, off, len)), out)
       catch { case e: java.util.zip.ZipException =>
         throw new SeqFileFormatException(s"corrupt gzip buffer: ${e.getMessage}") }
     def compress(raw: Array[Byte], rawLen: Int): Array[Byte] = {
@@ -66,8 +100,8 @@ object SeqCodecs {
   /** Hadoop DefaultCodec: zlib-wrapped deflate. */
   object DeflateCodec extends SeqBlockCodec {
     val javaClass: String = DefaultClass
-    def decompress(buf: Array[Byte], off: Int, len: Int): Array[Byte] =
-      try drain(new InflaterInputStream(new ByteArrayInputStream(buf, off, len)))
+    def decompress(buf: Array[Byte], off: Int, len: Int, out: GrowableBytes): Int =
+      try drain(new InflaterInputStream(new ByteArrayInputStream(buf, off, len)), out)
       catch { case e: java.util.zip.ZipException =>
         throw new SeqFileFormatException(s"corrupt deflate buffer: ${e.getMessage}") }
     def compress(raw: Array[Byte], rawLen: Int): Array[Byte] = {
@@ -91,9 +125,9 @@ object SeqCodecs {
     * the bytes are plain zstd frames in the standard SequenceFile layout. */
   object ZstdCodec extends SeqBlockCodec {
     val javaClass: String = ZstdClass
-    def decompress(buf: Array[Byte], off: Int, len: Int): Array[Byte] =
+    def decompress(buf: Array[Byte], off: Int, len: Int, out: GrowableBytes): Int =
       try drain(new com.github.luben.zstd.ZstdInputStream(
-        new ByteArrayInputStream(buf, off, len)))
+        new ByteArrayInputStream(buf, off, len)), out)
       catch { case e: java.io.IOException =>
         throw new SeqFileFormatException(s"corrupt zstd buffer: ${e.getMessage}") }
     def compress(raw: Array[Byte], rawLen: Int): Array[Byte] = {
@@ -117,8 +151,8 @@ object SeqCodecs {
     * see Lz4BlockCodec). */
   object Lz4Codec extends SeqBlockCodec {
     val javaClass: String = Lz4Class
-    def decompress(buf: Array[Byte], off: Int, len: Int): Array[Byte] =
-      Lz4BlockCodec.decompress(buf, off, len)
+    def decompress(buf: Array[Byte], off: Int, len: Int, out: GrowableBytes): Int =
+      Lz4BlockCodec.decompress(buf, off, len, out)
     def compress(raw: Array[Byte], rawLen: Int): Array[Byte] =
       Lz4BlockCodec.compress(raw, rawLen)
   }

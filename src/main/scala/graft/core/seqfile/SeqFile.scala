@@ -12,11 +12,15 @@ object SeqFile {
     finally in.close()
   }
 
-  /** Stream all blocks of a local file (any supported compression layout).
-    * Caller must exhaust or close. */
+  /** Stream all blocks of a local file (any supported compression layout),
+    * parsing the header and reading the blocks through one SeqInput.
+    * Caller must exhaust or close. Each block is valid until the next
+    * `next()`: copy what you keep (see SeqStream). */
   def open(path: String, decodeKey: Boolean = true, decodeValue: Boolean = true): SeqStream = {
-    val in = new LocalSeekableInput(Paths.get(path))
-    val header = SeqHeader.parse(new SeqInput(in))
+    val in = new SeqInput(new LocalSeekableInput(Paths.get(path)))
+    val header =
+      try SeqHeader.parse(in)
+      catch { case e: Throwable => in.close(); throw e }
     SeqStream.openRange(in, header, 0L, in.length, decodeKey, decodeValue)
   }
 

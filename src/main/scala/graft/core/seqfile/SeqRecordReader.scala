@@ -2,7 +2,12 @@ package graft.core.seqfile
 
 /** Common shape of the two SequenceFile stream readers (block-compressed
   * vs record-oriented): a pull iterator of columnar DecodedBlocks with
-  * corrupt-block resync support. */
+  * corrupt-block resync support.
+  *
+  * Lifetime: a block returned by `next()` is valid until the next `next()`.
+  * The block reader decodes every block into the same buffers, the way
+  * Spark's `PartitionReader` hands out a batch, so a consumer that keeps
+  * rows or byte slices past that point must copy them. */
 trait SeqStream extends Iterator[DecodedBlock] with java.io.Closeable {
   /** After next() threw, scan forward for the next sync marker within this
     * split; returns false when the reader is exhausted. */
@@ -12,7 +17,8 @@ trait SeqStream extends Iterator[DecodedBlock] with java.io.Closeable {
 object SeqStream {
   /** Reader for a byte range of any supported layout. `blockOffsets`
     * (zone-map pruning; BLOCK layout only) bypasses sync scanning and reads
-    * exactly the given block offsets. */
+    * exactly the given block offsets. Pass the SeqInput the header was
+    * parsed from as `input`, so the split reads through one buffer. */
   def openRange(input: SeekableInput, header: SeqHeader, start: Long, end: Long,
                 decodeKey: Boolean = true, decodeValue: Boolean = true,
                 blockOffsets: Option[Array[Long]] = None): SeqStream =
@@ -57,7 +63,7 @@ final class SeqRecordReader(
     targetBatch: Int = 4096)
   extends SeqStream {
 
-  private val in = new SeqInput(input)
+  private val in = SeqInput.over(input)
   private val sync = header.sync
   private val keyType = header.keyType
   private val valueType = header.valueType

@@ -27,14 +27,17 @@ object SnappyBlockCodec {
     buf(pos + 3) = v.toByte
   }
 
-  /** Decompress one framed buffer. */
-  def decompress(compressed: Array[Byte], off: Int, len: Int): Array[Byte] = {
+  /** Decompress one framed buffer into `out` (see SeqBlockCodec); returns
+    * the declared total. Every chunk's decoded size is checked against the
+    * room left under that total before it is written, so a chunk that
+    * expands past it fails here however large `out` already is. */
+  def decompress(compressed: Array[Byte], off: Int, len: Int, out: GrowableBytes): Int = {
     if (len < 4)
       throw new SeqFileFormatException(s"snappy block truncated: $len bytes, need >= 4")
     val total = readBE32(compressed, off)
     if (total < 0)
       throw new SeqFileFormatException(s"snappy block claims negative size $total")
-    val out = new Array[Byte](total)
+    val dst = out.ensure(total)
     var inPos = off + 4
     val inEnd = off + len
     var outPos = 0
@@ -51,21 +54,21 @@ object SnappyBlockCodec {
       // frames (reference: cbits/decode.c:94 `if (compressed_size == 0)
       // continue;`) — a file it accepts must not fail here.
       if (chunkLen > 0) {
-        val wrote = Snappy.uncompress(compressed, inPos, chunkLen, out, outPos)
-        outPos += wrote
+        val chunkOut = Snappy.uncompressedLength(compressed, inPos, chunkLen)
+        if (chunkOut > total - outPos)
+          throw new SeqFileFormatException(
+            s"snappy decompression overran declared size: ${outPos.toLong + chunkOut} > $total")
+        outPos += Snappy.uncompress(compressed, inPos, chunkLen, dst, outPos)
       }
       inPos += chunkLen
-      if (outPos > total)
-        throw new SeqFileFormatException(
-          s"snappy decompression overran declared size: $outPos > $total")
     }
     // Trailing unread chunks would mean corrupt framing (decode.c is equally
     // strict: it stops exactly at `total`).
-    out
+    total
   }
 
   def decompress(compressed: Array[Byte]): Array[Byte] =
-    decompress(compressed, 0, compressed.length)
+    SeqCodecs.SnappyCodec.decompress(compressed)
 
   /** Compress `raw[0, rawLen)` into Hadoop block framing. `chunkSize` matches
     * Hadoop's io.compression.codec.snappy.buffersize default (256 KiB). */

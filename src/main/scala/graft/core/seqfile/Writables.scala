@@ -58,7 +58,12 @@ final case class DoubleColumn(values: Array[Double]) extends ColumnData { def si
 /** Variable-width column: record i is bytes[starts(i) until starts(i)+lens(i)].
   * For Text the leading payload-length vint has been skipped
   * (reference: Writable.hs:101-106); for BytesWritable the 4-byte length
-  * prefix has been skipped (reference: Writable.hs:97-99). */
+  * prefix has been skipped (reference: Writable.hs:97-99).
+  *
+  * `bytes` is the reader's decompression buffer for this column, reused
+  * for the next block: it may be longer than the slices, and a column from
+  * a block reader is valid until that reader's next `next()`. Copy what you
+  * keep (`slice`, `sliceString`). `starts` and `lens` are the column's own. */
 final case class BinaryColumn(bytes: Array[Byte], starts: Array[Int], lens: Array[Int]) extends ColumnData {
   def size: Int = starts.length
   def slice(i: Int): Array[Byte] =
@@ -76,35 +81,38 @@ object ColumnDecoder {
     * @param recLens serialized per-record lengths (vint-decoded from the
     *                lengths buffer); only consulted for variable-width types,
     *                matching the reference kernel (cbits/decode.c:137-168).
-    * @param data    the decompressed data buffer for the column.
+    *                It may be longer than n.
+    * @param data    the decompressed data buffer for the column; only
+    *                `data[0, dataLen)` is the column's, and every size check
+    *                is against `dataLen`.
     */
-  def decode(t: WritableType, n: Int, recLens: Array[Int], data: Array[Byte]): ColumnData = t match {
+  def decode(t: WritableType, n: Int, recLens: Array[Int], data: Array[Byte], dataLen: Int): ColumnData = t match {
     case WritableType.NullW =>
       NullColumn(n)
     case WritableType.ShortW =>
-      checkFixed(n, 2, data)
+      checkFixed(n, 2, dataLen)
       val out = new Array[Short](n)
-      ByteBuffer.wrap(data).order(ByteOrder.BIG_ENDIAN).asShortBuffer().get(out)
+      ByteBuffer.wrap(data, 0, dataLen).order(ByteOrder.BIG_ENDIAN).asShortBuffer().get(out)
       ShortColumn(out)
     case WritableType.IntW =>
-      checkFixed(n, 4, data)
+      checkFixed(n, 4, dataLen)
       val out = new Array[Int](n)
-      ByteBuffer.wrap(data).order(ByteOrder.BIG_ENDIAN).asIntBuffer().get(out)
+      ByteBuffer.wrap(data, 0, dataLen).order(ByteOrder.BIG_ENDIAN).asIntBuffer().get(out)
       IntColumn(out)
     case WritableType.LongW =>
-      checkFixed(n, 8, data)
+      checkFixed(n, 8, dataLen)
       val out = new Array[Long](n)
-      ByteBuffer.wrap(data).order(ByteOrder.BIG_ENDIAN).asLongBuffer().get(out)
+      ByteBuffer.wrap(data, 0, dataLen).order(ByteOrder.BIG_ENDIAN).asLongBuffer().get(out)
       LongColumn(out)
     case WritableType.FloatW =>
-      checkFixed(n, 4, data)
+      checkFixed(n, 4, dataLen)
       val out = new Array[Float](n)
-      ByteBuffer.wrap(data).order(ByteOrder.BIG_ENDIAN).asFloatBuffer().get(out)
+      ByteBuffer.wrap(data, 0, dataLen).order(ByteOrder.BIG_ENDIAN).asFloatBuffer().get(out)
       FloatColumn(out)
     case WritableType.DoubleW =>
-      checkFixed(n, 8, data)
+      checkFixed(n, 8, dataLen)
       val out = new Array[Double](n)
-      ByteBuffer.wrap(data).order(ByteOrder.BIG_ENDIAN).asDoubleBuffer().get(out)
+      ByteBuffer.wrap(data, 0, dataLen).order(ByteOrder.BIG_ENDIAN).asDoubleBuffer().get(out)
       DoubleColumn(out)
     case WritableType.TextW =>
       // Each serialized record is [vint payloadLen][payload]; drop the vint
@@ -114,14 +122,18 @@ object ColumnDecoder {
       var off = 0
       var i = 0
       while (i < n) {
+        if (off >= dataLen)
+          throw new SeqFileFormatException(
+            s"variable-width column ($t) record $i: invalid slice start=$off " +
+            s"for buffer of $dataLen bytes (corrupt lengths block)")
         val vsz = VInt.decodeSize(data(off))
         starts(i) = off + vsz
         lens(i) = recLens(i) - vsz
-        checkSlice(starts(i), lens(i), data, t, i)
+        checkSlice(starts(i), lens(i), dataLen, t, i)
         off += recLens(i)
         i += 1
       }
-      checkConsumed(off, data, t)
+      checkConsumed(off, dataLen, t)
       BinaryColumn(data, starts, lens)
     case WritableType.BytesW =>
       // Each serialized record is [4-byte BE len][payload]; drop the prefix
@@ -133,20 +145,24 @@ object ColumnDecoder {
       while (i < n) {
         starts(i) = off + 4
         lens(i) = recLens(i) - 4
-        checkSlice(starts(i), lens(i), data, t, i)
+        checkSlice(starts(i), lens(i), dataLen, t, i)
         off += recLens(i)
         i += 1
       }
-      checkConsumed(off, data, t)
+      checkConsumed(off, dataLen, t)
       BinaryColumn(data, starts, lens)
   }
 
+  /** Allocating form for a buffer that holds exactly the column's bytes. */
+  def decode(t: WritableType, n: Int, recLens: Array[Int], data: Array[Byte]): ColumnData =
+    decode(t, n, recLens, data, data.length)
+
   /** Strict size accounting for fixed-width columns, matching the reference
     * kernel's check (reference: cbits/decode.c:175-177). */
-  private def checkFixed(n: Int, width: Int, data: Array[Byte]): Unit =
-    if (data.length != n.toLong * width)
+  private def checkFixed(n: Int, width: Int, dataLen: Int): Unit =
+    if (dataLen != n.toLong * width)
       throw new SeqFileFormatException(
-        s"fixed-width column size mismatch: expected ${n.toLong * width} bytes for $n records of width $width, got ${data.length}")
+        s"fixed-width column size mismatch: expected ${n.toLong * width} bytes for $n records of width $width, got $dataLen")
 
   /** A corrupt lengths buffer can yield a record length SMALLER than the
     * vint/4-byte prefix (negative payload length) or slices past the buffer
@@ -154,15 +170,15 @@ object ColumnDecoder {
     * DROPMALFORMED readers can catch them at decode time — surfacing later at
     * row access (UTF8String.fromBytes with negative length) would crash a
     * query those modes promise to keep alive. */
-  private def checkSlice(start: Int, len: Int, data: Array[Byte],
+  private def checkSlice(start: Int, len: Int, dataLen: Int,
                          t: WritableType, i: Int): Unit =
-    if (len < 0 || start.toLong + len > data.length)
+    if (len < 0 || start.toLong + len > dataLen)
       throw new SeqFileFormatException(
         s"variable-width column ($t) record $i: invalid slice start=$start " +
-        s"len=$len for buffer of ${data.length} bytes (corrupt lengths block)")
+        s"len=$len for buffer of $dataLen bytes (corrupt lengths block)")
 
-  private def checkConsumed(off: Int, data: Array[Byte], t: WritableType): Unit =
-    if (off != data.length)
+  private def checkConsumed(off: Int, dataLen: Int, t: WritableType): Unit =
+    if (off != dataLen)
       throw new SeqFileFormatException(
-        s"variable-width column ($t) size mismatch: lengths sum to $off but buffer has ${data.length} bytes")
+        s"variable-width column ($t) size mismatch: lengths sum to $off but buffer has $dataLen bytes")
 }

@@ -92,7 +92,14 @@ final class SeqFileConstantStringVector(value: UTF8String)
   * (`SeqFilePartition.fixedOffsets`), or every block in its byte range when
   * none were planned, under the malformed-record mode (see ReadMode),
   * counting what PERMISSIVE and DROPMALFORMED drop. Hive-partition columns
-  * ride along as constant vectors. */
+  * ride along as constant vectors.
+  *
+  * The header and the blocks are read through one SeqInput, and the block
+  * reader reuses its buffers, so a batch from `get()` is valid until the
+  * next `next()` — Spark's `PartitionReader` contract, which its own
+  * vectorized Parquet reader relies on too. Spark copies before it keeps
+  * rows (`ColumnarToRow` and the row path's `UnsafeProjection` both do); any
+  * other consumer must copy what it keeps as well. */
 class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: StructType,
                                      required: StructType, mode: String,
                                      conf: org.apache.hadoop.conf.Configuration =
@@ -115,7 +122,7 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
       s"unknown column '${f.name}' (expect key/value or a partition column)"))
   }
 
-  private val input = new HadoopSeekableInput(new Path(part.path), conf)
+  private val input = new SeqInput(new HadoopSeekableInput(new Path(part.path), conf))
   private var malformedBlocks = 0L
   private var unreadableFiles = 0L
   // Header parse + FULL-schema validation (the reference fails the whole
@@ -126,7 +133,7 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
   // of failing the query; the input is closed either way on failure.
   private val blocks: SeqStream =
     try {
-      val header = SeqHeader.parse(new SeqInput(input))
+      val header = SeqHeader.parse(input)
       SeqFileSchema.validate(tableSchema, header, part.path)
       val needKey = required.fieldNames.exists(_.equalsIgnoreCase("key"))
       val needValue = required.fieldNames.exists(_.equalsIgnoreCase("value"))

@@ -44,8 +44,8 @@ object DecodeBench {
   /** Fixed-width fixture (LongWritable/DoubleWritable): bulk-cast decode. */
   private def runLongDouble(fixture: String): Unit = {
     val ours = () => {
-      val in = new LocalSeekableInput(java.nio.file.Paths.get(fixture))
-      val header = SeqHeader.parse(new SeqInput(in))
+      val in = new SeqInput(new LocalSeekableInput(java.nio.file.Paths.get(fixture)))
+      val header = SeqHeader.parse(in)
       val stream = SeqStream.openRange(in, header, 0, in.length,
         decodeKey = true, decodeValue = true)
       var n = 0L
@@ -88,8 +88,8 @@ object DecodeBench {
 
     // ours: stream decoded blocks, touch every key slice + value
     val ours = () => {
-      val in = new LocalSeekableInput(java.nio.file.Paths.get(fixture))
-      val header = SeqHeader.parse(new SeqInput(in))
+      val in = new SeqInput(new LocalSeekableInput(java.nio.file.Paths.get(fixture)))
+      val header = SeqHeader.parse(in)
       val stream = SeqStream.openRange(in, header, 0, in.length,
         decodeKey = true, decodeValue = true)
       var n = 0L
