@@ -1,10 +1,19 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate: run each oracle SQL in
 DuckDB against the sf parquet tables, load our Verify dump, sort columns by
-name and rows by value, and compare."""
+name and rows by value, and compare.
+
+Usage: oracle_check.py SF_DIR VERIFY_OUT [GATES]
+
+GATES is an optional comma-separated gate list, the same one
+SPARK_GRAFT_VERIFY_ONLY takes. With it, only those gates are checked, and a
+listed gate without a dump under VERIFY_OUT fails; a listed gate without an
+oracle (rows-only) is reported and not compared."""
 import duckdb, json, sys, os, math
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
+only = ({g.strip() for g in sys.argv[3].split(",") if g.strip()}
+        if len(sys.argv) > 3 else None)
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     p = f"{sfdir}/{t}.parquet"
@@ -13,6 +22,14 @@ for t in "region nation customer supplier part orders lineitem events documents 
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fail = 0
+if only is not None:
+    for name in sorted(only):
+        if not os.path.isdir(f"{outdir}/{name}"):
+            print(f"FAIL {name}: no dump under {outdir}"); fail += 1
+        elif name not in oracle:
+            print(f"ROWS {name}: no oracle (rows-only), not compared")
+    oracle = {n: q for n, q in oracle.items()
+              if n in only and os.path.isdir(f"{outdir}/{n}")}
 for name, sql in sorted(oracle.items()):
     try:
         exp = con.sql(sql).df()

@@ -52,11 +52,14 @@ object SparkEntry {
     * see SparkEntryOracles.frozenScan). Partitions older than a day are
     * GC'd at freeze time, bounding the root across rounds without ever
     * touching a frame a concurrent same-round process could be reading.
-    * Returns its INPUT frame, not a read-back of the file: every freeze
-    * input is a driver-local trained frame or a parquet-backed load, so it
-    * holds the values the oracle will read (parquet doubles round-trip
-    * exactly). Not cleaned on exit: the oracle runs after this JVM is
-    * gone; the frames are m·ks/C rows. */
+    * Returns its INPUT frame only when that frame is stored bytes — a
+    * driver-local relation or a file scan, at most renamed — so it holds
+    * the values the oracle will read (parquet doubles round-trip exactly)
+    * without a read-back round trip. Any other plan (an aggregate, a
+    * join, a UDF) could recompute to different values than the frozen
+    * file, so the read-back of the file is served instead. Not cleaned on
+    * exit: the oracle runs after this JVM is gone; the frames are m·ks/C
+    * rows. */
   private[graft] val frozenRoot = "/tmp/graft_frozen"
 
   /** (row count, content token) of an embeddings corpus in ONE aggregate
@@ -111,14 +114,26 @@ object SparkEntry {
     gcFrozen(s"$frozenRoot/$gate/$part")
     val dir = s"$frozenRoot/$gate/$part/n=$n/h=$tok"
     df.coalesce(1).write.mode("overwrite").parquet(dir)
-    // serve from the INPUT frame, not a read-back of the file just
-    // written: every freeze input is either a driver-local trained frame
-    // or a parquet-backed load of the index root, so the values are the
-    // frozen bytes either way (doubles round-trip parquet losslessly) and
-    // the read-back only added a listing + schema-inference round trip per
-    // frozen frame (~3 per lifecycle gate). The write still happens first
-    // — the oracle replays from the frozen file.
-    df
+    if (storedBytes(df.queryExecution.analyzed)) df
+    else df.sparkSession.read.parquet(dir)
+  }
+
+  /** A plan that only reads stored values: a local relation or a file
+    * scan, under pure column renames. */
+  private def storedBytes(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    plan match {
+      case _: LocalRelation => true
+      case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+      case Project(list, child) => list.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } && storedBytes(child)
+      case _ => false
+    }
   }
 
   /** Delete frozen partitions older than a day (leaf h=<tok> dirs by

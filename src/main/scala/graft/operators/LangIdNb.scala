@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.PlanParallel
+
 /** Trained language identification — closed-form multinomial Naive Bayes
   * over character trigrams (the fastText-style supervised baseline,
   * reduced to its no-iteration core so the whole train+score pipeline is
@@ -163,17 +165,14 @@ object LangIdNb {
       .select(col("lang"), explode(trigramsOf(col("t"))).as("g"))
     // the one corpus-sized job: exact (lang, trigram) counts. The two
     // bounded collects are independent — overlap them (guide §2.6)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IndexRoot.ioEc
-    val fCnt = Future(grams.groupBy(col("lang"), col("g"))
-      .agg(count(lit(1)).as("c")).as[(String, String, Long)].collect())
-    val fNsent = Future(labeled.groupBy(col(langCol).as("lang"))
-      .agg(count(lit(1)).as("ns")).as[(String, Long)].collect())
-    val cnt = Await.result(fCnt, Duration.Inf)
-    val nsentL = Await.result(fNsent, Duration.Inf)
-    val cntDf = cnt.toSeq.toDF("lang", "g", "c")
-    val nsent = nsentL.toSeq.toDF("lang", "ns")
+    val Seq(cnt, nsentL) = PlanParallel.mapOrdered(Seq(
+      grams.groupBy(col("lang"), col("g")).agg(count(lit(1)).as("c")),
+      labeled.groupBy(col(langCol).as("lang")).agg(count(lit(1)).as("ns"))
+    ))(_.collect())
+    val cntDf = cnt.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      .toSeq.toDF("lang", "g", "c")
+    val nsent = nsentL.map(r => (r.getString(0), r.getLong(1)))
+      .toSeq.toDF("lang", "ns")
     val tot = cntDf.groupBy(col("lang")).agg(sum(col("c")).as("nl"))
     val voc = cntDf.agg(countDistinct(col("g")).as("v"))
     val nTotal = nsent.agg(sum(col("ns")).as("nst"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,53 +20,212 @@ import Dedup.{dot, l2norm}
   *    billion-scale layout: lists are the partition key, so each query
   *    touches nProbe/C of the corpus.
   */
-/** A persisted product-quantization index: `codebooks` = (subspace,
-  * codeword, vec) — m·ks small rows, a TRAINING artifact written once;
-  * `codes` = (id, code BINARY) — m bytes per corpus vector. Build with
-  * `SimilaritySearch.buildPqIndex`, grow with [[PqIndex.append]], take
-  * down ids with [[PqIndex.delete]], bound file count with
-  * [[PqIndex.compact]], serve with `searchPqIndex`.
+/** The one lifecycle every ANN index family shares: [[PqIndex]] (flat PQ
+  * and SQ8), [[LshIndex]] and [[IvfPqIndex]] (IVF-PQ and IVF-SQ8). An
+  * index root holds three kinds of state:
+  *  - frozen state: small sidecar dirs written once per save — the
+  *    trained quantizer (`codebooks`, `centroids`), the optional OPQ
+  *    `rotation` and IVF's `meta` encoding flag. Nothing appends to them
+  *    (FAISS semantics: the quantizer is frozen at build);
+  *  - per-vector tables (`codes`, or `bands` and `vectors`), hive
+  *    batch-partitioned: a save is `batch=0` and each ingest lands as its
+  *    own `batch=N`, so nothing standing is re-encoded;
+  *  - `deletes/`: tombstoned ids, batch-partitioned the same way.
   *
-  * On-disk, `codes` is hive-batch-partitioned (`codes/batch=<id>/`; a
-  * [[save]] is batch 0) — the same standing-index layout as
-  * [[LshIndex]]: codes are pure functions of the frozen quantizer, so an
-  * ingested batch lands as its own partition without touching (or
-  * re-encoding) anything standing, and an appended index serves exactly
-  * what a from-scratch encode over the unioned corpus serves
-  * (spec-pinned and gated). `codebooks` stays a flat dir: it is never
-  * appended to — FAISS semantics, the quantizer is frozen at build. */
-/** Root hygiene shared by the index families' `save` methods. */
+  * The contracts, the same for every family (spec-pinned and gated):
+  *  - Save claims the whole root. The sidecar legs write first, in
+  *    parallel; an absent optional sidecar (an un-rotated index) REMOVES a
+  *    stale one, so a later append can never encode against a frame the
+  *    codes were not built with. Then every table of the family and
+  *    `deletes/` are swept — overwrite mode rewrites only `batch=0`, so
+  *    stale partitions and tombstones would otherwise union into the next
+  *    load — and the per-vector tables land LAST: a crash mid-save can
+  *    tear the tables, but a completed save never sits beside a stale
+  *    sidecar. Never save into the root an index's own frames were loaded
+  *    from (the rewrite would read what it deletes).
+  *  - Load reads the frozen state as plain parquet, overlapped with the
+  *    table reads, then anti-joins the tombstoned ids (8-byte keys: a
+  *    small set broadcasts, a huge one is a plain equi-join) out of every
+  *    per-vector table. Serving is deletion-oblivious: a masked serve
+  *    equals a from-scratch build over the surviving corpus. Legacy flat
+  *    tables (pre-batch saves) load too, but must be re-saved before an
+  *    append: flat files beside `batch=N` dirs fail partition discovery
+  *    loudly.
+  *  - Append and ingestStream resolve the frozen state ONCE into plain
+  *    arrays — a persisted rotation rotates every batch and IVF's `meta`
+  *    flag picks raw or residual codes, so a caller cannot land codes of
+  *    the wrong space — then encode each batch and write it as `batch=N`
+  *    of every table, overwriting only that partition: idempotent per
+  *    batch id. Encodings are pure per-vector functions of the frozen
+  *    state, so an appended index serves exactly what a from-scratch
+  *    encode of the union serves. Ids must be unique across batches
+  *    (rows, not upserts).
+  *  - ingestStream lands micro-batch `id` as `batch=baseBatch+id`.
+  *    Structured Streaming replays an uncommitted micro-batch under the
+  *    same id, so the re-run overwrites the identical partitions:
+  *    exactly-once ingest with no manifest beyond the checkpoint.
+  *    `baseBatch` must clear every landed batch (a save is 0); a FRESH
+  *    checkpoint that would overwrite one fails fast at start. The
+  *    default Trigger.AvailableNow drains the source and stops.
+  *  - Delete is add-only: each call APPENDS id rows under
+  *    `deletes/batch=N`, so batch-id reuse or a delete after a compact
+  *    never resurrects an earlier takedown, a replayed or torn delete
+  *    only under-masks until its rerun lands, duplicates collapse under
+  *    the load's distinct(), and phantom ids are no-ops. Nothing is
+  *    rewritten and the quantizer stays frozen (FAISS remove_ids). The
+  *    mask is ingest-order-blind: an id appended again after its delete
+  *    stays masked until a purge (unlike FAISS, by design).
+  *  - Compact collapses the `batch <= upToBatch` partitions of each table
+  *    and of `deletes/` into one ([[PartitionedCompaction]]: crash-safe
+  *    without a manifest, as rows are distinct given unique ids), the
+  *    file-count bound for a long-lived index. Compact only batches whose
+  *    append completed. Tombstones survive compaction.
+  *  - Purge is load → save into a fresh root: the byte-reclaim step a
+  *    delete defers. Deleted rows are gone physically, the frozen state
+  *    is copied untouched, the fresh root serves what the masked load
+  *    served, and a purged id can be re-ingested.
+  *
+  * Independent legs overlap through `PlanParallel.mapOrdered`, one
+  * bounded pool per call, so a leg that runs parallel work itself cannot
+  * deadlock. Each family mixes in a [[Family]]. */
 private[graft] object IndexRoot {
-  /** Shared bounded pool for overlapping INDEPENDENT index-I/O legs
-    * (guide §2.6: Spark schedules jobs from several threads fine). A
-    * persisted index is several small sidecar frames; saving/loading
-    * them sequentially pays one listing+commit (or listing+schema-
-    * inference) round trip of driver latency per leg — the legs carry no
-    * data dependency, so they overlap to the slowest leg. Daemon threads;
-    * session-lifetime. */
-  lazy val ioEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(6,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-index-io")
-          t.setDaemon(true)
-          t
-        }))
+  import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+  import graft.util.PlanParallel
 
-  /** Run independent effectful legs concurrently; rethrows the first
-    * failure after all complete or fail. */
-  def inParallel(legs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = ioEc
-    Await.result(
-      Future.sequence(legs.toSeq.map(l => Future(l()))), Duration.Inf): Unit
+  /** One family's part of the lifecycle, mixed into its companion object:
+    * the family names its tables and frozen-state legs and opens a root
+    * ([[load]]); the companion inherits every shared step, and its
+    * append and ingestStream pass their per-batch encoder to
+    * [[appendBatch]] and [[streamBatches]]. */
+  trait Family[I] {
+    /** The batch-partitioned per-vector tables, in [[rows]] order. */
+    private[operators] def tables: Seq[String]
+    /** The frozen-state sidecars of `index`, name → frame; `None` removes
+      * a stale one. */
+    private[operators] def frozen(index: I): Seq[(String, Option[DataFrame])]
+    private[operators] def rows(index: I): Seq[DataFrame]
+
+    /** The index at `dir`; the family's frozen-state reads run as
+      * [[masked]]'s legs. */
+    def load(spark: SparkSession, dir: String): I
+
+    def delete(dir: String, ids: DataFrame, idCol: String,
+               batchId: Long = 1L): Unit =
+      ids.select(col(idCol).cast("long").as("id")).distinct()
+        .write.mode("append").parquet(s"$dir/deletes/batch=$batchId")
+
+    def compact(spark: SparkSession, dir: String, upToBatch: Long): Unit =
+      (tables :+ "deletes").foreach(t =>
+        PartitionedCompaction.compactPartitioned(spark, s"$dir/$t", upToBatch))
+
+    def purge(spark: SparkSession, dir: String, freshDir: String): Unit =
+      save(load(spark, dir), freshDir)
+
+    private[operators] def save(index: I, dir: String): Unit = {
+      val r = rows(index)
+      write(r.head.sparkSession, dir, frozen(index), tables, tables.zip(r))
+    }
+
+    /** `encoder` resolves the frozen state once into plain arrays; the
+      * function it returns encodes one batch into one frame per table. */
+    private[operators] def appendBatch(dir: String, batch: DataFrame,
+                                       batchId: Long)(
+        encoder: => DataFrame => Seq[DataFrame]): Unit =
+      writeBatch(dir, encoder(batch), batchId)
+
+    private[operators] def streamBatches(dir: String, vectors: DataFrame,
+                                         checkpoint: String, baseBatch: Long,
+                                         trigger: Trigger)(
+        encoder: => DataFrame => Seq[DataFrame]): StreamingQuery = {
+      requireFreshBase(vectors.sparkSession, tables.map(t => s"$dir/$t"),
+        checkpoint, baseBatch)
+      val encode = encoder
+      vectors.writeStream
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          writeBatch(dir, encode(batch), baseBatch + id)
+        }
+        .trigger(trigger)
+        .start()
+    }
+
+    private def writeBatch(dir: String, frames: Seq[DataFrame],
+                           batchId: Long): Unit =
+      inParallel(tables.zip(frames).map { case (t, f) =>
+        () => f.write.mode("overwrite").parquet(s"$dir/$t/batch=$batchId") }: _*)
   }
-  /** Remove the named subdirs of `dir` if present. Used to sweep stale
-    * per-batch partitions (`codes/`, `bands/`, `vectors/`) and the
-    * `deletes/` tombstone dir before a fresh save claims the root. */
-  def clearStale(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 subdirs: String*): Unit = {
+
+  /** Run independent legs at once; rethrows the first failure. Callers
+    * overlap differently-typed reads by forcing lazy vals through it. */
+  def inParallel(legs: (() => Any)*): Unit =
+    PlanParallel.mapOrdered(legs)(_()): Unit
+
+  /** The steps of a save, also run alone by the partial saves (bands-only,
+    * emptyLike): write the sidecars, sweep `sweep` and `deletes/`, then
+    * write `rows` as `batch=0`. */
+  def write(spark: SparkSession, dir: String,
+            frozen: Seq[(String, Option[DataFrame])], sweep: Seq[String],
+            rows: Seq[(String, DataFrame)]): Unit = {
+    inParallel(frozen.map { case (name, frame) => () => frame match {
+      // frozen frames are small by design (m·ks, C or d rows): one file,
+      // not defaultParallelism near-empty ones every load must scan
+      case Some(f) => f.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
+      case None => clearStale(spark, dir, name)
+    }}: _*)
+    clearStale(spark, dir, sweep :+ "deletes": _*)
+    inParallel(rows.map { case (t, f) =>
+      () => f.write.mode("overwrite").parquet(s"$dir/$t/batch=0") }: _*)
+  }
+
+  /** The per-vector `tables` of `dir`, then the `extra` frames, each with
+    * the tombstoned ids anti-joined out. `legs` (a family's frozen-state
+    * reads) overlap the table and tombstone reads. */
+  def masked(spark: SparkSession, dir: String, tables: Seq[String],
+             extra: Seq[DataFrame], legs: (() => Any)*): Seq[DataFrame] = {
+    lazy val read = PlanParallel.mapOrdered(tables)(t =>
+      spark.read.parquet(s"$dir/$t").drop("batch"))
+    lazy val del = sidecar(spark, dir, "deletes")
+      .map(_.drop("batch").select(col("id")).distinct())
+    inParallel(Seq(() => read, () => del) ++ legs: _*)
+    (read ++ extra).map(t => del.fold(t)(t.join(_, Seq("id"), "left_anti")))
+  }
+
+  /** The `batch=N` partition numbers under `table` (empty if absent). */
+  def batchIds(spark: SparkSession, table: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(table)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch="))
+      .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
+  }
+
+  /** The ingestStream start guard. A RETAINED checkpoint is always safe:
+    * committed micro-batches never re-run, and an uncommitted replay
+    * overwrites the identical partition it half-wrote. A FRESH one
+    * restarts streaming batch ids at 0, so a stale `baseBatch` would make
+    * the per-batch overwrite clobber standing `batch=N` data silently
+    * (r14 ADVICE): refuse to start when there are no committed offsets
+    * and a landed partition id >= `baseBatch` under any table. */
+  private def requireFreshBase(spark: SparkSession, tables: Seq[String],
+                               checkpoint: String, baseBatch: Long): Unit = {
+    val off = new org.apache.hadoop.fs.Path(s"$checkpoint/offsets")
+    val offFs = off.getFileSystem(spark.sessionState.newHadoopConf())
+    if (offFs.exists(off) && offFs.listStatus(off).nonEmpty) return
+    tables.foreach { table =>
+      val present = batchIds(spark, table)
+      val clash = present.filter(_ >= baseBatch)
+      if (clash.nonEmpty) throw new IllegalStateException(
+        s"ingestStream with a FRESH checkpoint ($checkpoint) would overwrite " +
+          s"existing partition(s) batch=${clash.min}..${clash.max} under $table: " +
+          s"streaming batchIds restart at 0, so baseBatch=$baseBatch collides " +
+          s"with already-ingested data. Pass baseBatch > ${present.max} " +
+          "(or reuse the original checkpoint to resume the stream).")
+    }
+  }
+
+  /** Remove the named subdirs of `dir` if present. */
+  def clearStale(spark: SparkSession, dir: String, subdirs: String*): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     subdirs.foreach { sub =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
@@ -75,295 +234,88 @@ private[graft] object IndexRoot {
     }
   }
 
-  /** Persist an optional OPQ rotation frame as index state: written
-    * when present, and a STALE frame from a previous rotated index at
-    * the same root REMOVED when absent — a later append must never
-    * rotate batches against a frame the codes were not encoded with. */
-  def writeRotation(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    rotation: Option[DataFrame]): Unit = rotation match {
-    case Some(r) => // d rows — one file (see PqIndex.save)
-      r.coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
-    case None => clearStale(spark, dir, "rotation")
+  /** The `name` dir of `dir` as a plain parquet read, if it exists. */
+  def sidecar(spark: SparkSession, dir: String,
+              name: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(p)) Some(spark.read.parquet(s"$dir/$name")) else None
   }
 
-  /** The persisted OPQ rotation, when the index was built with one —
-    * absence = an un-rotated index. */
-  def readRotation(spark: org.apache.spark.sql.SparkSession,
-                   dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/rotation")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(s"$dir/rotation")) else None
-  }
+  /** The persisted OPQ rotation; absence = an un-rotated index. */
+  def readRotation(spark: SparkSession, dir: String): Option[DataFrame] =
+    sidecar(spark, dir, "rotation")
+
+  /** The persisted rotation as a plain matrix, for the encoders. */
+  def rotationMatrix(spark: SparkSession,
+                     dir: String): Option[Array[Array[Double]]] =
+    readRotation(spark, dir).map(SimilaritySearch.rotationMatrix)
+
+  def rotated(batch: DataFrame, rotation: Option[Array[Array[Double]]],
+              idCol: String, vecCol: String): DataFrame =
+    rotation.fold(batch)(SimilaritySearch.rotateBy(batch, _, idCol, vecCol))
 }
 
+/** A persisted product-quantization index: `codebooks` = (subspace,
+  * codeword, vec), m·ks small rows written once at build; `codes` = (id,
+  * code BINARY), m bytes per corpus vector; `rotation` = the optional OPQ
+  * frame (see [[IvfPqIndex]]). Build with `SimilaritySearch.buildPqIndex`
+  * (or `buildSqIndex`), serve with `searchPqIndex`; the lifecycle is
+  * [[IndexRoot]]'s. */
 final case class PqIndex(codebooks: DataFrame, codes: DataFrame,
                          rotation: Option[DataFrame] = None) {
-  /** Persist both halves as parquet under `dir` (codes as `batch=0`),
-    * plus the OPQ `rotation/` frame when the index carries one (an
-    * un-rotated save REMOVES a stale frame — [[IvfPqIndex.save]]'s
-    * contract, shared).
-    * A save claims the WHOLE root: stale `codes/batch>0` partitions and
-    * the `deletes/` dir from a previous index at the same path are
-    * removed first — overwrite mode only rewrites `batch=0`, so without
-    * the sweep a re-save over an appended root would silently union
-    * codes from a different quantizer and mask fresh ids with old
-    * tombstones (r16 ADVICE). Do not save into a root this index's own
-    * DataFrames were loaded from — rewrite-in-place reads after delete. */
-  def save(dir: String): Unit = {
-    val spark = codebooks.sparkSession
-    // quantizer frames are bounded small (m·ks rows) by design: one file,
-    // not defaultParallelism near-empty ones — a 32-file write of a
-    // 2048-row table costs a 32-task job at save AND a 32-task scan on
-    // every load (guide §6 small-files rule; codes keep their natural
-    // corpus partitioning). The two independent sidecar legs overlap
-    // (IndexRoot.inParallel); codes still write LAST, preserving the
-    // crash-ordering contract.
-    IndexRoot.inParallel(
-      () => codebooks.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/codebooks"),
-      () => IndexRoot.writeRotation(spark, dir, rotation))
-    IndexRoot.clearStale(spark, dir, "codes", "deletes")
-    codes.write.mode("overwrite").parquet(s"$dir/codes/batch=0")
-  }
+  def save(dir: String): Unit = PqIndex.save(this, dir)
 }
 
-object PqIndex {
-  /** If the index carries tombstones ([[delete]]), the codes table comes
-    * back with deleted ids anti-joined out — candidates can then never
-    * include a deleted vector, so the serve path (ADC scan + exact
-    * re-rank against candidate ids only) is deletion-oblivious and a
-    * masked search equals one over an index whose codes were never
-    * written for those ids (spec-pinned and gated). Codebooks are
-    * training artifacts, not per-vector state — deletion leaves them
-    * untouched by design (FAISS semantics: remove ids, keep the
-    * quantizer). Like [[LshIndex.load]], the mask is ingest-order-blind:
-    * an id [[append]]ed again after a delete stays masked until a
-    * physical purge (see [[delete]]).
-    *
-    * Loads both codes layouts: batch-partitioned (current) and the
-    * legacy flat parquet a pre-r14 save produced (drop("batch") is a
-    * no-op there). A legacy index serves fine but must be re-[[PqIndex.save]]d
-    * before [[append]]ing — mixing flat files and batch=N dirs under one
-    * root fails Spark's partition discovery loudly, by design. */
-  def load(spark: org.apache.spark.sql.SparkSession, dir: String): PqIndex = {
-    // the three sidecar reads are independent listing+schema-inference
-    // round trips — overlap them (IndexRoot.ioEc)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IndexRoot.ioEc
-    val fMasked = Future {
-      val codes = spark.read.parquet(s"$dir/codes").drop("batch")
-      val delPath = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-      val fs = delPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(delPath)) {
-        val del = spark.read.parquet(s"$dir/deletes").drop("batch")
-          .select(col("id")).distinct()
-        codes.join(del, Seq("id"), "left_anti")
-      } else codes
-    }
-    val fCb = Future(spark.read.parquet(s"$dir/codebooks"))
-    val fRot = Future(IndexRoot.readRotation(spark, dir))
-    PqIndex(Await.result(fCb, Duration.Inf),
-      Await.result(fMasked, Duration.Inf),
-      rotation = Await.result(fRot, Duration.Inf))
+object PqIndex extends IndexRoot.Family[PqIndex] {
+  private[operators] val tables = Seq("codes")
+  private[operators] def frozen(ix: PqIndex) =
+    Seq("codebooks" -> Some(ix.codebooks), "rotation" -> ix.rotation)
+  private[operators] def rows(ix: PqIndex) = Seq(ix.codes)
+
+  def load(spark: SparkSession, dir: String): PqIndex = {
+    lazy val cb = spark.read.parquet(s"$dir/codebooks")
+    lazy val rot = IndexRoot.readRotation(spark, dir)
+    val Seq(codes) = IndexRoot.masked(spark, dir, tables, Nil,
+      () => cb, () => rot)
+    PqIndex(cb, codes, rot)
   }
 
-  /** Incremental ingest: encode ONLY `batch`'s vectors against the
-    * standing index's frozen codebooks (read from `dir/codebooks` — no
-    * retraining, nothing standing re-encoded) and land their (id, code)
-    * rows as partition `codes/batch=<batchId>`. Ids must be unique
-    * across batches (rows, not upserts). Existing partitions are
-    * untouched; re-running the same batchId overwrites only its own
-    * partition — idempotent per batchId, the exactly-once replay
-    * discipline [[LshIndex.append]] and the streaming index share.
-    * Because codes are pure per-vector functions of the frozen
-    * quantizer, the appended index serves EXACTLY what a from-scratch
-    * encode over the unioned corpus serves (spec-pinned and gated). */
-  def append(spark: org.apache.spark.sql.SparkSession, dir: String,
-             batch: DataFrame, idCol: String, vecCol: String,
-             batchId: Long = 1L): Unit = {
-    // the two frozen-state reads (rotation, codebooks) are independent
-    // driver round trips — overlap them (IndexRoot.ioEc)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IndexRoot.ioEc
-    val fRot = Future(IndexRoot.readRotation(spark, dir))
-    val fCb = Future(SimilaritySearch.pqCodebooksFromDf(
-      spark.read.parquet(s"$dir/codebooks")))
-    // a persisted rotation frame rotates the batch automatically before
-    // encoding (r17 — [[IvfPqIndex.append]]'s contract, shared): the
-    // caller can never land raw-space codes in a rotated index
-    val in = Await.result(fRot, Duration.Inf) match {
-      case Some(rot) =>
-        SimilaritySearch.rotateVectors(batch, rot, idCol, vecCol)
-      case None => batch
-    }
-    val (cbs, starts) = Await.result(fCb, Duration.Inf)
-    SimilaritySearch.encodePqPrepared(cbs, starts, in, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$dir/codes/batch=$batchId")
+  private def encoder(spark: SparkSession, dir: String, idCol: String,
+                      vecCol: String): DataFrame => Seq[DataFrame] = {
+    lazy val rot = IndexRoot.rotationMatrix(spark, dir)
+    lazy val cb = SimilaritySearch.pqCodebooksFromDf(
+      spark.read.parquet(s"$dir/codebooks"))
+    IndexRoot.inParallel(() => rot, () => cb)
+    val ((cbs, starts), r) = (cb, rot)
+    batch => Seq(SimilaritySearch.encodePqPrepared(cbs, starts,
+      IndexRoot.rotated(batch, r, idCol, vecCol), idCol, vecCol))
   }
 
-  /** Tombstone-delete vector ids — same ADD-ONLY contract as
-    * [[LshIndex.delete]]: id rows APPENDED under `deletes/batch=<batchId>`
-    * (never overwritten, so batchId reuse — or a delete issued after a
-    * [[compact]] — can never resurrect earlier takedowns; duplicates
-    * collapse under load's distinct()); phantom ids a harmless no-op;
-    * re-appended ids stay masked until a physical purge ([[purge]] —
-    * load → save to a fresh root: rewrites surviving codes, starts a
-    * clean tombstone-free index; run it at whatever cadence bounds the
-    * tombstone fraction. [[compact]] bounds FILE COUNT but by design
-    * never drops a tombstone). */
-  def delete(dir: String, ids: DataFrame, idCol: String,
-             batchId: Long = 1L): Unit =
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.mode("append").parquet(s"$dir/deletes/batch=$batchId")
+  def append(spark: SparkSession, dir: String, batch: DataFrame,
+             idCol: String, vecCol: String, batchId: Long = 1L): Unit =
+    appendBatch(dir, batch, batchId)(encoder(spark, dir, idCol, vecCol))
 
-  /** Collapse every `batch <= upToBatch` partition of codes AND
-    * tombstones into a single partition each — the file-count bound for
-    * a long-lived appended index, crash-safe with no manifest
-    * ([[PartitionedCompaction]]: code rows are globally distinct given
-    * unique vector ids, tombstones are consumed as a set). Compact only
-    * batches whose append has completed. Tombstoned ids SURVIVE
-    * compaction (the deletes dir is merged, not applied) — reclaiming
-    * their bytes is the physical purge ([[purge]]). */
-  def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-              upToBatch: Long): Unit = {
-    PartitionedCompaction.compactPartitioned(spark, s"$dir/codes", upToBatch)
-    PartitionedCompaction.compactPartitioned(spark, s"$dir/deletes", upToBatch)
-  }
-
-  /** PHYSICAL PURGE: rewrite the surviving (tombstone-masked) index into
-    * a clean tombstone-free index at `freshDir` — the byte-reclaim step
-    * [[delete]] defers ([[compact]] bounds FILE COUNT but never drops a
-    * tombstone; deleted codes stay on disk until this runs). The masked
-    * [[load]] IS the surviving index, so purge is exactly load → save:
-    * deleted ids' codes are gone physically, the quantizer is copied
-    * untouched, and a serve from `freshDir` equals the masked serve from
-    * `dir` (gated value-exact + spec-pinned). Run it at whatever cadence
-    * bounds the tombstone fraction; after a purge a deleted id CAN be
-    * re-[[append]]ed (the tombstone no longer exists to mask it). */
-  def purge(spark: org.apache.spark.sql.SparkSession, dir: String,
-            freshDir: String): Unit =
-    load(spark, dir).save(freshDir)
-
-  /** STREAMING ingest into the standing compressed index: every
-    * micro-batch of `vectors` is encoded against the frozen codebooks
-    * and landed as its own codes partition via [[append]], keyed by
-    * `baseBatch + streaming batchId`. Because append is idempotent per
-    * batchId and Structured Streaming REPLAYS an uncommitted micro-batch
-    * under the SAME batchId after a crash, the re-run overwrites the
-    * identical partition — exactly-once index ingest with no manifest
-    * beyond the stream's own checkpoint. `baseBatch` must clear every
-    * batch id already present (a [[PqIndex.save]] is batch 0; the
-    * default 1 suits a freshly built index). The default
-    * Trigger.AvailableNow drains the source and stops — pass a
-    * processing-time trigger for continuous ingest. A FRESH checkpoint
-    * whose baseBatch collides with already-landed partitions fails fast
-    * at start ([[IngestGuard]]) instead of silently overwriting them. */
   def ingestStream(dir: String, vectors: DataFrame, idCol: String,
                    vecCol: String, checkpoint: String,
                    baseBatch: Long = 1L,
                    trigger: org.apache.spark.sql.streaming.Trigger =
                      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    IngestGuard.requireFreshBase(spark,
-      Seq(s"$dir/codes"), checkpoint, baseBatch)
-    // The quantizer state is FROZEN for the life of the stream (the
-    // append contract): resolve it ONCE up front — routing each batch
-    // through append() re-read rotation + codebooks (driver round trips
-    // and a collect job) per micro-batch.
-    val rotLocal = IndexRoot.readRotation(spark, dir)
-      .map(SimilaritySearch.localRotationFrame)
-    val (cbs, starts) = SimilaritySearch.pqCodebooksFromDf(
-      spark.read.parquet(s"$dir/codebooks"))
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val in = rotLocal match {
-          case Some(r) => SimilaritySearch.rotateVectors(batch, r, idCol, vecCol)
-          case None => batch
-        }
-        SimilaritySearch.encodePqPrepared(cbs, starts, in, idCol, vecCol)
-          .write.mode("overwrite").parquet(s"$dir/codes/batch=${baseBatch + id}")
-      }
-      .trigger(trigger)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamBatches(dir, vectors, checkpoint, baseBatch, trigger)(
+      encoder(vectors.sparkSession, dir, idCol, vecCol))
 }
 
-/** Fail-fast guard for the ingestStream exactly-once contract (shared by
-  * all index families). `append` is idempotent per batchId — which is only
-  * safe while the batchId sequence never collides with partitions an
-  * EARLIER stream (or save/append) already landed. A RETAINED checkpoint
-  * is always safe: committed micro-batches are never re-run, and an
-  * uncommitted replay overwrites the identical partition it half-wrote.
-  * But a FRESH checkpoint restarts streaming batchIds at 0, so a stale
-  * `baseBatch` would make the per-batch mode("overwrite") silently clobber
-  * standing `batch=N` data — a silent data-loss path (r14 ADVICE). This
-  * detects exactly that startup shape and refuses to start: no committed
-  * offsets at `checkpoint` AND an existing partition id >= `baseBatch`
-  * under any of the index's partitioned subdirs. */
-private[operators] object IngestGuard {
-  def requireFreshBase(spark: org.apache.spark.sql.SparkSession,
-                       subdirs: Seq[String], checkpoint: String,
-                       baseBatch: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val off = new org.apache.hadoop.fs.Path(s"$checkpoint/offsets")
-    val offFs = off.getFileSystem(conf)
-    // an established stream (>= 1 offset file) replays safely by contract
-    if (offFs.exists(off) && offFs.listStatus(off).nonEmpty) return
-    subdirs.foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(sub)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) {
-        val present = fs.listStatus(p).toSeq
-          .map(_.getPath.getName)
-          .filter(_.startsWith("batch="))
-          .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-        val clash = present.filter(_ >= baseBatch)
-        if (clash.nonEmpty) throw new IllegalStateException(
-          s"ingestStream with a FRESH checkpoint ($checkpoint) would overwrite " +
-            s"existing partition(s) batch=${clash.min}..${clash.max} under $sub: " +
-            s"streaming batchIds restart at 0, so baseBatch=$baseBatch collides " +
-            s"with already-ingested data. Pass baseBatch > ${present.max} " +
-            "(or reuse the original checkpoint to resume the stream).")
-      }
-    }
-  }
-}
-
-/** A persisted hyperplane-LSH index: `bands` = (id, band, sig) — the
+/** A persisted hyperplane-LSH index: `bands` = (id, band, sig), the
   * corpus bucket table, numBands rows per vector; `vectors` = (id, v,
-  * nrm) — the exact-scoring table with precomputed norms. Build with
-  * `SimilaritySearch.buildLshIndex`, serve with `searchLshIndex`.
-  *
-  * On-disk layout is hive-batch-partitioned (`bands/batch=<id>/`,
-  * `vectors/batch=<id>/`; a [[save]] is batch 0) so a STANDING index
-  * grows by [[append]]ing each new corpus batch as its own partition —
-  * signatures are pure per-vector functions, so nothing existing is
-  * re-hashed and an appended index serves exactly what a from-scratch
-  * build over the unioned corpus serves (spec-pinned). Appends are
-  * idempotent per batchId (overwrite of that partition only), matching
-  * the streaming-index exactly-once discipline. Long-lived indexes
-  * [[compact]] on whatever cadence bounds their file count: one
-  * directory per ingest batch eventually makes partition LISTING the
-  * per-query cost — the same small-file arc the streaming near-dup
-  * index hit, solved by the same duplicate-tolerant add-before-remove
-  * machinery ([[PartitionedCompaction]]; band/vector rows are globally
-  * distinct given unique vector ids, and candidate derivation is
-  * distinct-collapsed, so its crash-safety argument transfers). */
+  * nrm), the exact-scoring table with precomputed norms. No frozen state:
+  * signatures are pure functions of the band shape. Build with
+  * `SimilaritySearch.buildLshIndex`, serve with `searchLshIndex`; the
+  * lifecycle is [[IndexRoot]]'s. A long-lived appended index compacts on
+  * whatever cadence bounds its file count: one directory per ingest batch
+  * eventually makes partition LISTING the per-query cost. */
 final case class LshIndex(bands: DataFrame, vectors: DataFrame) {
-  /** Persist both halves under `dir` (batch=0). Sweeps stale
-    * `batch>0` partitions and `deletes/` first — see [[PqIndex.save]]. */
-  def save(dir: String): Unit = {
-    IndexRoot.clearStale(bands.sparkSession, dir,
-      "bands", "vectors", "deletes")
-    // independent halves — overlap the two write legs
-    IndexRoot.inParallel(
-      () => bands.write.mode("overwrite").parquet(s"$dir/bands/batch=0"),
-      () => vectors.write.mode("overwrite").parquet(s"$dir/vectors/batch=0"))
-  }
+  def save(dir: String): Unit = LshIndex.save(this, dir)
 
   /** BANDS-ONLY persistence — the storage-economics option for
     * deployments that keep their corpus parquet anyway: the vectors half
@@ -372,181 +324,61 @@ final case class LshIndex(bands: DataFrame, vectors: DataFrame) {
     * skipping it cuts the standing bill from 558 to 159 B/vec and the
     * index holds ONLY what the corpus can't reproduce: the hashed band
     * rows. Serve by rebinding the vectors half to the corpus at load
-    * ([[LshIndex.loadBandsOnly]]) — the scoring rows are derived by the
-    * SAME cast-at-read + norm the ingest applies, so the serve is
-    * value-identical to the self-contained index's (spec-pinned). */
-  def saveBandsOnly(dir: String): Unit = {
-    IndexRoot.clearStale(bands.sparkSession, dir, "bands", "deletes")
-    bands.write.mode("overwrite").parquet(s"$dir/bands/batch=0")
-  }
+    * ([[LshIndex.loadBandsOnly]]). Sweeps a stale `vectors/` like any
+    * save, so a plain [[LshIndex.load]] of the root fails loudly instead
+    * of pairing these bands with an older index's vectors. */
+  def saveBandsOnly(dir: String): Unit =
+    IndexRoot.write(bands.sparkSession, dir, Nil, LshIndex.tables,
+      Seq("bands" -> bands))
 }
 
-object LshIndex {
-  /** Loads both layouts: batch-partitioned (current) and the legacy flat
-    * parquet a pre-r13 save produced (the drop("batch") is a no-op
-    * there). A legacy index serves fine but must be re-[[LshIndex.save]]d
-    * before [[append]]ing — mixing flat files and batch=N dirs under one
-    * root fails Spark's partition discovery loudly, by design.
-    *
-    * If the index carries tombstones ([[delete]]), both halves come back
-    * with the deleted ids anti-joined out, so every serve path is
-    * oblivious to deletion — a searched result EQUALS a from-scratch
-    * build over the surviving corpus (pure per-vector signatures;
-    * spec-pinned and gated). The anti-join keys on the 8-byte id — a
-    * small tombstone set broadcasts, a huge one is a plain equi-join;
-    * neither touches vectors or re-hashes anything. The mask is
-    * ingest-order-blind: a deleted id stays masked even if re-appended
-    * later (see [[delete]] for the purge-then-reingest un-delete path). */
-  def load(spark: org.apache.spark.sql.SparkSession, dir: String): LshIndex = {
-    // independent listing+schema-inference legs — overlap (IndexRoot.ioEc)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IndexRoot.ioEc
-    val fBands = Future(spark.read.parquet(s"$dir/bands").drop("batch"))
-    val fVectors = Future(spark.read.parquet(s"$dir/vectors").drop("batch"))
-    val fDel = Future {
-      val delPath = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-      val fs = delPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(delPath))
-        Some(spark.read.parquet(s"$dir/deletes").drop("batch")
-          .select(col("id")).distinct())
-      else None
-    }
-    val bands = Await.result(fBands, Duration.Inf)
-    val vectors = Await.result(fVectors, Duration.Inf)
-    Await.result(fDel, Duration.Inf) match {
-      case Some(del) => LshIndex(bands.join(del, Seq("id"), "left_anti"),
-        vectors.join(del, Seq("id"), "left_anti"))
-      case None => LshIndex(bands, vectors)
-    }
-  }
+object LshIndex extends IndexRoot.Family[LshIndex] {
+  private[operators] val tables = Seq("bands", "vectors")
+  private[operators] def frozen(ix: LshIndex) = Nil
+  private[operators] def rows(ix: LshIndex) = Seq(ix.bands, ix.vectors)
 
-  /** Tombstone-delete vector ids from a standing index — the opt-out /
-    * takedown path a long-lived training-data index needs: nothing is
-    * rewritten at delete time (the id rows land under
-    * `deletes/batch=<batchId>`); [[load]] masks tombstoned ids out of
-    * both halves. Tombstones are ADD-ONLY: every call APPENDS its id
-    * rows — never overwrites — so two deletes sharing a batchId (the
-    * default included) accumulate instead of the second silently
-    * resurrecting the first's taken-down ids (r13 ADVICE), and a delete
-    * issued after a [[compact]] (which merges tombstones into
-    * `batch=<upToBatch>`) can never clobber the compacted set. The
-    * monotonicity makes replays safe too: duplicates from a retried or
-    * crash-rerun delete collapse under load's distinct(), and a partial
-    * crash-write only ever UNDER-masks until the rerun lands — at no
-    * point does a previously-tombstoned id come back.
-    *
-    * Re-add semantics (differs from FAISS, by design): the mask keys on
-    * the 8-byte id alone, so an id [[append]]ed again AFTER a delete
-    * stays masked — tombstones outlive ingest order. Un-deleting needs a
-    * physical purge first: `LshIndex.load(spark, dir).save(freshDir)`
-    * rewrites the surviving rows into a clean tombstone-free index (the
-    * same one-liner that reclaims bytes when the tombstone fraction
-    * warrants it), after which the id can be re-ingested. Deleting an id
-    * not in the index is a harmless no-op (anti-join semantics). */
-  def delete(dir: String, ids: org.apache.spark.sql.DataFrame,
-             idCol: String, batchId: Long = 1L): Unit =
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.mode("append").parquet(s"$dir/deletes/batch=$batchId")
+  def load(spark: SparkSession, dir: String): LshIndex = {
+    val Seq(bands, vectors) = IndexRoot.masked(spark, dir, tables, Nil)
+    LshIndex(bands, vectors)
+  }
 
   /** Load a BANDS-ONLY index ([[LshIndex.saveBandsOnly]]) by rebinding
     * its vectors half to the caller's corpus frame: scoring rows are
     * derived cast-at-read (`array<double>` + precomputed norm — the SAME
     * prep the ingest applies, and parquet float→double widening is
     * exact), so serving is value-identical to a self-contained index
-    * over the same corpus (spec-pinned). Tombstones, if present, mask
-    * BOTH halves — the corpus frame may still contain deleted ids, but
-    * they can neither become candidates (bands masked) nor scoring rows
-    * (vectors masked), matching [[load]]'s from-scratch-on-survivors
-    * contract. The corpus must contain every ingested id (candidate
-    * scoring is an inner equi-join on id — a missing vector silently
-    * drops its candidates, which is why the self-contained [[save]] is
-    * the default and this is the opt-in for corpora that are already
-    * durable parquet). */
-  def loadBandsOnly(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    corpus: DataFrame, idCol: String,
-                    vecCol: String): LshIndex = {
-    val bands = spark.read.parquet(s"$dir/bands").drop("batch")
-    val vectors = SimilaritySearch.preparedVectors(corpus, idCol, vecCol)
-    val delPath = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-    val fs = delPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(delPath)) {
-      val del = spark.read.parquet(s"$dir/deletes").drop("batch")
-        .select(col("id")).distinct()
-      LshIndex(bands.join(del, Seq("id"), "left_anti"),
-        vectors.join(del, Seq("id"), "left_anti"))
-    } else LshIndex(bands, vectors)
+    * over the same corpus (spec-pinned). Tombstones mask BOTH halves, so
+    * deleted ids the corpus still holds never score. The corpus must
+    * contain every ingested id: candidate scoring is an inner equi-join
+    * on id, so a missing vector silently drops its candidates. */
+  def loadBandsOnly(spark: SparkSession, dir: String, corpus: DataFrame,
+                    idCol: String, vecCol: String): LshIndex = {
+    val Seq(bands, vectors) = IndexRoot.masked(spark, dir, Seq("bands"),
+      Seq(SimilaritySearch.preparedVectors(corpus, idCol, vecCol)))
+    LshIndex(bands, vectors)
   }
 
-  /** Incremental ingest: hash ONLY `batch`'s vectors and land their band
-    * rows + (id, v, nrm) scoring rows as partition `batch=<batchId>` of
-    * the standing index at `dir`. Ids must be unique across batches
-    * (rows, not upserts). Existing partitions are untouched; re-running
-    * the same batchId overwrites only its own partition. */
+  private def encoder(idCol: String, vecCol: String, bitsPerBand: Int,
+                      numBands: Int): DataFrame => Seq[DataFrame] =
+    batch => Seq(
+      SimilaritySearch.lshBands(batch, idCol, vecCol, bitsPerBand, numBands),
+      SimilaritySearch.preparedVectors(batch, idCol, vecCol))
+
   def append(dir: String, batch: DataFrame, idCol: String, vecCol: String,
              bitsPerBand: Int = 12, numBands: Int = 224,
              batchId: Long = 1L): Unit =
-    // independent halves — overlap the two write legs (IndexRoot.ioEc)
-    IndexRoot.inParallel(
-      () => SimilaritySearch.lshBands(batch, idCol, vecCol, bitsPerBand, numBands)
-        .write.mode("overwrite").parquet(s"$dir/bands/batch=$batchId"),
-      () => SimilaritySearch.preparedVectors(batch, idCol, vecCol)
-        .write.mode("overwrite").parquet(s"$dir/vectors/batch=$batchId"))
+    appendBatch(dir, batch, batchId)(
+      encoder(idCol, vecCol, bitsPerBand, numBands))
 
-  /** Collapse every `batch <= upToBatch` partition of both halves into a
-    * single partition each — the file-count bound for a long-lived
-    * appended index. Crash-safe with no manifest: see
-    * [[PartitionedCompaction]]. Compact only batches whose append has
-    * completed. */
-  def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-              upToBatch: Long): Unit = {
-    PartitionedCompaction.compactPartitioned(spark, s"$dir/bands", upToBatch)
-    PartitionedCompaction.compactPartitioned(spark, s"$dir/vectors", upToBatch)
-    // tombstones are id rows under the same layout; a no-op if absent
-    PartitionedCompaction.compactPartitioned(spark, s"$dir/deletes", upToBatch)
-  }
-
-  /** PHYSICAL PURGE: rewrite the surviving (tombstone-masked) index into
-    * a clean tombstone-free index at `freshDir` — [[PqIndex.purge]]'s
-    * contract for the LSH family (both halves rewritten at their
-    * surviving rows, deletes dir gone, serve equality spec-pinned). */
-  def purge(spark: org.apache.spark.sql.SparkSession, dir: String,
-            freshDir: String): Unit =
-    load(spark, dir).save(freshDir)
-
-  /** STREAMING ingest into the standing LSH index: every micro-batch of
-    * `vectors` is hashed and landed as its own (bands, vectors)
-    * partition pair via [[append]], keyed by `baseBatch + streaming
-    * batchId`. Append is idempotent per batchId and Structured Streaming
-    * replays an uncommitted micro-batch under the SAME id, so a crash
-    * between the append and the checkpoint commit re-lands the identical
-    * partitions on restart — exactly-once index ingest, no manifest
-    * beyond the stream's checkpoint ([[PqIndex.ingestStream]] is the
-    * compressed-index twin; the contract is shared). `baseBatch` must
-    * clear every batch id already present (a [[save]] is batch 0).
-    * Trigger.AvailableNow (default) drains and stops; pass a
-    * processing-time trigger for continuous ingest, and [[compact]] on
-    * whatever cadence bounds the partition count it accumulates. A FRESH
-    * checkpoint whose baseBatch collides with already-landed partitions
-    * fails fast at start ([[IngestGuard]]). */
   def ingestStream(dir: String, vectors: DataFrame, idCol: String,
                    vecCol: String, checkpoint: String,
                    bitsPerBand: Int = 12, numBands: Int = 224,
                    baseBatch: Long = 1L,
                    trigger: org.apache.spark.sql.streaming.Trigger =
                      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    IngestGuard.requireFreshBase(vectors.sparkSession,
-      Seq(s"$dir/bands", s"$dir/vectors"), checkpoint, baseBatch)
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        append(dir, batch, idCol, vecCol, bitsPerBand, numBands,
-          baseBatch + id)
-      }
-      .trigger(trigger)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamBatches(dir, vectors, checkpoint, baseBatch, trigger)(
+      encoder(idCol, vecCol, bitsPerBand, numBands))
 }
 
 /** A persisted IVF-PQ index (the FAISS-style billion-scale layout):
@@ -554,140 +386,69 @@ object LshIndex {
   * as in [[PqIndex]]; `codes` = (id, list_id, code BINARY) — each corpus
   * vector's list assignment plus its m-byte PQ code. Queries probe only
   * nProbe lists, so the ADC scan touches ~nProbe/C of the codes instead
-  * of all of them.
-  *
-  * The PRODUCTION standing-index shape (14.6 B/vec measured at sf10 —
-  * SCALE.md storage table), with the full lifecycle the other index
-  * families carry: `codes` is hive-batch-partitioned on disk
-  * (`codes/batch=<id>/`; a [[save]] is batch 0) so the index grows by
-  * [[IvfPqIndex.append]] — list assignment and code are both pure
-  * per-vector functions of the frozen quantizer pair (centroids +
-  * codebooks), so nothing standing is touched and an appended index
-  * serves exactly what a from-scratch encode over the unioned corpus
-  * serves. Take down ids with [[IvfPqIndex.delete]] (tombstones masked
-  * at [[IvfPqIndex.load]], quantizers untouched — FAISS remove_ids),
-  * bound file count with [[IvfPqIndex.compact]]. `centroids` and
-  * `codebooks` stay flat dirs: training artifacts, written once.
+  * of all of them. The production standing-index shape (14.6 B/vec
+  * measured at sf10 — SCALE.md storage table); the lifecycle is
+  * [[IndexRoot]]'s, with list assignment and code both pure per-vector
+  * functions of the frozen quantizer pair.
   *
   * `byResidual` = the FAISS IndexIVFPQ DEFAULT encoding: codes quantize
   * the RESIDUAL (v − assigned centroid) instead of v itself. Residuals
   * are much smaller vectors than the raw corpus (the coarse quantizer
   * has already explained the centroid-scale structure), so the same m
   * bytes spend their resolution on the fine detail — measurably higher
-  * recall at the identical scan fraction and storage. The flag is part
-  * of the persisted index ([[save]] writes a `meta` sidecar;
-  * [[IvfPqIndex.load]] restores it) because codes from the two encodings
-  * are not interchangeable: serve and append must agree with build.
+  * recall at the identical scan fraction and storage. The flag is
+  * persisted as the `meta` sidecar, written UNCONDITIONALLY
+  * (by_residual=false included) so a raw save over a residual root
+  * overwrites the stale flag (r15 ADVICE): codes from the two encodings
+  * are not interchangeable, so serve and append must agree with build.
   *
-  * `rotation` = an optional OPQ pre-rotation (r16 — FAISS
-  * IndexPreTransform made FIRST-CLASS): when present, the index's codes
-  * live in ROTATED space and the rotation frame is persisted in the
-  * root (`rotation/` dir, written like the quantizers) so
-  * [[IvfPqIndex.append]], [[IvfPqIndex.ingestStream]] and
-  * `searchIvfPqIndex` rotate incoming batches/queries AUTOMATICALLY.
-  * Without this, every caller had to remember to pre-rotate each
-  * appended batch — forget once and raw-space codes land silently
-  * among rotated ones, the same silent-corruption class as the
-  * raw-vs-residual meta mixup. Orthogonality preserves cosines, so a
-  * rotated index's rankings are rankings of the original vectors. */
+  * `rotation` = an optional OPQ pre-rotation (FAISS IndexPreTransform
+  * made first-class): the codes live in ROTATED space and the persisted
+  * frame makes append, ingestStream and `searchIvfPqIndex` rotate
+  * incoming batches and queries AUTOMATICALLY — a caller who forgot to
+  * pre-rotate one batch would otherwise land raw-space codes silently
+  * among rotated ones. Orthogonality preserves cosines, so a rotated
+  * index's rankings are rankings of the original vectors. */
 final case class IvfPqIndex(centroids: DataFrame, codebooks: DataFrame,
                             codes: DataFrame, byResidual: Boolean = false,
                             rotation: Option[DataFrame] = None) {
-  /** The `meta` sidecar is written UNCONDITIONALLY (by_residual=false
-    * included) and BEFORE the codes: a raw save into a root that
-    * previously held a residual index must overwrite the stale flag
-    * (else load/append would silently decode raw codes as residuals —
-    * r15 ADVICE), and a crash between codes and meta must leave the OLD
-    * codes unreadable-as-wrong-mode rather than a residual index that
-    * loads as raw. Meta-then-codes means a crash mid-save leaves
-    * mismatched halves only in the window where the codes write itself
-    * is already torn (non-atomic parquet overwrite) — the sidecar can
-    * never be the lone stale survivor of a COMPLETED save. */
-  def save(dir: String): Unit = {
-    val spark = centroids.sparkSession
-    import spark.implicits._
-    // quantizer frames are bounded small (C ≤ 16384 centroids, m·ks
-    // codebook rows): one file each — see PqIndex.save. The four sidecar
-    // legs are independent (distinct dirs) and overlap
-    // (IndexRoot.inParallel); the crash-ordering contract — every sidecar
-    // including `meta` lands BEFORE the codes — is preserved because the
-    // parallel block is a barrier and codes still write last.
-    IndexRoot.inParallel(
-      () => centroids.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/centroids"),
-      () => codebooks.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/codebooks"),
-      // the rotation is part of the quantizer state: written before the
-      // codes for the same stale-sidecar reasons as `meta`; an un-rotated
-      // save REMOVES a stale rotation dir so a later append can never
-      // rotate batches against a frame the codes were not encoded with
-      () => IndexRoot.writeRotation(spark, dir, rotation),
-      () => Seq(byResidual).toDF("by_residual")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))
-    // a save claims the whole root: stale codes/batch>0 and deletes/
-    // from a previous index at this path would otherwise survive (only
-    // batch=0 is overwritten) and a later load would union codes from a
-    // different quantizer/rotation frame and mask fresh ids with old
-    // tombstones (r16 ADVICE). Swept after meta so the meta-then-codes
-    // crash reasoning above still holds.
-    IndexRoot.clearStale(spark, dir, "codes", "deletes")
-    codes.write.mode("overwrite").parquet(s"$dir/codes/batch=0")
-  }
+  def save(dir: String): Unit = IvfPqIndex.save(this, dir)
 }
 
-object IvfPqIndex {
-  /** Tombstones ([[delete]]) are anti-joined out of the codes table, so
-    * probes can never surface a deleted vector and a masked serve equals
-    * one over an index whose codes were never written for those ids
-    * (spec-pinned and gated; the 8-byte-id mask mechanics are
-    * [[PqIndex.load]]'s). Centroids and codebooks come back untouched —
-    * deletion never retrains either quantizer. Loads both codes layouts
-    * (batch-partitioned + the legacy flat pre-r14 save; re-save before
-    * appending to a legacy index). Ingest-order-blind mask: a deleted id
-    * stays masked even if re-appended, until a physical purge
-    * (`IvfPqIndex.load(spark, dir).save(freshDir)`). */
-  def load(spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqIndex = {
-    // five independent listing/schema-inference/read legs — overlap them
-    // (IndexRoot.ioEc); sequential, each cost a driver round trip
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IndexRoot.ioEc
-    val fMasked = Future {
-      val codes = spark.read.parquet(s"$dir/codes").drop("batch")
-      val conf = spark.sessionState.newHadoopConf()
-      val delPath = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-      val fs = delPath.getFileSystem(conf)
-      if (fs.exists(delPath)) {
-        val del = spark.read.parquet(s"$dir/deletes").drop("batch")
-          .select(col("id")).distinct()
-        codes.join(del, Seq("id"), "left_anti")
-      } else codes
-    }
-    val fCent = Future(spark.read.parquet(s"$dir/centroids"))
-    val fCb = Future(spark.read.parquet(s"$dir/codebooks"))
-    val fRes = Future(readByResidual(spark, dir))
-    val fRot = Future(IndexRoot.readRotation(spark, dir))
-    IvfPqIndex(Await.result(fCent, Duration.Inf),
-      Await.result(fCb, Duration.Inf), Await.result(fMasked, Duration.Inf),
-      byResidual = Await.result(fRes, Duration.Inf),
-      rotation = Await.result(fRot, Duration.Inf))
+object IvfPqIndex extends IndexRoot.Family[IvfPqIndex] {
+  private[operators] val tables = Seq("codes")
+  private[operators] def frozen(ix: IvfPqIndex) =
+    frozenLegs(ix.centroids, ix.codebooks, ix.rotation, ix.byResidual)
+  private[operators] def rows(ix: IvfPqIndex) = Seq(ix.codes)
+
+  private def frozenLegs(centroids: DataFrame, codebooks: DataFrame,
+                         rotation: Option[DataFrame], byResidual: Boolean) = {
+    val spark = centroids.sparkSession
+    import spark.implicits._
+    Seq("centroids" -> Some(centroids), "codebooks" -> Some(codebooks),
+      "rotation" -> rotation,
+      "meta" -> Some(Seq(byResidual).toDF("by_residual")))
   }
 
-  /** The persisted encoding flag. Since r16 every save writes the `meta`
-    * sidecar (by_residual=false included); absence = raw-vector codes —
-    * a pre-r16 raw index, back-compatible by construction. An EXISTING
-    * but unreadable/rowless meta dir (crash-torn write, leftover
-    * _temporary) is surfaced as a clear index-corruption error instead
-    * of an opaque NoSuchElementException (r15 ADVICE): guessing an
-    * encoding here would silently serve garbage rankings. */
-  private def readByResidual(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Boolean = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(metaPath)) false
-    else try {
-      val rows = spark.read.parquet(s"$dir/meta")
-        .select(col("by_residual")).head(1)
+  def load(spark: SparkSession, dir: String): IvfPqIndex = {
+    lazy val cent = spark.read.parquet(s"$dir/centroids")
+    lazy val cb = spark.read.parquet(s"$dir/codebooks")
+    lazy val rot = IndexRoot.readRotation(spark, dir)
+    lazy val res = readByResidual(spark, dir)
+    val Seq(codes) = IndexRoot.masked(spark, dir, tables, Nil,
+      () => cent, () => cb, () => rot, () => res)
+    IvfPqIndex(cent, cb, codes, res, rot)
+  }
+
+  /** The persisted encoding flag. Absence = raw-vector codes (a pre-r16
+    * raw index, back-compatible by construction). An EXISTING but
+    * unreadable or rowless meta dir (crash-torn write, leftover
+    * _temporary) is a clear index-corruption error instead of an opaque
+    * NoSuchElementException (r15 ADVICE): guessing an encoding here would
+    * silently serve garbage rankings. */
+  private def readByResidual(spark: SparkSession, dir: String): Boolean =
+    try IndexRoot.sidecar(spark, dir, "meta").exists { meta =>
+      val rows = meta.select(col("by_residual")).head(1)
       require(rows.nonEmpty, "meta parquet has no rows")
       rows(0).getBoolean(0)
     } catch {
@@ -697,98 +458,52 @@ object IvfPqIndex {
           "codes are decoded, so refusing to guess — restore meta or " +
           "rebuild the index.", e)
     }
+
+  private def encoder(spark: SparkSession, dir: String, idCol: String,
+                      vecCol: String): DataFrame => Seq[DataFrame] = {
+    lazy val rot = IndexRoot.rotationMatrix(spark, dir)
+    lazy val res = readByResidual(spark, dir)
+    lazy val cent = SimilaritySearch.collectCentroidArr(
+      spark.read.parquet(s"$dir/centroids"))
+    lazy val cb = SimilaritySearch.pqCodebooksFromDf(
+      spark.read.parquet(s"$dir/codebooks"))
+    IndexRoot.inParallel(() => rot, () => res, () => cent, () => cb)
+    val ((cbs, starts), r, c, byRes) = (cb, rot, cent, res)
+    batch => Seq(SimilaritySearch.encodeIvfPqPrepared(c, cbs, starts,
+      IndexRoot.rotated(batch, r, idCol, vecCol), idCol, vecCol, byRes))
   }
 
-  /** Incremental ingest: assign+encode ONLY `batch`'s vectors against the
-    * standing index's frozen centroids and codebooks (one fused narrow
-    * pass — the same kernel the build runs, so incremental codes can
-    * never disagree with built codes) and land the (id, list_id, code)
-    * rows as partition `codes/batch=<batchId>`. Idempotent per batchId
-    * (overwrite of that partition only); ids unique across batches. The
-    * persisted `meta` flag decides the encoding, so an append to a
-    * residual index produces residual codes automatically — and a
-    * persisted `rotation` frame rotates the batch automatically before
-    * encoding (r16): the caller can never land raw-space codes in a
-    * rotated index. */
-  def append(spark: org.apache.spark.sql.SparkSession, dir: String,
-             batch: DataFrame, idCol: String, vecCol: String,
-             batchId: Long = 1L): Unit = {
-    // the four frozen-state reads (rotation, meta, centroids, codebooks)
-    // are independent driver round trips — overlap them (IndexRoot.ioEc)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IndexRoot.ioEc
-    val fRot = Future(IndexRoot.readRotation(spark, dir))
-    val fRes = Future(readByResidual(spark, dir))
-    val fCent = Future(SimilaritySearch.collectCentroidArr(
-      spark.read.parquet(s"$dir/centroids")))
-    val fCb = Future(SimilaritySearch.pqCodebooksFromDf(
-      spark.read.parquet(s"$dir/codebooks")))
-    val in = Await.result(fRot, Duration.Inf) match {
-      case Some(rot) => SimilaritySearch.rotateVectors(batch, rot, idCol, vecCol)
-      case None => batch
-    }
-    val (cbs, starts) = Await.result(fCb, Duration.Inf)
-    SimilaritySearch.encodeIvfPqPrepared(Await.result(fCent, Duration.Inf),
-        cbs, starts, in, idCol, vecCol,
-        byResidual = Await.result(fRes, Duration.Inf))
-      .write.mode("overwrite").parquet(s"$dir/codes/batch=$batchId")
-  }
+  def append(spark: SparkSession, dir: String, batch: DataFrame,
+             idCol: String, vecCol: String, batchId: Long = 1L): Unit =
+    appendBatch(dir, batch, batchId)(encoder(spark, dir, idCol, vecCol))
 
-  /** Tombstone-delete vector ids — the same ADD-ONLY contract as
-    * [[PqIndex.delete]] / [[LshIndex.delete]]: id rows APPENDED under
-    * `deletes/batch=<batchId>` (batchId reuse or a post-[[compact]]
-    * delete can never resurrect earlier takedowns), phantom ids a no-op,
-    * re-appended ids masked until the physical purge (load → save to a
-    * fresh root). Nothing is rewritten at delete time; the quantizers
-    * stay frozen (FAISS remove_ids semantics). */
-  def delete(dir: String, ids: DataFrame, idCol: String,
-             batchId: Long = 1L): Unit =
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.mode("append").parquet(s"$dir/deletes/batch=$batchId")
-
-  /** Collapse every `batch <= upToBatch` partition of codes AND
-    * tombstones into one partition each ([[PartitionedCompaction]] —
-    * crash-safe, manifest-free; tombstoned ids survive compaction, see
-    * [[PqIndex.compact]]). Compact only batches whose append completed. */
-  def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-              upToBatch: Long): Unit = {
-    PartitionedCompaction.compactPartitioned(spark, s"$dir/codes", upToBatch)
-    PartitionedCompaction.compactPartitioned(spark, s"$dir/deletes", upToBatch)
-  }
-
-  /** PHYSICAL PURGE: rewrite the surviving (tombstone-masked) index into
-    * a clean tombstone-free index at `freshDir` — [[PqIndex.purge]]'s
-    * contract for the IVF family (codes rewritten at their surviving
-    * rows, both quantizers copied untouched, deletes dir gone). */
-  def purge(spark: org.apache.spark.sql.SparkSession, dir: String,
-            freshDir: String): Unit =
-    load(spark, dir).save(freshDir)
+  def ingestStream(dir: String, vectors: DataFrame, idCol: String,
+                   vecCol: String, checkpoint: String,
+                   baseBatch: Long = 1L,
+                   trigger: org.apache.spark.sql.streaming.Trigger =
+                     org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamBatches(dir, vectors, checkpoint, baseBatch, trigger)(
+      encoder(vectors.sparkSession, dir, idCol, vecCol))
 
   /** Clone ONLY the quantizer state of `srcRoot` — centroids, codebooks,
     * the `by_residual` meta flag, and the rotation frame if any — into
     * `destRoot`, with no codes and no tombstones (stale state at the
-    * destination is swept, the [[IvfPqIndex.save]] contract). This is the
-    * shard-encoder bootstrap for cluster-scale builds: train the
-    * quantizers ONCE on a bounded sample, emptyLike a root per shard,
-    * let each shard [[append]]/[[ingestStream]] its own slice locally
-    * (encode is a pure per-vector function of the frozen frame, so shard
-    * codes can never disagree with a centralized build), then [[merge]]
-    * the roots. A fresh emptyLike root has no codes yet — append at
-    * least one batch before [[load]]. */
-  def emptyLike(spark: org.apache.spark.sql.SparkSession,
-                srcRoot: String, destRoot: String): Unit = {
-    import spark.implicits._
-    spark.read.parquet(s"$srcRoot/centroids")
-      .write.mode("overwrite").parquet(s"$destRoot/centroids")
-    spark.read.parquet(s"$srcRoot/codebooks")
-      .write.mode("overwrite").parquet(s"$destRoot/codebooks")
-    IndexRoot.writeRotation(spark, destRoot,
-      IndexRoot.readRotation(spark, srcRoot))
-    Seq(readByResidual(spark, srcRoot)).toDF("by_residual")
-      .coalesce(1).write.mode("overwrite").parquet(s"$destRoot/meta")
-    IndexRoot.clearStale(spark, destRoot, "codes", "deletes")
-  }
+    * destination is swept, as by a save). This is the shard-encoder
+    * bootstrap for cluster-scale builds: train the quantizers ONCE on a
+    * bounded sample, emptyLike a root per shard, let each shard
+    * [[append]]/[[ingestStream]] its own slice locally (encode is a pure
+    * per-vector function of the frozen frame, so shard codes can never
+    * disagree with a centralized build), then [[merge]] the roots. A
+    * fresh emptyLike root has no codes yet — append at least one batch
+    * before [[load]]. */
+  def emptyLike(spark: SparkSession, srcRoot: String,
+                destRoot: String): Unit =
+    IndexRoot.write(spark, destRoot,
+      frozenLegs(spark.read.parquet(s"$srcRoot/centroids"),
+        spark.read.parquet(s"$srcRoot/codebooks"),
+        IndexRoot.readRotation(spark, srcRoot), readByResidual(spark, srcRoot)),
+      tables, Nil)
 
   /** Merge `srcRoot`'s codes AND tombstones into `destRoot` (FAISS
     * `merge_from`) — the reduce step of the sharded build [[emptyLike]]
@@ -805,39 +520,20 @@ object IvfPqIndex {
     * should be retried into a fresh copy of the destination. Each moved
     * batch is one bounded distributed copy; only batch NUMBERS (a
     * handful — [[compact]] bounds them) touch the driver. */
-  def merge(spark: org.apache.spark.sql.SparkSession,
+  def merge(spark: SparkSession,
             destRoot: String, srcRoot: String): Unit = {
     requireSameFrame(spark, destRoot, srcRoot)
-    val srcBatches = batchIds(spark, s"$srcRoot/codes").sorted
-    require(srcBatches.nonEmpty,
+    require(IndexRoot.batchIds(spark, s"$srcRoot/codes").nonEmpty,
       s"merge: $srcRoot has no codes/batch=* partitions to merge " +
         "(legacy flat-layout roots must be re-saved first)")
-    val destMax = batchIds(spark, s"$destRoot/codes")
-      .foldLeft(-1L)(math.max)
-    srcBatches.zipWithIndex.foreach { case (b, i) =>
-      spark.read.parquet(s"$srcRoot/codes/batch=$b")
-        .write.parquet(s"$destRoot/codes/batch=${destMax + 1 + i}")
-    }
-    val srcDels = batchIds(spark, s"$srcRoot/deletes").sorted
-    if (srcDels.nonEmpty) {
-      val destDelMax = batchIds(spark, s"$destRoot/deletes")
+    (tables :+ "deletes").foreach { t =>
+      val destMax = IndexRoot.batchIds(spark, s"$destRoot/$t")
         .foldLeft(-1L)(math.max)
-      srcDels.zipWithIndex.foreach { case (b, i) =>
-        spark.read.parquet(s"$srcRoot/deletes/batch=$b")
-          .write.parquet(s"$destRoot/deletes/batch=${destDelMax + 1 + i}")
+      IndexRoot.batchIds(spark, s"$srcRoot/$t").sorted.zipWithIndex.foreach {
+        case (b, i) => spark.read.parquet(s"$srcRoot/$t/batch=$b")
+          .write.parquet(s"$destRoot/$t/batch=${destMax + 1 + i}")
       }
     }
-  }
-
-  /** The hive batch partition numbers under `dir` (empty if absent). */
-  private def batchIds(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)
   }
 
   /** Exact content equality of the two roots' quantizer frames. The
@@ -846,7 +542,7 @@ object IvfPqIndex {
     * the serve path's centroid collect), and an [[emptyLike]]-cloned
     * frame is bit-identical parquet, so exact double comparison is the
     * right test — an epsilon would accept genuinely different frames. */
-  private def requireSameFrame(spark: org.apache.spark.sql.SparkSession,
+  private def requireSameFrame(spark: SparkSession,
                                destRoot: String, srcRoot: String): Unit = {
     def rows(dir: String, part: String, keys: Seq[String],
              vec: String): Seq[(String, Seq[Double])] =
@@ -874,48 +570,6 @@ object IvfPqIndex {
         s"merge: one of $destRoot / $srcRoot is rotated and the other is " +
           "not — their codes live in different spaces")
     }
-  }
-
-  /** STREAMING ingest into the standing IVF-PQ index — the
-    * [[LshIndex.ingestStream]] contract verbatim (idempotent [[append]]
-    * per `baseBatch + streaming batchId` + checkpoint replay =
-    * exactly-once): each micro-batch runs the fused assign+encode kernel
-    * against the frozen quantizer pair, nothing standing is touched. A
-    * FRESH checkpoint whose baseBatch collides with already-landed
-    * partitions fails fast at start ([[IngestGuard]]). */
-  def ingestStream(dir: String, vectors: DataFrame, idCol: String,
-                   vecCol: String, checkpoint: String,
-                   baseBatch: Long = 1L,
-                   trigger: org.apache.spark.sql.streaming.Trigger =
-                     org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    IngestGuard.requireFreshBase(spark,
-      Seq(s"$dir/codes"), checkpoint, baseBatch)
-    // The quantizer state is FROZEN for the life of the stream (the
-    // append contract): resolve it ONCE up front — routing each batch
-    // through append() re-read rotation + meta + centroids + codebooks
-    // (four driver round trips and two collect jobs) per micro-batch.
-    val rotLocal = IndexRoot.readRotation(spark, dir)
-      .map(SimilaritySearch.localRotationFrame)
-    val byRes = readByResidual(spark, dir)
-    val (cbs, starts) = SimilaritySearch.pqCodebooksFromDf(
-      spark.read.parquet(s"$dir/codebooks"))
-    val centArr = SimilaritySearch.collectCentroidArr(
-      spark.read.parquet(s"$dir/centroids"))
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val in = rotLocal match {
-          case Some(r) => SimilaritySearch.rotateVectors(batch, r, idCol, vecCol)
-          case None => batch
-        }
-        SimilaritySearch.encodeIvfPqPrepared(centArr, cbs, starts, in,
-            idCol, vecCol, byResidual = byRes)
-          .write.mode("overwrite").parquet(s"$dir/codes/batch=${baseBatch + id}")
-      }
-      .trigger(trigger)
-      .start()
   }
 }
 
@@ -1613,9 +1267,12 @@ object SimilaritySearch {
     * compares ids as 8-byte longs); feed it to any build/serve path —
     * FAISS IndexPreTransform composition. */
   def rotateVectors(df: DataFrame, rotation: DataFrame, idCol: String,
-                    vecCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+                    vecCol: String): DataFrame =
+    rotateBy(df, rotationMatrix(rotation), idCol, vecCol)
+
+  /** A rotation frame (i, rvec) as its dense d×d matrix. */
+  private[operators] def rotationMatrix(
+      rotation: DataFrame): Array[Array[Double]] = {
     val rows = rotation
       .select(col("i").cast("int"), col("rvec").cast("array<double>"))
       .collect().map(rr => (rr.getInt(0), rr.getSeq[Double](1).toArray))
@@ -1623,7 +1280,15 @@ object SimilaritySearch {
     require(rows.nonEmpty, "empty rotation frame")
     require(rows.iterator.map(_._1).toSeq == rows.indices,
       "rotation frame rows must be dense 0..dim-1")
-    val r = rows.map(_._2)
+    rows.map(_._2)
+  }
+
+  /** [[rotateVectors]] against an already-collected matrix — the ingest
+    * encoders resolve the frozen rotation once and rotate every batch. */
+  private[operators] def rotateBy(df: DataFrame, r: Array[Array[Double]],
+                                  idCol: String, vecCol: String): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
     val bcR = spark.sparkContext.broadcast(r)
     df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .as[(Long, Seq[Double])]
@@ -1984,16 +1649,6 @@ object SimilaritySearch {
       .sortBy(_._1)
     require(arr.nonEmpty, "empty centroids frame")
     arr
-  }
-
-  /** Collect a rotation frame into a driver-local relation, so each
-    * per-micro-batch [[rotateVectors]] call re-reads it without a
-    * cluster job or a parquet round trip. */
-  private[operators] def localRotationFrame(rot: DataFrame): DataFrame = {
-    val spark = rot.sparkSession
-    import spark.implicits._
-    rot.select(col("i").cast("int"), col("rvec").cast("array<double>"))
-      .as[(Int, Seq[Double])].collect().toSeq.toDF("i", "rvec")
   }
 
   /** ADC search over a persisted PQ index: the corpus is touched ONLY to
@@ -2458,25 +2113,17 @@ object SimilaritySearch {
     val spark = q.sparkSession
     import spark.implicits._
     // The three bounded driver pulls — query rows, codebooks, centroids —
-    // are independent jobs; overlap them (guide §2.6 / IndexRoot.ioEc).
+    // are independent jobs; overlap them (IndexRoot.inParallel).
     // The centroid table (bounded, C ≤ 16384) is collected ONCE and feeds
     // the probe broadcast, the auto-nProbe sizing, and the residual ADC's
     // center array — the previous shape scanned/collected it three times
     // (broadcast subtree + a count() job + a collect for residuals).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = IndexRoot.ioEc
-    val fQ = Future(collectQueries(q))
-    val fCb = Future(pqCodebooksFromDf(index.codebooks))
-    val fCent = Future(index.centroids
-      .select(col("cent_id").cast("long"), col("cv").cast("array<double>"))
-      .collect().map(rr => (rr.getLong(0), rr.getSeq[Double](1).toArray))
-      .sortBy(_._1))
-    val qRows = Await.result(fQ, Duration.Inf)
+    lazy val qRows = collectQueries(q)
+    lazy val cb = pqCodebooksFromDf(index.codebooks)
+    lazy val centRows = collectCentroidArr(index.centroids)
+    IndexRoot.inParallel(() => qRows, () => cb, () => centRows)
     require(qRows.nonEmpty, emptyMsg)
-    val (cbs, starts) = Await.result(fCb, Duration.Inf)
-    val centRows = Await.result(fCent, Duration.Inf)
-    require(centRows.nonEmpty, "empty centroids frame")
+    val (cbs, starts) = cb
     val cn = centRows.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
       .toDF("cent_id", "cv")
       .withColumn("cnrm", graft.operators.Dedup.l2norm(col("cv")))

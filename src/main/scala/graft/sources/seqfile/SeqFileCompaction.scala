@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.core.seqfile.ZoneMap
+import graft.util.PlanParallel
 
 /** Small-files compaction for seqfile directories — the maintenance job a
   * streaming sink's output needs at scale: a sink committing one file per

@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.sources._
 
 import graft.core.seqfile.{KeyBloom, SeqCompression, WritableType, ZoneEntry, ZoneKey, ZoneMap}
+import graft.util.PlanParallel
 
 /** Zone-map and Bloom pruning, planned on the driver: evaluate a query's
   * key and value predicates against each file's per-block sidecar and keep
