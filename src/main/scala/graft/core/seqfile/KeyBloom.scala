@@ -95,13 +95,24 @@ object KeyBloom {
   }
 
   def decode(s: String): KeyBloom = {
-    require(s.nonEmpty && s.charAt(0) == 'k', s"bad bloom encoding")
-    val sep = s.indexOf(':')
-    val k = s.substring(1, sep).toInt
-    val raw = Base64.getDecoder.decode(s.substring(sep + 1))
-    require(raw.length % 8 == 0 && raw.length > 0, "bad bloom payload")
-    val buf = java.nio.ByteBuffer.wrap(raw).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val bits = Array.fill(raw.length / 8)(buf.getLong())
+    val b = s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    decode(b, 0, b.length)
+  }
+
+  /** `decode` of the encoding held in `b(from until until)`, as a sidecar
+    * parser finds it, without first copying it into a string. */
+  def decode(b: Array[Byte], from: Int, until: Int): KeyBloom = {
+    require(until > from && b(from) == 'k', s"bad bloom encoding")
+    var sep = from + 1
+    while (sep < until && b(sep) != ':') sep += 1
+    require(sep > from + 1 && sep < until, s"bad bloom encoding")
+    val k = new String(b, from + 1, sep - from - 1,
+      java.nio.charset.StandardCharsets.ISO_8859_1).toInt
+    val raw = Base64.getDecoder.decode(
+      java.nio.ByteBuffer.wrap(b, sep + 1, until - sep - 1))
+    require(raw.remaining % 8 == 0 && raw.remaining > 0, "bad bloom payload")
+    val bits = new Array[Long](raw.remaining / 8)
+    raw.order(java.nio.ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(bits)
     new KeyBloom(bits, k)
   }
 }

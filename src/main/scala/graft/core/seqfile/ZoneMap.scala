@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Zone maps for SequenceFiles: per-record-block (offset, count, min key,
   * max key) statistics, written by our writer as a hidden sidecar next to
@@ -23,8 +23,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Scale (100 TB): one entry per ~1 MiB block → sidecars are ~0.005% of
   * data size; a selective key predicate over sorted-by-key files turns a
-  * full-corpus scan into a few block reads per file, and the pruning
-  * decision is executor-side (no driver bottleneck listing 800k sidecars).
+  * full-corpus scan into a few block reads per file. The pruning decision
+  * is made on the driver at planning time, from sidecars it parses once
+  * and keeps across queries while the data file and the sidecar keep their
+  * length and modification time (`graft.sources.seqfile.SidecarCache`),
+  * so a repeated query over unchanged files reads no sidecar.
   */
 sealed trait ZoneKey {
   /** Total order within the same concrete type. */
@@ -101,19 +104,7 @@ object ZoneMap {
     case ZoneKey.B(v) => s"b:${Base64.getEncoder.encodeToString(v)}"
   }
 
-  private def dec(s: String): ZoneKey = {
-    val body = s.substring(2)
-    s.charAt(0) match {
-      case 'l' => ZoneKey.L(body.toLong)
-      case 'd' => ZoneKey.D(java.lang.Double.longBitsToDouble(body.toLong))
-      case 'b' => ZoneKey.B(Base64.getDecoder.decode(body))
-      case c => throw new SeqFileFormatException(s"bad zone key tag '$c'")
-    }
-  }
-
   private def encOpt(k: Option[ZoneKey]): String = k.map(enc).getOrElse("-")
-  private def decOpt(s: String): Option[ZoneKey] =
-    if (s == "-") None else Some(dec(s))
 
   def render(keyClass: String, valueClass: String, fileLen: Long,
              entries: Seq[ZoneEntry]): String = {
@@ -134,18 +125,76 @@ object ZoneMap {
     sb.toString
   }
 
-  def parse(content: String): (String, String, Long, Seq[ZoneEntry]) = {
-    val lines = content.split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq
-    if (lines.isEmpty || lines.head != FormatHeader)
-      throw new SeqFileFormatException("not a graft.zonemap v2 sidecar")
-    val hdr = lines(1).split(' ')
-    val entries = lines.drop(2).map { l =>
-      val f = l.split(' ')
-      ZoneEntry(f(0).toLong, f(1).toLong, decOpt(f(2)), decOpt(f(3)),
-        decOpt(f(4)), decOpt(f(5)),
-        if (f.length > 6) Some(KeyBloom.decode(f(6))) else None)
+  def parse(content: String): (String, String, Long, Seq[ZoneEntry]) =
+    parse(content.getBytes(StandardCharsets.UTF_8))
+
+  /** `parse` of a sidecar's bytes as stored. Fields are cut from the bytes
+    * directly and base64 fields decoded from them, so no copy of the text
+    * is made. Lines are trimmed and blank ones skipped; an entry's fields
+    * past the seventh are ignored. */
+  def parse(b: Array[Byte]): (String, String, Long, Seq[ZoneEntry]) = {
+    var pos = 0
+    // the next non-blank line's trimmed [from, until), or None at the end
+    def line(): Option[(Int, Int)] = {
+      while (pos < b.length) {
+        var from = pos
+        while (pos < b.length && b(pos) != '\n') pos += 1
+        var until = pos
+        pos += 1
+        while (from < until && (b(from) & 0xff) <= ' ') from += 1
+        while (until > from && (b(until - 1) & 0xff) <= ' ') until -= 1
+        if (from < until) return Some((from, until))
+      }
+      None
     }
-    (hdr(0), hdr(1), hdr(2).toLong, entries)
+    // the space-separated fields of b(from until until), as (from, until)
+    def fields(from: Int, until: Int): IndexedSeq[(Int, Int)] = {
+      val out = IndexedSeq.newBuilder[(Int, Int)]
+      var i = from
+      while (i <= until) {
+        var j = i
+        while (j < until && b(j) != ' ') j += 1
+        out += ((i, j))
+        i = j + 1
+      }
+      out.result()
+    }
+    def str(f: (Int, Int)): String =
+      new String(b, f._1, f._2 - f._1, StandardCharsets.UTF_8)
+    def long(f: (Int, Int)): Long = str(f).toLong
+    def key(f: (Int, Int)): Option[ZoneKey] =
+      if (f._2 - f._1 == 1 && b(f._1) == '-') None
+      else if (f._2 - f._1 < 2 || b(f._1 + 1) != ':')
+        throw new SeqFileFormatException(s"bad zone key '${str(f)}'")
+      else {
+        val body = (f._1 + 2, f._2)
+        Some(b(f._1).toChar match {
+          case 'l' => ZoneKey.L(long(body))
+          case 'd' => ZoneKey.D(java.lang.Double.longBitsToDouble(long(body)))
+          case 'b' =>
+            val d = Base64.getDecoder.decode(
+              java.nio.ByteBuffer.wrap(b, body._1, body._2 - body._1))
+            ZoneKey.B(if (d.remaining == d.array.length) d.array
+                      else java.util.Arrays.copyOf(d.array, d.remaining))
+          case c => throw new SeqFileFormatException(s"bad zone key tag '$c'")
+        })
+      }
+
+    val first = line()
+    if (first.forall(f => str(f) != FormatHeader))
+      throw new SeqFileFormatException("not a graft.zonemap v2 sidecar")
+    val hdr = line().map(f => fields(f._1, f._2)).getOrElse(
+      throw new SeqFileFormatException("sidecar without a class line"))
+    val entries = Vector.newBuilder[ZoneEntry]
+    var l = line()
+    while (l.nonEmpty) {
+      val f = fields(l.get._1, l.get._2)
+      entries += ZoneEntry(long(f(0)), long(f(1)), key(f(2)), key(f(3)),
+        key(f(4)), key(f(5)),
+        if (f.length > 6) Some(KeyBloom.decode(b, f(6)._1, f(6)._2)) else None)
+      l = line()
+    }
+    (str(hdr(0)), str(hdr(1)), long(hdr(2)), entries.result())
   }
 
   /** Write the sidecar for `dataPath` (overwrites any previous one). */
@@ -167,17 +216,30 @@ object ZoneMap {
                     valueClass: String, actualLen: Long): Option[Seq[ZoneEntry]] =
     try {
       val fs = dataPath.getFileSystem(conf)
-      val sp = sidecarPath(dataPath)
-      if (!fs.exists(sp)) None
-      else {
-        val in = fs.open(sp)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val (kc, vc, len, entries) = parse(content)
-        if (kc == keyClass && vc == valueClass && len == actualLen)
-          Some(entries)
-        else None
-      }
+      readValidated(fs, fs.getFileStatus(sidecarPath(dataPath)), keyClass,
+        valueClass, actualLen)
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** `readValidated` of the sidecar whose status the caller already holds. */
+  def readValidated(fs: FileSystem, sidecar: FileStatus, keyClass: String,
+                    valueClass: String, actualLen: Long): Option[Seq[ZoneEntry]] =
+    try {
+      val (kc, vc, len, entries) = parse(readBytes(fs, sidecar))
+      if (kc == keyClass && vc == valueClass && len == actualLen) Some(entries)
+      else None
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** A sidecar's bytes, in one read of exactly `sidecar`'s length. Fails
+    * when the file no longer has that length, so bytes read are always the
+    * whole of one version of the file. */
+  def readBytes(fs: FileSystem, sidecar: FileStatus): Array[Byte] = {
+    val out = new Array[Byte](Math.toIntExact(sidecar.getLen))
+    val in = fs.open(sidecar.getPath)
+    try {
+      in.readFully(out)
+      if (in.read() != -1)
+        throw new java.io.IOException(s"${sidecar.getPath} grew while read")
+    } finally in.close()
+    out
+  }
 }

@@ -20,8 +20,9 @@ import graft.core.seqfile.ZoneKey
   *
   * Pushdown is accepted only when every committed data file has a
   * VALIDATED sidecar carrying stats for every referenced column — one
-  * ~100-byte sidecar read per file (ZoneMapPruning.sidecars); the payoff
-  * is skipping the entire data scan. Queries with filters never reach this
+  * sidecar lookup per file (ZoneMapPruning.sidecars, served from the
+  * driver's cache while the files are unchanged); the payoff is skipping
+  * the entire data scan. Queries with filters never reach this
   * path (all our filters stay residual, and Spark only pushes aggregates
   * below fully-consumed filters). */
 object SeqFileAggPushdown {

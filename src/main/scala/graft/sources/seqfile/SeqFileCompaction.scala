@@ -103,14 +103,8 @@ object SeqFileCompaction {
         // parallelized like the pushdown planners (O(files/parallelism)
         // driver wall-clock) in chunks, short-circuiting on the first hit.
         def sniff(p: Path): Boolean = scala.util.Try {
-          val side = ZoneMap.sidecarPath(p)
-          fs.exists(side) && {
-            val in = fs.open(side)
-            val content =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            ZoneMap.parse(content)._4.exists(_.kbloom.isDefined)
-          }
+          val side = fs.getFileStatus(ZoneMap.sidecarPath(p))
+          ZoneMap.parse(ZoneMap.readBytes(fs, side))._4.exists(_.kbloom.isDefined)
         }.getOrElse(false)
         val hadBlooms = inputPaths
           .grouped(PlanParallel.Parallelism * 4)

@@ -32,9 +32,11 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
   private var aggScan: Option[SeqFileAggScan] = None
 
   /** The table's files under the static partition filters, and their
-    * sidecars: each listed or read once per query, on first use, and shared
-    * by both pushdowns and the scan. Spark pushes filters before aggregates
-    * and top-N, so the first use sees the final partition filters. */
+    * sidecars: each taken once per query, on first use, and shared by both
+    * pushdowns and the scan. The sidecars come from the driver's cache
+    * (SidecarCache) unless a file or its sidecar changed since they were
+    * parsed. Spark pushes filters before aggregates and top-N, so the first
+    * use sees the final partition filters. */
   private lazy val files = SeqFileDataSource.listPartitionedFiles(paths, hadoopConf)
     .filter(PartitionFilters.keep(partFilters.toSeq, _))
   private lazy val sidecars = ZoneMapPruning.sidecars(files, hadoopConf)
@@ -78,7 +80,7 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     SeqFileTopNPushdown.orderFor(orders) match {
       case Some(key) if tableSchema.fields.exists(f =>
           f.name.equalsIgnoreCase(key.col) && f.dataType != NullType) =>
-        topN = SeqFileTopNPushdown.planFiles(sidecars, key, limit)
+        topN = SeqFileTopNPushdown.planFiles(sidecars.byFile, key, limit)
         topN.nonEmpty
       case _ => false
     }
@@ -100,7 +102,7 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     SeqFileAggPushdown.specsFor(agg, tableSchema) match {
       case Some(specs) if specs.nonEmpty =>
         val out = SeqFileAggPushdown.schemaFor(specs, tableSchema)
-        aggScan = SeqFileAggPushdown.partialRow(sidecars, specs, tableSchema)
+        aggScan = SeqFileAggPushdown.partialRow(sidecars.byFile, specs, tableSchema)
           .map(new SeqFileAggScan(out, _,
             s"seqfile agg-pushdown paths=${paths.mkString(",")} " +
               s"aggs=${specs.mkString(",")}"))
@@ -206,10 +208,10 @@ object SeqFileScan {
 /** The batch and micro-batch scan of a seqfile table. `files` is the
   * builder's listing of `paths` under the static partition filters and
   * `sidecars` their sidecars, in the same order; both are taken on first
-  * use, and an unfiltered scan without top-N never reads a sidecar. */
+  * use, and an unfiltered scan without top-N never looks one up. */
 class SeqFileScan(tableSchema: StructType, required: StructType,
                   paths: Seq[String], files: => Seq[SeqFileDataSource.PartitionedFile],
-                  sidecars: => Seq[Option[ZoneMapPruning.Sidecar]],
+                  sidecars: => ZoneMapPruning.Sidecars,
                   maxSplitBytes: Long,
                   mode: String = ReadMode.FailFast,
                   dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
@@ -333,13 +335,14 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     * so a Bloom miss runs no task. */
   private def planBlocks(): (Array[InputPartition], Array[CustomTaskMetric]) = {
     val filters = dataFilters ++ runtimeDataFilters
+    val used = if (topN.isEmpty && filters.isEmpty) None else Some(sidecars)
     // per file: the offsets to read and the sidecar's block count
-    val blocks: Seq[Option[(Seq[Long], Int)]] = topN match {
-      case Some(selected) =>
-        sidecars.zip(selected).map { case (sc, offs) => sc.map(s => (offs, s.entries.size)) }
-      case None if filters.nonEmpty =>
-        sidecars.map(_.map(s => (ZoneMapPruning.surviving(s, filters), s.entries.size)))
-      case None => files.map(_ => None)
+    val blocks: Seq[Option[(Seq[Long], Int)]] = (used, topN) match {
+      case (Some(scs), Some(selected)) =>
+        scs.byFile.zip(selected).map { case (sc, offs) => sc.map(s => (offs, s.entries.size)) }
+      case (Some(scs), None) =>
+        scs.byFile.map(_.map(s => (ZoneMapPruning.surviving(s, filters), s.entries.size)))
+      case (None, _) => files.map(_ => None)
     }
     var read, skipped = 0L
     val parts = files.zip(blocks).filter(fb => PartitionFilters.keep(runtimeFilters, fb._1))
@@ -355,7 +358,8 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
           }
         }
       }
-    (parts.toArray, SeqScanMetrics.driverValues(read, skipped))
+    (parts.toArray, SeqScanMetrics.driverValues(read, skipped,
+      used.fold(0L)(_.cached), used.fold(0L)(_.read)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

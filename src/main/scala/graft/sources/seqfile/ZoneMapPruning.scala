@@ -5,8 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.sources._
 
-import graft.core.seqfile.{KeyBloom, SeqCompression, WritableType, ZoneEntry, ZoneKey, ZoneMap}
-import graft.util.PlanParallel
+import graft.core.seqfile.{KeyBloom, WritableType, ZoneEntry, ZoneKey}
 
 /** Zone-map and Bloom pruning, planned on the driver: evaluate a query's
   * key and value predicates against each file's per-block sidecar and keep
@@ -112,22 +111,18 @@ object ZoneMapPruning {
   final case class Sidecar(keyType: WritableType, valueType: WritableType,
                            entries: Seq[ZoneEntry])
 
-  /** Every listed file's sidecar, in listing order: None for a file that is
-    * not BLOCK-compressed, has an unreadable header, or whose sidecar is
-    * missing or stale. The one sidecar read of a query, shared by filter
-    * planning and both pushdowns, with bounded driver-side parallelism
-    * (PlanParallel): a million-file lake plans in O(files/parallelism)
-    * wall-clock instead of a serial read per file. */
+  /** One query's sidecars: every listed file's, in listing order (None for
+    * a file that is not BLOCK-compressed, has an unreadable header, or
+    * whose sidecar is missing or stale), and how many of them the driver's
+    * cache served and how many were read from storage. */
+  final case class Sidecars(byFile: Seq[Option[Sidecar]], cached: Long, read: Long)
+
+  /** The sidecars of `files`, through the driver's cache (SidecarCache):
+    * the one sidecar lookup of a query, shared by filter planning and both
+    * pushdowns. */
   def sidecars(files: Seq[SeqFileDataSource.PartitionedFile],
-               conf: Configuration): Seq[Option[Sidecar]] =
-    PlanParallel.mapOrdered(files) { pf =>
-      val p = pf.status.getPath
-      (try Some(SeqFileDataSource.readHeader(p, conf))
-       catch { case scala.util.control.NonFatal(_) => None })
-        .filter(_.compression == SeqCompression.Block)
-        .flatMap(h => ZoneMap.readValidated(conf, p, h.keyClass, h.valueClass,
-          pf.status.getLen).map(Sidecar(h.keyType, h.valueType, _)))
-    }
+               conf: Configuration): Sidecars =
+    SidecarCache.Driver.sidecars(files, conf)
 
   /** Offsets of the file's blocks that survive every key/value filter: the
     * zone map's [min, max] (absent stats keep the block) and, for key
@@ -145,8 +140,9 @@ object ZoneMapPruning {
 }
 
 /** DSv2 custom metrics of the seqfile scan (Spark UI, `executedPlan`
-  * metrics): zone-map effectiveness, reported once by the driver's block
-  * plan, and what PERMISSIVE and DROPMALFORMED dropped instead of failing
+  * metrics): zone-map effectiveness and where the plan's sidecars came
+  * from (the driver's cache or storage), reported once by the driver's
+  * block plan, and what PERMISSIVE and DROPMALFORMED dropped instead of failing
   * the query, summed over tasks. Spark instantiates each metric class by
   * name, so every one is its own no-argument class. */
 object SeqScanMetrics {
@@ -154,9 +150,12 @@ object SeqScanMetrics {
   val ZoneBlocksRead = "seqfileZoneBlocksRead"
   val MalformedBlocksDropped = "seqfileMalformedBlocksDropped"
   val UnreadableFilesSkipped = "seqfileUnreadableFilesSkipped"
+  val SidecarsCached = "seqfileSidecarsCached"
+  val SidecarsRead = "seqfileSidecarsRead"
 
   def supported: Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new SeqZoneBlocksSkippedMetric, new SeqZoneBlocksReadMetric,
+      new SeqSidecarsCachedMetric, new SeqSidecarsReadMetric,
       new SeqMalformedBlocksDroppedMetric, new SeqUnreadableFilesSkippedMetric)
 
   /** One split's values, reported by its task. */
@@ -165,11 +164,14 @@ object SeqScanMetrics {
     Array(SeqScanTaskMetric(MalformedBlocksDropped, malformedBlocks),
       SeqScanTaskMetric(UnreadableFilesSkipped, unreadableFiles))
 
-  /** The zone-map pair of a planned scan, reported by the driver. */
-  def driverValues(read: Long, skipped: Long)
+  /** The zone-map pair of a planned scan and the sidecar counts of its
+    * lookup (both 0 when it needed no sidecar), reported by the driver. */
+  def driverValues(read: Long, skipped: Long, sidecarsCached: Long, sidecarsRead: Long)
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(SeqScanTaskMetric(ZoneBlocksSkipped, skipped),
-      SeqScanTaskMetric(ZoneBlocksRead, read))
+      SeqScanTaskMetric(ZoneBlocksRead, read),
+      SeqScanTaskMetric(SidecarsCached, sidecarsCached),
+      SeqScanTaskMetric(SidecarsRead, sidecarsRead))
 }
 
 class SeqZoneBlocksSkippedMetric
@@ -182,6 +184,18 @@ class SeqZoneBlocksReadMetric
   extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = SeqScanMetrics.ZoneBlocksRead
   override def description(): String = "seqfile blocks read after zone pruning"
+}
+
+class SeqSidecarsCachedMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = SeqScanMetrics.SidecarsCached
+  override def description(): String = "seqfile sidecars served from the driver cache"
+}
+
+class SeqSidecarsReadMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = SeqScanMetrics.SidecarsRead
+  override def description(): String = "seqfile sidecars read"
 }
 
 class SeqMalformedBlocksDroppedMetric

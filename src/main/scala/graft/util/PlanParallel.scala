@@ -3,11 +3,12 @@ package graft.util
 /** Bounded-parallelism, order-preserving map for independent driver-side
   * I/O: the one way the engine overlaps driver round trips.
   *
-  * The seqfile scan's block planner and both pushdowns read each data
-  * file's zone-map sidecar (plus the file header) once per query, at
-  * PLANNING time (ZoneMapPruning.sidecars); tasks read none. Done serially
-  * that is O(files) round-trips of driver I/O — fine at thousands of
-  * files, minutes at a million-file lake. The ANN index lifecycle
+  * The seqfile scan's block planner and both pushdowns look up each data
+  * file's zone-map sidecar at PLANNING time (ZoneMapPruning.sidecars): one
+  * `getFileStatus` while the driver's cache holds its parse
+  * (SidecarCache), else the file header and the sidecar itself; tasks read
+  * none. Done serially that is O(files) round-trips of driver I/O — fine
+  * at thousands of files, minutes at a million-file lake. The ANN index lifecycle
   * (IndexRoot) overlaps its sidecar and table legs the same way, and
   * operators overlap their bounded collects. These calls are independent
   * and I/O-bound, so a thread pool turns them into O(n / parallelism)

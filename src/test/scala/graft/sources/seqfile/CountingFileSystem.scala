@@ -8,8 +8,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 
 /** The local filesystem under a scheme of its own, `countfs:`, counting the
-  * `globStatus` and `open` calls made on each path, so a spec can see how
-  * many times a query lists a table or reads a file. Its raw filesystem
+  * `globStatus` and `open` calls made on each path (all of them, and those
+  * made outside Spark tasks), so a spec can see how many times a query
+  * lists a table or reads a file. Its raw filesystem
   * (CountingRawFileSystem) counts the raw opens that the checksum layer
   * makes, one of the data file and one of its `.crc` file per checker.
   * Registered like SessionSchemeFileSystem. */
@@ -23,6 +24,8 @@ class CountingFileSystem extends LocalFileSystem(new CountingRawFileSystem) {
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     CountingFileSystem.bump(CountingFileSystem.opens, f)
+    if (org.apache.spark.TaskContext.get() == null)
+      CountingFileSystem.bump(CountingFileSystem.driverOpens, f)
     super.open(f, bufferSize)
   }
 }
@@ -32,6 +35,7 @@ object CountingFileSystem {
 
   private val globs = new ConcurrentHashMap[String, AtomicInteger]
   private val opens = new ConcurrentHashMap[String, AtomicInteger]
+  private val driverOpens = new ConcurrentHashMap[String, AtomicInteger]
   private val rawOpens = new ConcurrentHashMap[String, AtomicInteger]
 
   private def bump(calls: ConcurrentHashMap[String, AtomicInteger], p: Path): Unit =
@@ -47,13 +51,17 @@ object CountingFileSystem {
   /** `open` calls on `path` (a scheme-less local path) since the last reset. */
   def openCalls(path: String): Int = count(opens, path)
 
+  /** `open` calls on `path` made outside any Spark task (on the driver, in
+    * local mode) since the last reset. */
+  def driverOpenCalls(path: String): Int = count(driverOpens, path)
+
   /** Raw `open` calls on `path` (a scheme-less local path, data or `.crc`
     * file) since the last reset. */
   def rawOpenCalls(path: String): Int = count(rawOpens, path)
 
   private[seqfile] def bumpRawOpen(p: Path): Unit = bump(rawOpens, p)
 
-  def reset(): Unit = { globs.clear(); opens.clear(); rawOpens.clear() }
+  def reset(): Unit = { globs.clear(); opens.clear(); driverOpens.clear(); rawOpens.clear() }
 
   /** Register the scheme on `conf`, with the FileSystem cache off. */
   def register(conf: Configuration): Unit = {

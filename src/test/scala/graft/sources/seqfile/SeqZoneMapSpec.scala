@@ -281,4 +281,36 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(filtered.length === all.count(_.getLong(0) > 0L))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
+
+  test("a sidecar is read in one exact-size read and parsed with little allocation") {
+    // lookup-shaped: sorted even long keys, 40-80-byte text values,
+    // 64 KiB blocks, a key Bloom per block
+    val tmp = Files.createTempDirectory("zm-alloc")
+    val data = new Path(tmp.resolve("part-0.seq").toString)
+    val rnd = new scala.util.Random(11)
+    val w = new SeqFileWriter(Files.newOutputStream(tmp.resolve("part-0.seq")),
+      WritableType.LongW, WritableType.TextW, blockSize = 64 << 10, bloomFpp = Some(0.01))
+    (0 until 250000).foreach(i => w.append(2L * i, rnd.alphanumeric.take(40 + rnd.nextInt(41)).mkString))
+    w.close()
+    val conf = new Configuration()
+    val fs = data.getFileSystem(conf)
+    ZoneMap.write(fs, data, WritableType.LongW.javaClass, WritableType.TextW.javaClass,
+      w.bytesWritten, w.zoneEntries)
+    val sidecarBytes = fs.getFileStatus(ZoneMap.sidecarPath(data)).getLen
+    def read(): Seq[ZoneEntry] = ZoneMap.readValidated(conf, data,
+      WritableType.LongW.javaClass, WritableType.TextW.javaClass, w.bytesWritten).get
+    assert(read().map(_.offset) === w.zoneEntries.map(_.offset))
+    assert(read().forall(_.kbloom.isDefined))
+
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    read()
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    val ratio = allocated.toDouble / sidecarBytes
+    info(f"allocated $allocated bytes for a $sidecarBytes-byte sidecar: ratio $ratio%.2f")
+    assert(ratio < 4.0, f"allocated $allocated bytes, $ratio%.2f× the sidecar")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
 }
