@@ -67,7 +67,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // HEAT SENTINEL (machine-readable hot-box detection — see NOTES.md
     // "Bench heat sentinel" for the read thresholds): 1-minute loadavg is
@@ -81,26 +80,10 @@ object Bench {
         .next().split(" ")(0).toDouble
     } catch { case _: Throwable => -1.0 }
     val loadBefore = loadavg1
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ~150 gates × several codegen stages each overflow the default
-      // 100-entry generated-class cache every interleaved round, so each
-      // rep re-instantiates (and re-interprets, and re-JITs) every hot
-      // pipeline from scratch — q_dedup_embedding_lsh measured 63 s as a
-      // perpetually-cold class vs 19 s warm. A long-lived executor keeps
-      // its classes; let the bench JVM do the same.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // Optional focus list for local iteration: comma-separated query names.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Harness.only("SPARK_GRAFT_BENCH_ONLY")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
 

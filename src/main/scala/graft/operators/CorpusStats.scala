@@ -83,8 +83,7 @@ object CorpusStats {
     // same space-joined lowercase strings the per-width transform built
     // — same token kernel — so the hashes are unchanged); the previous
     // three-way union scanned and tokenized the corpus once per width
-    val all = graft.operators.PlanStats.spreadForKernel(df)
-      .select(col(sliceCol).as("__slice"),
+    val all = df.select(col(sliceCol).as("__slice"),
         graft.functions.expressions.shingle_range_rows(col(textCol), 1, 3))
       .select(col("__slice"), xxhash64(col("shingle")).as("__g"),
         col("n").as("__n"))

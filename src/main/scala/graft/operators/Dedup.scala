@@ -32,13 +32,7 @@ object Dedup {
     * themselves (the text) never shuffle. A window over the fingerprint
     * would instead drag every full row through an exchange. */
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // spreadForKernel: the fingerprint kernel (and whatever row-local
-    // kernels the caller chains on the annotated output — quality/lang
-    // scoring in the corpus-clean path) otherwise runs single-task on a
-    // single-split scan, because the group join broadcasts and never
-    // re-partitions the doc side
-    val withFp = PlanStats.spreadForKernel(df)
-      .withColumn("fp", TextAnalysis.fingerprint(col(textCol)))
+    val withFp = df.withColumn("fp", TextAnalysis.fingerprint(col(textCol)))
     val dupGroups = withFp
       .groupBy(col("fp"))
       .agg(min(col(idCol)).as("g_rep"), count(lit(1)).as("g_n"))
@@ -445,7 +439,7 @@ object Dedup {
                       n: Int, threshold: Double,
                       rowsPerBand: Int = 3, numBands: Int = 16): DataFrame = {
     val h = rowsPerBand * numBands
-    val docs = PlanStats.spreadForKernel(df).select(col(idCol).as("id"),
+    val docs = df.select(col(idCol).as("id"),
       TextAnalysis.wordShingles(col(textCol), n).as("sh"))
       .filter(size(col("sh")) > 0)
     // Both derived columns reference `sh` — a non-cheap expression, so
@@ -1007,26 +1001,22 @@ object Dedup {
     * The n-gram key is the low 60 bits of md5 (value-exact in SQL
     * oracles); collisions (2^-60) only ever mark a novel n-gram as seen.
     *
-    * Scale: distinct per-doc shingles shuffle once as (8-byte hash, id)
-    * pairs for the min-id aggregate, then once more (hash-keyed) for the
-    * join back — text never shuffles, and both aggregates are partial
-    * (map-side) first. This is the exact-dedup shuffle shape, not a
-    * self-join: cost is linear in total distinct shingle occurrences. */
+    * Scale: distinct per-doc shingles shuffle once, hash-keyed, as
+    * (8-byte hash, id) pairs for the min-id window, and the per-doc
+    * counts aggregate partially (map-side) first — text never shuffles.
+    * This is not a self-join: cost is linear in total distinct shingle
+    * occurrences. */
   def noveltyScores(df: DataFrame, idCol: String, textCol: String,
                     n: Int = 3): DataFrame = {
-    // persist(): the min-id aggregate and the join back both read the
-    // (id, hash) stream, and their exchanges differ (partial-agg rows vs
-    // raw rows), so uncached the shingle+md5 kernel ran once per
-    // reference (measured: twin single-task corpus passes). Blocks are
-    // released by the caller's session cache sweep. spreadForKernel
-    // parallelizes the kernel when the scan is a single split.
-    val sh = PlanStats.spreadForKernel(df).select(col(idCol).as("id"),
+    // the first-seen id is a window over the (id, hash) stream itself, so
+    // the shingle+md5 kernel runs once and nothing is left persisted (a
+    // min-id aggregate joined back would reference the stream twice)
+    val scored = df.select(col(idCol).as("id"),
         explode(TextAnalysis.wordShingles(lower(trim(col(textCol))), n)).as("__g"))
       .select(col("id"),
         conv(substring(md5(col("__g")), 1, 15), 16, 10).cast("long").as("__h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val firstSeen = sh.groupBy(col("__h")).agg(min(col("id")).as("__first"))
-    val scored = sh.join(firstSeen, "__h")
+      .withColumn("__first", min(col("id"))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("__h"))))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_shingles"),
         count(when(col("__first") === col("id"), 1)).as("n_novel"))

@@ -126,23 +126,6 @@ object LangIdNb {
       transform(sequence(lit(1), length(c) - 2), i => c.substr(i, lit(3))))
       .otherwise(array().cast("array<string>"))
 
-  /** Unlock parallelism for the CPU-dense trigram kernels when the input
-    * scan is a handful of small files: byte-based split sizing gives a
-    * sub-MB parquet ONE partition, and the whole explode+score pass then
-    * runs single-task (measured 2.0 s serial of q_lang_id_nb's 3.7 s).
-    * Guarded three ways so the probe itself never costs anything:
-    * (1) only scan-shaped plans (leaf/project/filter/union) are probed —
-    * materializing `.rdd` under AQE on a plan WITH exchanges executes the
-    * upstream query stages, so the probe would run the query once before
-    * the real pass (r17 ADVICE), and shuffle-shaped inputs already arrive
-    * at shuffle-partition width; (2) a size floor — a sub-128 KB input
-    * (e.g. the 60-sentence training fixture) finishes serially faster
-    * than the repartition round-trip it would buy (measured: the fixture
-    * spread was two 32-task 0.5 s jobs per train); (3) the actual scan
-    * parallelism, so a corpus-scale input (thousands of splits) never
-    * pays the extra exchange. */
-  private def spread(df: DataFrame): DataFrame = PlanStats.spreadForKernel(df)
-
   /** Closed-form NB training over any labeled frame (`langCol`,
     * `textCol`): ONE distributed count aggregate over the exploded
     * trigrams plus one |langs|-row count over the labeled frame — the
@@ -160,8 +143,8 @@ object LangIdNb {
     require(alpha > 0, s"alpha $alpha")
     val spark = labeled.sparkSession
     import spark.implicits._
-    val grams = spread(labeled
-      .select(col(langCol).as("lang"), normText(col(textCol)).as("t")))
+    val grams = labeled
+      .select(col(langCol).as("lang"), normText(col(textCol)).as("t"))
       .select(col("lang"), explode(trigramsOf(col("t"))).as("g"))
     // the one corpus-sized job: exact (lang, trigram) counts. The two
     // bounded collects are independent — overlap them (guide §2.6)
@@ -195,8 +178,8 @@ object LangIdNb {
     * absorbs summation-order noise by ~6 orders of magnitude). */
   def predict(model: Model, docs: DataFrame, idCol: String,
               textCol: String): DataFrame = {
-    val base = spread(docs.select(col(idCol).as("__id"),
-      normText(col(textCol)).as("t")))
+    val base = docs.select(col(idCol).as("__id"),
+      normText(col(textCol)).as("t"))
     // The language list (with its prior/dflt scalars) is bounded and —
     // since train() materializes the model — already driver-local, so the
     // per-language matched-weight sums become COLUMNS of one fixed-width

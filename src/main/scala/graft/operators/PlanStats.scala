@@ -29,8 +29,7 @@ private[operators] object PlanStats {
     * count. That is safe for every existing consumer because a stale
     * count only shifts a partition/sample/tile SIZE, never a result
     * value. A caller that needs the true current count must call
-    * `df.count()` directly, or [[invalidate]] first (long-lived ingestion
-    * loops that re-derive sizing per epoch). */
+    * `df.count()` directly. */
   def sizingCount(df: DataFrame): Long = {
     val key = df.queryExecution.analyzed.canonicalized
     val hit = cache.synchronized(cache.get(key))
@@ -40,37 +39,5 @@ private[operators] object PlanStats {
       cache.synchronized(cache.put(key, java.lang.Long.valueOf(n)))
       n
     }
-  }
-
-  /** Drop every memoized count — the refresh hook for long-lived
-    * ingestion loops whose inputs mutate between sizing epochs. */
-  def invalidate(): Unit = cache.synchronized(cache.clear())
-
-  /** Unlock parallelism for a CPU-dense kernel pass when the input scan is
-    * a handful of small files: byte-based split sizing gives a sub-MB
-    * parquet ONE partition, and the whole kernel pass then runs
-    * single-task. Guarded three ways so the probe itself never costs
-    * anything: (1) only scan-shaped plans (leaf/project/filter/union) are
-    * probed — materializing `.rdd` under AQE on a plan WITH exchanges
-    * executes the upstream query stages, so the probe would run the query
-    * once before the real pass (r17 ADVICE), and shuffle-shaped inputs
-    * already arrive at shuffle-partition width; (2) a size floor — a
-    * sub-128 KB input (e.g. a training fixture) finishes serially faster
-    * than the repartition round-trip it would buy; (3) the actual scan
-    * parallelism, so a corpus-scale input (thousands of splits) never pays
-    * the extra exchange. */
-  private[graft] def spreadForKernel(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Project, SubqueryAlias, Union}
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    def scanShaped(pl: LogicalPlan): Boolean = pl match {
-      case _: LeafNode => true
-      case _: Project | _: Filter | _: SubqueryAlias =>
-        scanShaped(pl.children.head)
-      case u: Union => u.children.forall(scanShaped)
-      case _ => false
-    }
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= 131072 && scanShaped(df.queryExecution.logical) &&
-        df.rdd.getNumPartitions * 2 < p) df.repartition(p) else df
   }
 }

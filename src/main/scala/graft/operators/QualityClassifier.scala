@@ -44,17 +44,11 @@ object QualityClassifier {
   /** (doc, bucket, count) hashed unigram+bigram features of `textCol`. */
   private def featurize(df: DataFrame, idCol: String, textCol: String,
                         numFeatures: Int): DataFrame = {
-    // The shingle+hash kernel is CPU-dense while a sub-MB parquet scan is
-    // ONE split under byte-based sizing, so un-spread the whole featurize
-    // map side ran single-task (measured: the hottest stages of the
-    // L-BFGS gate at 2-5 tasks). Guarded probe — see
-    // PlanStats.spreadForKernel. L-BFGS-tier only (rows-only gate): the
-    // NB tier has its own value-exact path. Both widths come from ONE
-    // shingle_range_rows pass (same strings per width as shingle_rows, so
-    // the hashed indices are identical) — the two-select union form
-    // scanned and tokenized the corpus once per width.
-    val in = PlanStats.spreadForKernel(df)
-    in.select(col(idCol).as("__id"),
+    // Both widths come from ONE shingle_range_rows pass (same strings per
+    // width as shingle_rows, so the hashed indices are identical) — the
+    // two-select union form scanned and tokenized the corpus once per
+    // width.
+    df.select(col(idCol).as("__id"),
         expressions.shingle_range_rows(col(textCol), 1, 2))
       .select(col("__id"),
         pmod(xxhash64(col("shingle")), lit(numFeatures.toLong)).as("idx"))

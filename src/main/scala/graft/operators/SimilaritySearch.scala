@@ -1725,12 +1725,17 @@ object SimilaritySearch {
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
     require(stats.nonEmpty, "empty corpus")
-    // Degenerate dimensions (min == max) are fine: step = 0, every
-    // codeword decodes to the constant, argmin ties -> codeword 0.
-    stats.toSeq.flatMap { case (j, mn, mx) =>
-      val step = (mx - mn) / (codebookSize - 1).toDouble
-      (0 until codebookSize).map(w => (j, w, Seq(mn + w.toDouble * step)))
-    }.toDF("subspace", "codeword", "vec")
+    // Only the dim stats rows are driver-local and the codewords are
+    // exploded in Spark: a driver-local dim·codebookSize frame ships
+    // inside each task that reads it (over 1 MiB at dim 64). Degenerate
+    // dimensions (min == max) are fine: step = 0, every codeword decodes
+    // to the constant, argmin ties -> codeword 0.
+    stats.toSeq.toDF("j", "mn", "mx")
+      .select(col("j").as("subspace"), col("mn"),
+        ((col("mx") - col("mn")) / lit((codebookSize - 1).toDouble)).as("step"),
+        explode(sequence(lit(0), lit(codebookSize - 1))).as("codeword"))
+      .select(col("subspace"), col("codeword"),
+        array(col("mn") + col("codeword").cast("double") * col("step")).as("vec"))
   }
 
   /** Build a persisted SQ8 index over a standing corpus — per-dimension

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: replicate the driver-generated testdata
@@ -39,14 +39,7 @@ object GenScale extends App {
   private val only: Set[String] = args.drop(3).toSet
   private val Off = 1000000000L // > any source key space
 
-  val spark = SparkSession.builder()
-    .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-  spark.sparkContext.setLogLevel("WARN")
+  val spark = graft.Harness.session()
 
   private def src(name: String): DataFrame =
     spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -24,21 +23,9 @@ object ProfileQuery {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "2").toInt.max(1)
-    val only = sys.env.get("SPARK_GRAFT_PROFILE_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = graft.Harness.only("SPARK_GRAFT_PROFILE_ONLY")
+    val spark = graft.Harness.session()
 
     val jobs = mutable.ArrayBuffer.empty[JobRec]
     val stages = mutable.Map.empty[Int, StageRec]
@@ -75,7 +62,7 @@ object ProfileQuery {
     })
 
     val queries = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only.contains(n) }
+      .filter { case (n, _) => only.forall(_.contains(n)) }
     for ((name, fn) <- queries) {
       var wall = 0.0
       (1 to reps).foreach { rep =>

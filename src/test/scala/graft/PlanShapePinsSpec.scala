@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -179,6 +180,57 @@ class PlanShapePinsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(crossJoins <= 1,
       s"corpus-side crossJoin assignment crept back ($crossJoins cross joins):\n" +
         s"${out.queryExecution.executedPlan}")
+  }
+
+  test("text kernels run at their scan's width: no round-robin spread of a " +
+    "single-split corpus") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-spread-pin")
+    try {
+      // one parquet file well over 128 KB of text: under local[4] it is a
+      // single split, the case a kernel-spread repartition would widen
+      val rnd = new scala.util.Random(11)
+      val words = Array.fill(5000)(rnd.alphanumeric.take(6).mkString)
+      val path = dir.resolve("docs.parquet").toString
+      (0L until 2000L).map { i =>
+        (i, s"s${i % 3}", Seq.fill(60)(words(rnd.nextInt(words.length))).mkString(" "))
+      }.toDF("doc_id", "slice", "text").coalesce(1).write.parquet(path)
+      val bytes = java.nio.file.Files.list(java.nio.file.Paths.get(path))
+        .filter(_.toString.endsWith(".parquet"))
+        .mapToLong(java.nio.file.Files.size(_)).sum()
+      assert(bytes >= 128 * 1024, s"fixture parquet is only $bytes bytes")
+      val d = spark.read.parquet(path)
+      assert(d.rdd.getNumPartitions == 1)
+      val model = operators.LangIdNb.train(
+        operators.LangIdNb.fixture.toDF("lang", "s"), "lang", "s")
+      val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "exactDedup" -> (() => operators.Dedup.exactDedup(d, "doc_id", "text")),
+        "minHashLshPairs" -> (() =>
+          operators.Dedup.minHashLshPairs(d, "doc_id", "text", 3, 0.8)),
+        "noveltyScores" -> (() => operators.Dedup.noveltyScores(d, "doc_id", "text")),
+        "LangIdNb.predict" -> (() =>
+          operators.LangIdNb.predict(model, d, "doc_id", "text")),
+        "distinctNgramStats" -> (() =>
+          operators.CorpusStats.distinctNgramStats(d, "slice", "text")))
+      // descends into cached relations too: a persisted kernel input
+      // hides its exchanges behind an InMemoryTableScan
+      def nodes(p: SparkPlan): Seq[SparkPlan] = collectAll(p).flatMap {
+        case s: InMemoryTableScanExec => s +: nodes(s.relation.cachedPlan)
+        case n => Seq(n)
+      }
+      val spread = ops.flatMap { case (name, op) =>
+        val plan = op().queryExecution.executedPlan
+        val rr = nodes(plan).collect {
+          case e: ShuffleExchangeExec
+              if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+        }
+        if (rr.isEmpty) None else Some(s"$name:\n$plan")
+      }
+      assert(spread.isEmpty,
+        s"round-robin repartition ahead of a row-local kernel in\n${spread.mkString("\n")}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 
   test("PageRank iterations never re-shuffle the persisted edge table") {

@@ -466,6 +466,17 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(10L) === 0.0)
   }
 
+  test("noveltyScores leaves no RDD persisted after its result is collected") {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val df = docs(
+      1L -> "alpha beta gamma delta",
+      2L -> "alpha beta gamma epsilon")
+    assert(Dedup.noveltyScores(df, "doc_id", "text", n = 3).collect().length == 2)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"left persisted: ${spark.sparkContext.getPersistentRDDs.values.mkString(", ")}")
+  }
+
   test("removeSharedSpans cuts cross-doc 6-token spans, leaves the rest") {
     val df = docs(
       1L -> "a b c d e f x y",              // shares [a..f] with doc 2
