@@ -15,8 +15,8 @@ import java.util.Base64
   * riding in the sidecar next to the ~100-byte min/max entry.
   *
   * Like every sidecar structure here it is advisory and conservative: a
-  * Bloom "maybe" reads the block, Spark re-evaluates all filters on
-  * surviving rows, and sidecar staleness is caught by the file-length
+  * Bloom "maybe" reads the block, the reader or Spark evaluates the
+  * filters on its rows, and sidecar staleness is caught by the file-length
   * check before any of this runs.
   *
   * Implementation: standard Bloom with Kirsch–Mitzenmacher double hashing
@@ -100,7 +100,8 @@ object KeyBloom {
   }
 
   /** `decode` of the encoding held in `b(from until until)`, as a sidecar
-    * parser finds it, without first copying it into a string. */
+    * parser finds it, without first copying it into a string: the base64
+    * payload decodes straight into the filter's words. */
   def decode(b: Array[Byte], from: Int, until: Int): KeyBloom = {
     require(until > from && b(from) == 'k', s"bad bloom encoding")
     var sep = from + 1
@@ -108,11 +109,36 @@ object KeyBloom {
     require(sep > from + 1 && sep < until, s"bad bloom encoding")
     val k = new String(b, from + 1, sep - from - 1,
       java.nio.charset.StandardCharsets.ISO_8859_1).toInt
-    val raw = Base64.getDecoder.decode(
-      java.nio.ByteBuffer.wrap(b, sep + 1, until - sep - 1))
-    require(raw.remaining % 8 == 0 && raw.remaining > 0, "bad bloom payload")
-    val bits = new Array[Long](raw.remaining / 8)
-    raw.order(java.nio.ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(bits)
+    var end = until
+    while (end > sep + 1 && end > until - 2 && b(end - 1) == '=') end -= 1
+    val chars = end - sep - 1
+    require(chars % 4 != 1, "bad bloom payload")
+    val nBytes = chars * 6 / 8
+    require(nBytes % 8 == 0 && nBytes > 0, "bad bloom payload")
+    val bits = new Array[Long](nBytes / 8)
+    var acc, accBits, byteIdx = 0
+    var i = sep + 1
+    while (i < end) {
+      val v = Base64Digits(b(i) & 0xff)
+      require(v >= 0, "bad bloom payload")
+      acc = ((acc << 6) | v) & 0xffff
+      accBits += 6
+      if (accBits >= 8) {
+        accBits -= 8
+        // words are little-endian: byte j is bits 8*(j%8) of word j/8
+        bits(byteIdx >>> 3) |= ((acc >>> accBits) & 0xffL) << ((byteIdx & 7) * 8)
+        byteIdx += 1
+      }
+      i += 1
+    }
     new KeyBloom(bits, k)
+  }
+
+  /** Base64 digit of each byte value, -1 for a byte that is none. */
+  private val Base64Digits: Array[Int] = {
+    val t = Array.fill(256)(-1)
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/"
+      .zipWithIndex.foreach { case (c, i) => t(c) = i }
+    t
   }
 }

@@ -16,10 +16,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * statistics; the SequenceFile container has no native slot for it (the
   * header is written before any data), hence the sidecar. Readers treat the
   * sidecar as advisory: it is used only when its recorded file length
-  * matches the data file (a torn rewrite can't mis-prune), and every pushed
-  * filter stays residual in Spark, so a wrong sidecar could only cost
-  * correctness via block offsets — which are validated by the sync marker
-  * check on every seek.
+  * matches the data file (a torn rewrite can't mis-prune), and block
+  * offsets are validated by the sync marker check on every seek.
   *
   * Scale (100 TB): one entry per ~1 MiB block → sidecars are ~0.005% of
   * data size; a selective key predicate over sorted-by-key files turns a

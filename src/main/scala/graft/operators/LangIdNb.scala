@@ -137,9 +137,23 @@ object LangIdNb {
     * each downstream broadcast re-execute the whole training subtree
     * (measured: ~6 re-train jobs per micro-batch in the streaming
     * curation gate). The ln arithmetic stays in Catalyst expressions,
-    * value-identical to the previous distributed form. */
+    * value-identical to the previous distributed form.
+    *
+    * `maxDriverRows` bounds the (lang, trigram) table the driver collects;
+    * `limit(maxDriverRows + 1)` detects a larger one without a separate
+    * count job. Above it the weights stay distributed, checkpointed once
+    * so predictions do not re-run training, and `predict` joins them
+    * without a broadcast, as `Bpe` keeps its word table distributed. */
   def train(labeled: DataFrame, langCol: String, textCol: String,
-            alpha: Double = 1.0): Model = {
+            alpha: Double = 1.0): Model =
+    trainWith(labeled, langCol, textCol, alpha, maxDriverRows)
+
+  /** The (lang, trigram) rows `train` collects to the driver at most. */
+  private val maxDriverRows: Int = 1 << 22
+
+  /** `train` with a driver cap of `cap` (lang, trigram) rows. */
+  private[operators] def trainWith(labeled: DataFrame, langCol: String, textCol: String,
+                                   alpha: Double, cap: Int): Model = {
     require(alpha > 0, s"alpha $alpha")
     val spark = labeled.sparkSession
     import spark.implicits._
@@ -148,12 +162,16 @@ object LangIdNb {
       .select(col("lang"), explode(trigramsOf(col("t"))).as("g"))
     // the one corpus-sized job: exact (lang, trigram) counts. The two
     // bounded collects are independent — overlap them (guide §2.6)
+    val counts = grams.groupBy(col("lang"), col("g")).agg(count(lit(1)).as("c"))
     val Seq(cnt, nsentL) = PlanParallel.mapOrdered(Seq(
-      grams.groupBy(col("lang"), col("g")).agg(count(lit(1)).as("c")),
+      counts.limit(cap + 1),
       labeled.groupBy(col(langCol).as("lang")).agg(count(lit(1)).as("ns"))
     ))(_.collect())
-    val cntDf = cnt.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .toSeq.toDF("lang", "g", "c")
+    val fits = cnt.length <= cap
+    val cntDf =
+      if (fits) cnt.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        .toSeq.toDF("lang", "g", "c")
+      else counts.localCheckpoint()
     val nsent = nsentL.map(r => (r.getString(0), r.getLong(1)))
       .toSeq.toDF("lang", "ns")
     val tot = cntDf.groupBy(col("lang")).agg(sum(col("c")).as("nl"))
@@ -165,11 +183,18 @@ object LangIdNb {
         (log(lit(alpha)) - log(col("nl") + lit(alpha) * col("v"))).as("dflt"))
     val weights = cntDf.select(col("lang"), col("g"),
       (log(col("c") + lit(alpha)) - log(lit(alpha))).as("wd"))
-    Model(weights.as[(String, String, Double)].collect().toSeq
-        .toDF("lang", "g", "wd"),
+    Model(
+      if (fits) weights.as[(String, String, Double)].collect().toSeq.toDF("lang", "g", "wd")
+      else weights,
       langs.as[(String, Double, Double)].collect().toSeq
         .toDF("lang", "prior", "dflt"))
   }
+
+  /** Is `df` a driver-local table, as `train` returns a model under its
+    * driver cap? */
+  private[operators] def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** Score + argmax every document: (idCol, lang_nb, nb_score). One
     * corpus trigram pass; the weight table and the per-language scalar
@@ -203,7 +228,8 @@ object LangIdNb {
       .select(col("__id"),
         greatest(length(col("t")) - 2, lit(0)).cast("long").as("n"),
         explode_outer(trigramsOf(col("t"))).as("g"))
-      .join(broadcast(model.weights), Seq("g"), "left")
+      .join(if (onDriver(model.weights)) broadcast(model.weights) else model.weights,
+        Seq("g"), "left")
     // columns are named by the language's index, never by its label: a
     // label such as `zh.Hant` would not resolve as a column name
     val msCols = langRows.indices.map { i =>

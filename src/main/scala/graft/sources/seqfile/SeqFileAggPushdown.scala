@@ -22,9 +22,9 @@ import graft.core.seqfile.ZoneKey
   * VALIDATED sidecar carrying stats for every referenced column — one
   * sidecar lookup per file (ZoneMapPruning.sidecars, served from the
   * driver's cache while the files are unchanged); the payoff is skipping
-  * the entire data scan. Queries with filters never reach this
-  * path (all our filters stay residual, and Spark only pushes aggregates
-  * below fully-consumed filters). */
+  * the entire data scan. Queries with filters never reach this path: the
+  * scan builder declines an aggregate under any pushed filter, exact key
+  * filters included, since sidecar stats describe whole files. */
 object SeqFileAggPushdown {
 
   sealed trait Spec

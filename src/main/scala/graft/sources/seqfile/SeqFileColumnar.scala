@@ -91,8 +91,10 @@ final class SeqFileConstantStringVector(value: UTF8String)
   * fail-fast), then decodes the blocks the driver planned for the split
   * (`SeqFilePartition.fixedOffsets`), or every block in its byte range when
   * none were planned, under the malformed-record mode (see ReadMode),
-  * counting what PERMISSIVE and DROPMALFORMED drop. Hive-partition columns
-  * ride along as constant vectors.
+  * counting what PERMISSIVE and DROPMALFORMED drop. The scan's exact key
+  * filters (KeyFilters) select each block's rows, so the key is decoded
+  * whenever there are some, projected or not. Hive-partition columns ride
+  * along as constant vectors.
   *
   * The header and the blocks are read through one SeqInput, and the block
   * reader reuses its buffers, so a batch from `get()` is valid until the
@@ -103,7 +105,8 @@ final class SeqFileConstantStringVector(value: UTF8String)
 class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: StructType,
                                      required: StructType, mode: String,
                                      conf: org.apache.hadoop.conf.Configuration =
-                                       SeqFileHadoopConf.current())
+                                       SeqFileHadoopConf.current(),
+                                     keyFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
   // One vector per output field for each block: key and value wrap the
@@ -135,7 +138,7 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
     try {
       val header = SeqHeader.parse(input)
       SeqFileSchema.validate(tableSchema, header, part.path)
-      val needKey = required.fieldNames.exists(_.equalsIgnoreCase("key"))
+      val needKey = keyFilters.nonEmpty || required.fieldNames.exists(_.equalsIgnoreCase("key"))
       val needValue = required.fieldNames.exists(_.equalsIgnoreCase("value"))
       SeqStream.openRange(input, header, part.start, part.end,
         decodeKey = needKey, decodeValue = needValue,
@@ -151,9 +154,15 @@ class SeqFileColumnarPartitionReader(part: SeqFilePartition, tableSchema: Struct
   private var done = blocks == null
 
   private var batch: ColumnarBatch = null
+  private val keyType = KeyFilters.keyType(tableSchema)
 
+  /** The next block; with key filters, its matching rows, and a block
+    * without any is skipped. */
   override def next(): Boolean = {
-    val b = nextBlock()
+    var b = nextBlock()
+    if (keyFilters.nonEmpty)
+      while (b != null && { b = KeyFilters.select(b, keyFilters, keyType); b.count == 0 })
+        b = nextBlock()
     if (b == null) return false
     batch = new ColumnarBatch(vectorsOf.map(_(b)), b.count)
     true

@@ -11,6 +11,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.core.seqfile.ZoneEntry
+
 /** Scan builder with column pruning — the connector-level optimization the
   * reference cannot do (it always decodes both columns, reference:
   * Parser.hs:109-110): a keys-only query never snappy-decompresses the value
@@ -29,6 +31,7 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
   private var required: StructType = tableSchema
   private var partFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var dataFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
+  private var keyFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var aggScan: Option[SeqFileAggScan] = None
 
   /** The table's files under the static partition filters, and their
@@ -41,6 +44,8 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
     .filter(PartitionFilters.keep(partFilters.toSeq, _))
   private lazy val sidecars = ZoneMapPruning.sidecars(files, hadoopConf)
 
+  private val keyType = KeyFilters.keyType(tableSchema)
+
   private val partCols: Set[String] =
     tableSchema.fieldNames.filterNot(n =>
       n.equalsIgnoreCase("key") || n.equalsIgnoreCase("value"))
@@ -49,16 +54,19 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
+  /** Partition and key/value filters plan the files and blocks a query
+    * reads. The key filters the reader evaluates exactly (KeyFilters) are
+    * consumed; every other filter stays residual, and Spark re-evaluates it
+    * on the rows read. */
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
     partFilters = filters.filter(f =>
       f.references.forall(r => partCols.contains(r.toLowerCase))
         && PartitionFilters.supported(f))
-    // key/value predicates drive the scan's zone-map block planning
     dataFilters = filters.filter(ZoneMapPruning.usableAny)
-    // ALL filters stay residual: Spark re-evaluates them on surviving rows,
-    // so correctness never depends on the pruning logic.
-    filters
+    val (exact, residual) = filters.partition(KeyFilters.exact(_, keyType))
+    keyFilters = exact
+    residual
   }
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
@@ -96,8 +104,8 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    // Spark only pushes aggregates below fully-consumed filters, and ours
-    // all stay residual — but keep the explicit guard for safety
+    // Spark pushes aggregates below fully consumed filters, which exact
+    // key filters are; the sidecars answer only unfiltered aggregates
     if (partFilters.nonEmpty || dataFilters.nonEmpty) return false
     SeqFileAggPushdown.specsFor(agg, tableSchema) match {
       case Some(specs) if specs.nonEmpty =>
@@ -122,19 +130,24 @@ class SeqFileScanBuilder(tableSchema: StructType, paths: Seq[String],
       v
     }
 
+  /** The sidecar aggregate, else a driver-local scan when the filters plan
+    * few enough blocks (SeqFileScan.local), else the batch scan. */
   override def build(): Scan = {
     val maxSplitBytes = positive("maxSplitBytes", _.toLong).getOrElse(128L * 1024 * 1024)
     val maxFilesPerTrigger = positive("maxFilesPerTrigger", _.toInt)
     val maxBytesPerTrigger = positive("maxBytesPerTrigger", _.toLong)
-    aggScan.getOrElse(
-      new SeqFileScan(tableSchema, required, paths, files, sidecars,
+    aggScan.getOrElse {
+      val scan = new SeqFileScan(tableSchema, required, paths, files, sidecars,
         maxSplitBytes = maxSplitBytes,
         mode = ReadMode.parse(Option(options.get("mode")).getOrElse("FAILFAST")),
         dataFilters = dataFilters.toSeq,
+        keyFilters = keyFilters.toSeq,
         topN = topN,
         maxFilesPerTrigger = maxFilesPerTrigger,
         maxBytesPerTrigger = maxBytesPerTrigger,
-        hadoopConf = hadoopConf))
+        hadoopConf = hadoopConf)
+      scan.local.getOrElse(scan)
+    }
   }
 }
 
@@ -203,6 +216,30 @@ object ReadMode {
 
 object SeqFileScan {
   private[seqfile] val log = org.slf4j.LoggerFactory.getLogger(classOf[SeqFileScan])
+
+  /** The bound of a driver-local scan: a point lookup plans one block, or
+    * none on a Bloom miss, and a short range one or two. */
+  val LocalMaxBlocks = 2
+  val LocalMaxBytes: Long = 1L << 20
+
+  /** A block plan: the partitions, the zone-map and sidecar counts, and the
+    * number and on-disk bytes of the blocks planned from sidecars;
+    * `wholeFiles` when some file is read whole instead. */
+  private[seqfile] final case class BlockPlan(parts: Seq[SeqFilePartition],
+      metrics: Array[CustomTaskMetric], blocks: Long, bytes: Long, wholeFiles: Boolean)
+
+  /** On-disk bytes of the blocks at `offsets` of a file of length `len`
+    * whose sidecar `entries` are in file order, as the writer records them:
+    * each block runs to the next entry's offset, the last to the end. */
+  private[seqfile] def blockBytes(offsets: Seq[Long], entries: Seq[ZoneEntry], len: Long): Long =
+    if (offsets.isEmpty) 0L
+    else {
+      val starts = entries.iterator.map(_.offset).toArray
+      offsets.map { o =>
+        val i = java.util.Arrays.binarySearch(starts, o)
+        (if (i >= 0 && i + 1 < starts.length) starts(i + 1) else len) - o
+      }.sum
+    }
 }
 
 /** The batch and micro-batch scan of a seqfile table. `files` is the
@@ -215,6 +252,7 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
                   maxSplitBytes: Long,
                   mode: String = ReadMode.FailFast,
                   dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
+                  keyFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
                   topN: Option[Seq[Seq[Long]]] = None,
                   maxFilesPerTrigger: Option[Int] = None,
                   maxBytesPerTrigger: Option[Long] = None,
@@ -301,7 +339,8 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
   override def readSchema(): StructType = required
 
   override def description(): String =
-    s"seqfile paths=${paths.mkString(",")} columns=${required.fieldNames.mkString(",")} mode=$mode"
+    s"seqfile paths=${paths.mkString(",")} columns=${required.fieldNames.mkString(",")} mode=$mode" +
+      (if (keyFilters.isEmpty) "" else s" keyFilters=${keyFilters.mkString("[", ", ", "]")}")
 
   override def toBatch: Batch = this
 
@@ -312,18 +351,34 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
 
   /** The plan for the current runtime filters: Spark and
     * `outputPartitioning()` each ask for it, and `filter()` clears it. */
-  private var plan: Option[(Array[InputPartition], Array[CustomTaskMetric])] = None
+  private var plan: Option[SeqFileScan.BlockPlan] = None
 
   private def planned = synchronized {
     if (plan.isEmpty) plan = Some(planBlocks())
     plan.get
   }
 
-  override def planInputPartitions(): Array[InputPartition] = planned._1
+  override def planInputPartitions(): Array[InputPartition] = planned.parts.toArray
 
   /** The zone-map counts of the plan, so `executedPlan` metrics carry them
     * although no task prunes. */
-  override def reportDriverMetrics(): Array[CustomTaskMetric] = planned._2
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = planned.metrics
+
+  /** This scan as a driver-local one (SeqFileLocalScan), when its filters
+    * plan at most `SeqFileScan.LocalMaxBlocks` blocks of at most
+    * `LocalMaxBytes` on-disk bytes, every file's from its sidecar. A scan
+    * without filters, with top-N, or in a mode that counts dropped blocks
+    * (PERMISSIVE, DROPMALFORMED; the counts are task metrics) stays a batch
+    * scan. */
+  private[seqfile] def local: Option[SeqFileLocalScan] =
+    if (mode != ReadMode.FailFast || topN.nonEmpty || dataFilters.isEmpty) None
+    else {
+      val p = planned
+      if (p.wholeFiles || p.blocks > SeqFileScan.LocalMaxBlocks ||
+          p.bytes > SeqFileScan.LocalMaxBytes) None
+      else Some(new SeqFileLocalScan(tableSchema, required, p.parts, keyFilters,
+        hadoopConf, p.metrics, s"${description()} local blocks=${p.blocks}"))
+    }
 
   /** The connector's one block planner. Per file, the blocks a query reads:
     * top-N's selection, or, with pushed or runtime key/value filters, the
@@ -333,38 +388,42 @@ class SeqFileScan(tableSchema: StructType, required: StructType,
     * blocks it owns, those whose offset lies in its [start, end) — the
     * reader's own split rule — and a split that owns none gets no partition,
     * so a Bloom miss runs no task. */
-  private def planBlocks(): (Array[InputPartition], Array[CustomTaskMetric]) = {
+  private def planBlocks(): SeqFileScan.BlockPlan = {
     val filters = dataFilters ++ runtimeDataFilters
     val used = if (topN.isEmpty && filters.isEmpty) None else Some(sidecars)
-    // per file: the offsets to read and the sidecar's block count
-    val blocks: Seq[Option[(Seq[Long], Int)]] = (used, topN) match {
+    // per file: the offsets to read and the sidecar's entries
+    val blocks: Seq[Option[(Seq[Long], Seq[ZoneEntry])]] = (used, topN) match {
       case (Some(scs), Some(selected)) =>
-        scs.byFile.zip(selected).map { case (sc, offs) => sc.map(s => (offs, s.entries.size)) }
+        scs.byFile.zip(selected).map { case (sc, offs) => sc.map(s => (offs, s.entries)) }
       case (Some(scs), None) =>
-        scs.byFile.map(_.map(s => (ZoneMapPruning.surviving(s, filters), s.entries.size)))
+        scs.byFile.map(_.map(s => (ZoneMapPruning.surviving(s, filters), s.entries)))
       case (None, _) => files.map(_ => None)
     }
-    var read, skipped = 0L
+    var read, skipped, bytes = 0L
+    var wholeFiles = false
     val parts = files.zip(blocks).filter(fb => PartitionFilters.keep(runtimeFilters, fb._1))
       .flatMap { case (pf, sel) =>
-        val splits = SeqFilePartition.split(pf.status.getPath.toString, pf.status.getLen,
+        val len = pf.status.getLen
+        val splits = SeqFilePartition.split(pf.status.getPath.toString, len,
           pf.partitionValues, maxSplitBytes)
-        sel.fold(splits) { case (offs, total) =>
+        if (sel.isEmpty) wholeFiles = true
+        sel.fold(splits) { case (offs, entries) =>
           read += offs.size
-          skipped += total - offs.size
+          skipped += entries.size - offs.size
+          bytes += SeqFileScan.blockBytes(offs, entries, len)
           splits.flatMap { s =>
             val owned = offs.filter(o => o >= s.start && o < s.end)
             if (owned.isEmpty) None else Some(s.copy(fixedOffsets = Some(owned)))
           }
         }
       }
-    (parts.toArray, SeqScanMetrics.driverValues(read, skipped,
-      used.fold(0L)(_.cached), used.fold(0L)(_.read)))
+    SeqFileScan.BlockPlan(parts, SeqScanMetrics.driverValues(read, skipped,
+      used.fold(0L)(_.cached), used.fold(0L)(_.read)), read, bytes, wholeFiles)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SeqFileReaderFactory(tableSchema, required, mode,
-      SeqFileHadoopConf.broadcast(hadoopConf))
+      SeqFileHadoopConf.broadcast(hadoopConf), keyFilters)
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
@@ -408,7 +467,8 @@ object SeqFilePartition {
   * reference's columnar RecordBlock model), which Spark's vectorized
   * operators and ColumnarToRow consume directly. */
 class SeqFileReaderFactory(tableSchema: StructType, required: StructType,
-                           mode: String, conf: Broadcast[SerializableConfiguration])
+                           mode: String, conf: Broadcast[SerializableConfiguration],
+                           keyFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
   extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = true
@@ -416,7 +476,7 @@ class SeqFileReaderFactory(tableSchema: StructType, required: StructType,
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new SeqFileColumnarPartitionReader(partition.asInstanceOf[SeqFilePartition],
-      tableSchema, required, mode, conf.value.value)
+      tableSchema, required, mode, conf.value.value, keyFilters)
 
   /** Row view over the columnar reader. Spark never calls it, since every
     * partition reads columnar. */

@@ -12,9 +12,10 @@ import graft.core.seqfile.{KeyBloom, WritableType, ZoneEntry, ZoneKey}
   * the offsets of the blocks that might match. `SeqFileScan` is the only
   * caller; tasks decode exactly the blocks it hands them. Everything here is
   * conservative — a filter shape or literal we can't map to the column's
-  * order returns "might match", and Spark re-evaluates all filters on
-  * surviving rows regardless — so pruning can only ever skip blocks that
-  * provably contain no match.
+  * order returns "might match" — so pruning can only ever skip blocks that
+  * provably contain no match. It must: the reader's exact key filters
+  * (KeyFilters) are not re-evaluated by Spark, so a wrongly skipped block
+  * would be a lost row. Comparisons follow Spark SQL's order (`sqlCmp`).
   */
 object ZoneMapPruning {
 
@@ -37,33 +38,58 @@ object ZoneMapPruning {
   /** Usable against either data column (what the scan builder collects). */
   def usableAny(f: Filter): Boolean = usable(f, "key") || usable(f, "value")
 
-  private def toKey(t: WritableType, v: Any): Option[ZoneKey] = (t, v) match {
-    case (WritableType.ShortW | WritableType.IntW | WritableType.LongW,
-          n: Number) => Some(ZoneKey.L(n.longValue()))
-    case (WritableType.FloatW | WritableType.DoubleW,
-          n: Number) => Some(ZoneKey.D(n.doubleValue()))
+  /** The filter literal `v` as a zone key of a `t` column, or None. For
+    * pruning, which is conservative, a number of any width maps onto a
+    * numeric column; with `exactType`, only a literal of the column's own
+    * Spark type does, as the reader's exact key filters (KeyFilters) need. */
+  private[seqfile] def toKey(t: WritableType, v: Any,
+                             exactType: Boolean = false): Option[ZoneKey] = (t, v) match {
+    case (WritableType.ShortW | WritableType.IntW | WritableType.LongW, n: Number)
+        if !exactType || ofType(t, n) => Some(ZoneKey.L(n.longValue()))
+    case (WritableType.FloatW | WritableType.DoubleW, n: Number)
+        if !exactType || ofType(t, n) => Some(ZoneKey.D(n.doubleValue()))
     case (WritableType.TextW, s: String) =>
       Some(ZoneKey.B(s.getBytes(StandardCharsets.UTF_8)))
     case (WritableType.BytesW, b: Array[Byte]) => Some(ZoneKey.B(b))
     case _ => None
   }
 
+  private def ofType(t: WritableType, n: Number): Boolean = (t, n) match {
+    case (WritableType.ShortW, _: java.lang.Short) | (WritableType.IntW, _: java.lang.Integer) |
+         (WritableType.LongW, _: java.lang.Long) | (WritableType.FloatW, _: java.lang.Float) |
+         (WritableType.DoubleW, _: java.lang.Double) => true
+    case _ => false
+  }
+
+  /** Spark SQL's order of two floating values (`SQLOrderingUtil`): -0.0
+    * equals 0.0, NaN equals NaN and is above every other value. Pruning and
+    * the reader's exact key filters both compare through it. */
+  def compareDoubles(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** Spark SQL's order of two zone keys: as `cmp`, except that floating
+    * -0.0 and 0.0 are equal. Zone bounds are kept in `cmp` order, which
+    * refines this one, so a block's bounds also bound its values here. */
+  def sqlCmp(a: ZoneKey, b: ZoneKey): Int = (a, b) match {
+    case (ZoneKey.D(x), ZoneKey.D(y)) => compareDoubles(x, y)
+    case _ => a.cmp(b)
+  }
+
   /** Could any value in [min, max] satisfy `f`? Conservative true. */
   def mightMatch(f: Filter, min: ZoneKey, max: ZoneKey,
                  t: WritableType): Boolean = {
     def k(v: Any): Option[ZoneKey] = toKey(t, v)
+    def within(x: ZoneKey) = sqlCmp(x, min) >= 0 && sqlCmp(x, max) <= 0
     f match {
-      case EqualTo(_, v) =>
-        k(v).forall(x => x.cmp(min) >= 0 && x.cmp(max) <= 0)
-      case EqualNullSafe(_, v) =>
-        k(v).forall(x => x.cmp(min) >= 0 && x.cmp(max) <= 0)
+      case EqualTo(_, v) => k(v).forall(within)
+      case EqualNullSafe(_, v) => k(v).forall(within)
       case In(_, vs) =>
         vs.isEmpty || // empty IN matches nothing, but stay conservative
-          vs.exists(v => k(v).forall(x => x.cmp(min) >= 0 && x.cmp(max) <= 0))
-      case GreaterThan(_, v) => k(v).forall(x => max.cmp(x) > 0)
-      case GreaterThanOrEqual(_, v) => k(v).forall(x => max.cmp(x) >= 0)
-      case LessThan(_, v) => k(v).forall(x => min.cmp(x) < 0)
-      case LessThanOrEqual(_, v) => k(v).forall(x => min.cmp(x) <= 0)
+          vs.exists(v => k(v).forall(within))
+      case GreaterThan(_, v) => k(v).forall(x => sqlCmp(max, x) > 0)
+      case GreaterThanOrEqual(_, v) => k(v).forall(x => sqlCmp(max, x) >= 0)
+      case LessThan(_, v) => k(v).forall(x => sqlCmp(min, x) < 0)
+      case LessThanOrEqual(_, v) => k(v).forall(x => sqlCmp(min, x) <= 0)
       case StringStartsWith(_, prefix) =>
         (min, max) match {
           case (ZoneKey.B(lo), ZoneKey.B(hi)) =>
@@ -94,8 +120,13 @@ object ZoneMapPruning {
     * conservative "maybe". This is what prunes point lookups on UNSORTED
     * data, where every block's [min, max] spans the domain. */
   def bloomMightMatch(f: Filter, bloom: KeyBloom, t: WritableType): Boolean = {
-    def hit(v: Any): Boolean =
-      toKey(t, v).forall(k => bloom.mightContain(KeyBloom.hashKey(k)))
+    // the filter hashes a floating zero by its sign, which SQL equality ignores
+    def hit(v: Any): Boolean = toKey(t, v).forall {
+      case ZoneKey.D(0.0) =>
+        bloom.mightContain(KeyBloom.hashKey(ZoneKey.D(0.0))) ||
+          bloom.mightContain(KeyBloom.hashKey(ZoneKey.D(-0.0)))
+      case k => bloom.mightContain(KeyBloom.hashKey(k))
+    }
     f match {
       case EqualTo(_, v) => hit(v)
       case EqualNullSafe(_, v) => hit(v)

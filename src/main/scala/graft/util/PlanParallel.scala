@@ -1,5 +1,10 @@
 package graft.util
 
+import java.util.concurrent.{Callable, ExecutorService, Executors, ThreadFactory}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import org.apache.spark.sql.graftbridge.ThreadContext
+
 /** Bounded-parallelism, order-preserving map for independent driver-side
   * I/O: the one way the engine overlaps driver round trips.
   *
@@ -13,11 +18,17 @@ package graft.util
   * operators overlap their bounded collects. These calls are independent
   * and I/O-bound, so a thread pool turns them into O(n / parallelism)
   * wall-clock with no behavior change (results come back in input order;
-  * an exception in any task propagates like the serial loop's would).
+  * the exception of the first failing element propagates like the serial
+  * loop's would).
   *
-  * Each call owns its pool and shuts it down on return, so a task that
-  * itself calls mapOrdered gets a fresh pool: nested calls cannot deadlock
-  * the way callers blocking on one shared fixed pool do.
+  * Every call shares one cached pool of daemon threads named
+  * `graft-plan-N`, so a lookup reuses the threads of the one before it
+  * instead of starting its own. A call runs at most `Parallelism` workers
+  * that take its elements in turn. The pool grows when all its threads are
+  * busy, so a task that itself calls mapOrdered gets threads of its own:
+  * nested calls cannot deadlock the way callers blocking on one shared
+  * fixed pool do. Each worker runs under its caller's Spark thread context
+  * (ThreadContext), as a thread started by the caller would.
   */
 private[graft] object PlanParallel {
 
@@ -27,24 +38,36 @@ private[graft] object PlanParallel {
   val Parallelism: Int =
     math.max(4, math.min(64, Runtime.getRuntime.availableProcessors * 2))
 
+  private val pool: ExecutorService = Executors.newCachedThreadPool(new ThreadFactory {
+    private val started = new AtomicInteger
+    override def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"graft-plan-${started.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  })
+
   def mapOrdered[A, B](xs: Seq[A])(f: A => B): Seq[B] =
     if (xs.lengthCompare(2) < 0) xs.map(f)
     else {
-      import scala.jdk.CollectionConverters._
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(Parallelism, xs.size))
-      try {
-        val tasks: java.util.List[java.util.concurrent.Callable[B]] =
-          xs.map(x => new java.util.concurrent.Callable[B] {
-            override def call(): B = f(x)
-          }: java.util.concurrent.Callable[B]).asJava
-        pool.invokeAll(tasks).asScala.toSeq.map { fut =>
-          try fut.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
+      val in = xs.toIndexedSeq
+      val out = new Array[Any](in.size)
+      val failures = new Array[Throwable](in.size)
+      val next = new AtomicInteger
+      val failed = new AtomicBoolean
+      val context = ThreadContext.capture()
+      // after a failure, workers take no new element; those taken finish,
+      // so every element before the first failing one has run
+      val worker: Callable[Unit] = () => context.run {
+        var i = next.getAndIncrement()
+        while (i < in.size && !failed.get) {
+          try out(i) = f(in(i))
+          catch { case t: Throwable => failures(i) = t; failed.set(true) }
+          i = next.getAndIncrement()
         }
-      } finally pool.shutdown()
+      }
+      Seq.fill(math.min(Parallelism, in.size))(pool.submit(worker)).foreach(_.get())
+      failures.find(_ != null).foreach(t => throw t)
+      out.toSeq.asInstanceOf[Seq[B]]
     }
 }

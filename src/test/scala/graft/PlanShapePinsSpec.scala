@@ -278,4 +278,38 @@ class PlanShapePinsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mass = ranks.agg(sum("rank")).head().getDouble(0)
     assert(math.abs(mass - 1.0) < 1e-9, s"rank mass $mass != 1")
   }
+
+  test("seqfile key lookups: hits and misses are bare local scans; " +
+    "ranges are filter-free batch scans that compile no code per key") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dir = java.nio.file.Files.createTempDirectory("pin-lookup")
+    try {
+      (0L until 40000L).map(i => (2 * i, s"v$i")).toDF("key", "value")
+        .repartitionByRange(2, col("key")).sortWithinPartitions("key")
+        .write.format("seqfile").option("blockSize", "16384").option("bloomKeys", "true")
+        .mode("overwrite").save(dir.toString)
+      val df = spark.read.format("seqfile").load(dir.toString)
+      for (k <- Seq(2 * 12345L, 2 * 12345L + 1)) {
+        val plan = df.filter(col("key") === k).queryExecution.executedPlan
+        assert(plan.isInstanceOf[LocalTableScanExec], s"lookup of $k:\n$plan")
+      }
+      // ranges of 10,000 keys span many 16 KiB blocks: over the local bound
+      def range(lo: Long) = df.filter(col("key") >= lo && col("key") < lo + 20000L)
+      val first = range(0L)
+      assert(first.collect().length === 10000)
+      val nodes = collectAll(first.queryExecution.executedPlan)
+      assert(nodes.exists(_.isInstanceOf[BatchScanExec]) && !nodes.exists(_.isInstanceOf[FilterExec]),
+        first.queryExecution.executedPlan)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(range(30000L).collect().length === 10000)
+      assert(range(50002L).collect().length === 10000)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles === 0L,
+        "a range with other keys compiled new code")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

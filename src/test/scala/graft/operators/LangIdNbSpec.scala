@@ -86,6 +86,25 @@ class LangIdNbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(w.length <= 4 * v)
   }
 
+  test("a trigram table over the driver cap keeps the weights distributed, with the same predictions") {
+    val spark2 = spark
+    import spark2.implicits._
+    val labeled = LangIdNb.fixture.toDF("lang", "s")
+    val docs = eval.zipWithIndex.map { case ((_, s), i) => (i.toLong, s) }.toDF("id", "text")
+    val local = LangIdNb.train(labeled, "lang", "s")
+    val capped = LangIdNb.trainWith(labeled, "lang", "s", alpha = 1.0, cap = 100)
+    assert(LangIdNb.onDriver(local.weights))
+    assert(!LangIdNb.onDriver(capped.weights), "over the cap the weights stay distributed")
+    assert(capped.weights.count() > 100)
+    assert(capped.weights.collect().map(_.toString).sorted.toSeq ===
+      local.weights.collect().map(_.toString).sorted.toSeq)
+    def preds(m: LangIdNb.Model) =
+      LangIdNb.predict(m, docs, "id", "text").as[(Long, String, Double)].collect().sortBy(_._1).toSeq
+    val (a, b) = (preds(local), preds(capped))
+    assert(a.map(r => (r._1, r._2)) === b.map(r => (r._1, r._2)))
+    a.zip(b).foreach { case (x, y) => assert(math.abs(x._3 - y._3) < 1e-3, s"$x vs $y") }
+  }
+
   test("dotted language labels: predictions match the undotted run") {
     val spark2 = spark
     import spark2.implicits._

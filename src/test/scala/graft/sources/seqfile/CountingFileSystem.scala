@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Pat
 
 /** The local filesystem under a scheme of its own, `countfs:`, counting the
   * `globStatus` and `open` calls made on each path (all of them, and those
-  * made outside Spark tasks), so a spec can see how many times a query
+  * made outside Spark tasks, apart from the block reader's), so a spec can see how many times a query
   * lists a table or reads a file. Its raw filesystem
   * (CountingRawFileSystem) counts the raw opens that the checksum layer
   * makes, one of the data file and one of its `.crc` file per checker.
@@ -25,7 +25,9 @@ class CountingFileSystem extends LocalFileSystem(new CountingRawFileSystem) {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     CountingFileSystem.bump(CountingFileSystem.opens, f)
     if (org.apache.spark.TaskContext.get() == null)
-      CountingFileSystem.bump(CountingFileSystem.driverOpens, f)
+      CountingFileSystem.bump(
+        if (CountingFileSystem.inBlockReader) CountingFileSystem.driverBlockReads
+        else CountingFileSystem.driverOpens, f)
     super.open(f, bufferSize)
   }
 }
@@ -36,6 +38,7 @@ object CountingFileSystem {
   private val globs = new ConcurrentHashMap[String, AtomicInteger]
   private val opens = new ConcurrentHashMap[String, AtomicInteger]
   private val driverOpens = new ConcurrentHashMap[String, AtomicInteger]
+  private val driverBlockReads = new ConcurrentHashMap[String, AtomicInteger]
   private val rawOpens = new ConcurrentHashMap[String, AtomicInteger]
 
   private def bump(calls: ConcurrentHashMap[String, AtomicInteger], p: Path): Unit =
@@ -52,8 +55,18 @@ object CountingFileSystem {
   def openCalls(path: String): Int = count(opens, path)
 
   /** `open` calls on `path` made outside any Spark task (on the driver, in
-    * local mode) since the last reset. */
+    * local mode) and outside the block reader since the last reset: the
+    * driver's planning reads of headers and sidecars. */
   def driverOpenCalls(path: String): Int = count(driverOpens, path)
+
+  /** `open` calls on `path` made by the block reader outside any Spark task
+    * (a local scan's reads on the driver) since the last reset. */
+  def driverBlockReadCalls(path: String): Int = count(driverBlockReads, path)
+
+  private def inBlockReader: Boolean = {
+    val reader = classOf[SeqFileColumnarPartitionReader].getName
+    Thread.currentThread.getStackTrace.exists(_.getClassName == reader)
+  }
 
   /** Raw `open` calls on `path` (a scheme-less local path, data or `.crc`
     * file) since the last reset. */
@@ -61,7 +74,9 @@ object CountingFileSystem {
 
   private[seqfile] def bumpRawOpen(p: Path): Unit = bump(rawOpens, p)
 
-  def reset(): Unit = { globs.clear(); opens.clear(); driverOpens.clear(); rawOpens.clear() }
+  def reset(): Unit = {
+    Seq(globs, opens, driverOpens, driverBlockReads, rawOpens).foreach(_.clear())
+  }
 
   /** Register the scheme on `conf`, with the FileSystem cache off. */
   def register(conf: Configuration): Unit = {

@@ -194,14 +194,16 @@ class SeqFilePlanningSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ScanPlans.scanMetric(miss, SeqScanMetrics.ZoneBlocksRead) === 0L)
     assert(ScanPlans.blocksSkipped(miss) > 10)
 
-    // a hit runs one task, for the one split that owns its block
+    // a hit plans one split, the one that owns its block, and reads it on
+    // the driver (SeqFileLocalScan): no task
     val key = 17L * 2654435761L % N * 2
     var hit: DataFrame = null
     val hitTasks = tasksOf {
       hit = df.filter(col("key") === key)
       assert(hit.collect().map(_.getLong(0)).toSeq === Seq(key))
     }
-    assert(hitTasks === 1)
+    assert(hitTasks === 0)
+    assert(ScanPlans.partitions(hit).size === 1)
     assert(ScanPlans.scanMetric(hit, SeqScanMetrics.ZoneBlocksRead) === 1L)
   }
 }

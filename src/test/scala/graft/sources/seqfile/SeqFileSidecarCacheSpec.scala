@@ -96,10 +96,15 @@ class SeqFileSidecarCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
       val q = df.filter(col("key").between(9000L, 9100L))
       (q, q.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted)
     }
+    // the range plans one block of part-0, which the driver reads itself
+    // (SeqFileLocalScan) in each run
+    def driverBlockReads(): Seq[Int] = data.map(d => CountingFileSystem.driverBlockReadCalls(d.toString))
     val (first, firstRows) = run()
     assert(driverOpens() === Seq(1, 1, 1, 1), "a header and a sidecar per file")
+    assert(driverBlockReads() === Seq(1, 0))
     val (second, secondRows) = run()
     assert(driverOpens() === Seq(0, 0, 0, 0))
+    assert(driverBlockReads() === Seq(1, 0))
 
     assert(firstRows === unpruned(dir, 9000L, 9100L))
     assert(secondRows === firstRows)

@@ -310,7 +310,8 @@ class SeqZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val allocated = mx.getThreadAllocatedBytes(tid) - before
     val ratio = allocated.toDouble / sidecarBytes
     info(f"allocated $allocated bytes for a $sidecarBytes-byte sidecar: ratio $ratio%.2f")
-    assert(ratio < 4.0, f"allocated $allocated bytes, $ratio%.2f× the sidecar")
+    // 3.56 when Bloom bits went through a byte[] copy; 2.66 decoded straight into words
+    assert(ratio < 3.0, f"allocated $allocated bytes, $ratio%.2f× the sidecar")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 }
